@@ -1,7 +1,6 @@
 package graft.algos
 
 import graft.{ConvergenceStats, LabelPropagationConfig}
-import graft.checkpoint.Checkpointer
 import graft.graph.LinkGraph
 import org.apache.spark.sql.graft.StatsReset
 import org.apache.spark.sql.DataFrame
@@ -38,15 +37,7 @@ object LabelPropagation {
       config: LabelPropagationConfig = LabelPropagationConfig(),
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 10,
-      broadcastVertices: Long = 5000000L,
-      // LP's own env knob, deliberately NOT the shared GRAFT_SALT:
-      // that one is PageRank's documented override, and the BASELINE.md
-      // measurement shows force-salting LP's voter gather is a strict
-      // regression (the per-round voter exchange costs more than the hub
-      // straggler it removes) — a PR-tuning env var must not silently
-      // engage it here
-      gatherSalt: Int = sys.env.getOrElse("GRAFT_LP_SALT", "-1").toInt)
-      : Result = {
+      broadcastVertices: Long = 5000000L): Result = {
     val spark = graph.edges.sparkSession
     import spark.implicits._
 
@@ -89,9 +80,13 @@ object LabelPropagation {
       undAll.unpersist()
       throw new IllegalArgumentException("LP on empty graph")
     }
-    val doBroadcast = n <= broadcastVertices
+    // labels at iteration k do not depend on maxIterations or the
+    // earlyStop scheduling flag
+    val steps = new Supersteps(spark, n, broadcastVertices, checkpointDir,
+      checkpointEvery, "label_propagation",
+      s"label_propagation|n=$n|m=${graph.edgeCount}")
     val undCache =
-      if (doBroadcast) undAll
+      if (steps.broadcastMode) undAll
       else {
         val bySrc = undAll.repartition(graph.numPartitions, $"src")
           .persist(StorageLevel.MEMORY_AND_DISK)
@@ -102,47 +97,13 @@ object LabelPropagation {
     // self-loop rows stay in the CACHE (they carry the max id); the vote
     // scan filters them per round, same votes as the old pre-filtered build
     val und = undCache.filter($"src" =!= $"dst")
-    // Hub salting for the shuffle-mode gather (round-4 verdict #6): LP
-    // scans ITS OWN undirected multigraph — a symmetric view where a Zipf
-    // hub's row count is its full (in+out) neighborhood — through the same
-    // virtual-id split PageRank uses (LinkGraph.saltBySrc). MEASURED
-    // DECISION: AUTO DECLINES for LP. On the 29.5M-edge follower-hub graph
-    // (1.5M-fan hub) at local[32] — the exact shape where PageRank's salt
-    // wins 1.6x — salted LP measured 21.6-23.4 s / 443-478 s CPU vs
-    // 19.4-20.6 s / 348-369 s CPU unsalted (interleaved best-of-3,
-    // BASELINE.md round 5): unlike PageRank's one-column senders, LP's
-    // voters ride a per-round (vid, label) exchange whose explode +
-    // re-shuffle costs more than the hub straggler it removes, at every
-    // salt factor the rule would pick. Explicit gatherSalt > 1 keeps the
-    // lever available for wider hubs than we can synthesize here.
-    val salt = if (doBroadcast || gatherSalt < 1) 1 else gatherSalt
-    val (undG, hubs) =
-      if (salt <= 1) (und, null)
-      else LinkGraph.saltBySrc(und, graph.numPartitions, salt)
-    if (salt > 1) {
-      // every per-round gather reads only the salted copy — materialize
-      // it (forcing `hubs` too) and release the unsalted multigraph, or
-      // the job's largest table stays double-pinned for the whole run
-      undG.count()
-      undCache.unpersist(); ()
-    }
-    if (sys.env.contains("GRAFT_LP_DEBUG"))
-      System.err.println(s"[lp] broadcast=$doBroadcast salt=$salt")
-    // broadcast when the vertex state fits; otherwise hint shuffle-hash so
-    // the planner builds the (small) state side and NEVER sort-merges the
-    // cached edge side (an SMJ would re-sort the big table every round)
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (doBroadcast) broadcast(df) else df.hint("shuffle_hash")
+    // No hub salting here, unlike PageRank: LP's voters ride a per-round
+    // (vid, label) exchange whose explode + re-shuffle measured slower than
+    // the hub straggler it removes at every salt factor tried (BASELINE.md
+    // round 5, the 29.5M-edge follower-hub graph at local[32]).
 
-    // state-determining facts only: labels at iteration k do not depend on
-    // maxIterations or the earlyStop scheduling flag.
-    val fingerprint = checkpointDir.map(_ =>
-      s"label_propagation|n=$n|m=${graph.edgeCount}").getOrElse("")
-    val resume = checkpointDir
-      .flatMap(Checkpointer.latest(spark, _, fingerprint))
-      .filter(_._1.algorithm == "label_propagation")
-    var iteration = resume.map(_._1.iteration).getOrElse(0)
-    var labels: DataFrame = resume.map(_._2)
+    var iteration = steps.startIteration
+    var labels: DataFrame = steps.resume.map(_._2)
       .getOrElse(graph.vertices.select($"id", $"id".as("label")))
       .transform(StatsReset.checkpointNoStats)
 
@@ -150,31 +111,17 @@ object LabelPropagation {
     while (changed > 0 && iteration < config.maxIterations) {
       // mode of neighbor labels; tie -> smallest label. argmax encoded as
       // max(struct(cnt, -label)): higher count wins, then smaller label.
-      // salted gathers replicate hub label rows to their virtual src ids
-      // (voters stays ~V rows: only hubs replicate) and join on the
-      // single-long vsrc against the vsrc-partitioned salted table.
-      val counts =
-        if (salt <= 1)
-          und
-            .join(maybeBroadcast(labels), und("src") === labels("id"))
-            .groupBy(und("dst").as("id"), $"label")
-            .agg(sum(und("cnt")).cast("long").as("cnt"))
-        else {
-          val voters = LinkGraph
-            .explodeToVirtual(labels, hubs, salt)
-            .select($"vid", $"label")
-          undG
-            .join(voters.hint("shuffle_hash"), undG("vsrc") === voters("vid"))
-            .groupBy(undG("dst").as("id"), $"label")
-            .agg(sum(undG("cnt")).cast("long").as("cnt"))
-        }
+      val counts = und
+        .join(steps.side(labels), und("src") === labels("id"))
+        .groupBy(und("dst").as("id"), $"label")
+        .agg(sum(und("cnt")).cast("long").as("cnt"))
       val mode = counts
         .groupBy($"id")
         .agg(max(struct($"cnt", (-$"label").as("neg_label"))).as("m"))
         .select($"id", (-$"m.neg_label").as("new_label"))
       if (config.earlyStop) {
         val next = labels
-          .join(maybeBroadcast(mode), Seq("id"), "left")
+          .join(steps.side(mode), Seq("id"), "left")
           .select($"id", coalesce($"new_label", $"label").as("label"),
             // carried flag: convergence check = filter over materialized
             // state, not a second vertex-vertex join per round.
@@ -185,7 +132,7 @@ object LabelPropagation {
       } else {
         // fixed-iteration mode (the PageRank pattern, round-1 verdict #6):
         // no changed-count job, supersteps chain LAZILY into fused Catalyst
-        // jobs; truncate lineage every few rounds to keep planning cheap.
+        // jobs and the lineage is cut by the shared policy (Supersteps).
         // A labeling that reaches its fixed point inside the budget is
         // unchanged by the extra rounds, so results match earlyStop runs.
         // State must appear ONCE per plan level (else the plan doubles per
@@ -194,33 +141,26 @@ object LabelPropagation {
         // (= their own id) forever — next state rebuilds from the constant
         // vertex universe instead of the previous labels table.
         val next = graph.vertices
-          .join(maybeBroadcast(mode), Seq("id"), "left")
+          .join(steps.side(mode), Seq("id"), "left")
           .select($"id", coalesce($"new_label", $"id").as("label"))
-        // chaining is linear only in shuffle mode (one fused job, exchange
-        // reuse); in broadcast mode nested broadcast builds re-execute
-        // their subtree with no cross-build reuse — measured ~2^k per
-        // action on the same round shape (Wcc.scala batch policy /
-        // BASELINE.md). The broadcast-mode round is still "fused" in the
-        // round-1 #6 sense: no changed-count job, just the one
-        // materialization.
+        // The last round materializes too, unlike PageRank's: the vote
+        // cache is private to this call and released below, so a lazy
+        // result would recompute it from the raw edges.
         labels =
-          if (doBroadcast || (iteration + 1) % 5 == 0 ||
+          if (steps.cut(iteration + 1, config.maxIterations) ||
               iteration + 1 == config.maxIterations)
             next.transform(StatsReset.checkpointNoStats)
           else next
       }
       iteration += 1
 
-      if (checkpointDir.isDefined && changed > 0
-          && iteration < config.maxIterations
-          && iteration % checkpointEvery == 0) {
-        labels = Checkpointer.write(checkpointDir.get, "label_propagation",
-          iteration, changed.toDouble, labels, fingerprint).transform(StatsReset.checkpointNoStats)
-      }
+      if (steps.due(iteration,
+          over = changed == 0 || iteration >= config.maxIterations))
+        labels = steps.write(iteration, changed.toDouble, labels)
+          .transform(StatsReset.checkpointNoStats)
     }
 
-    if (salt > 1) { undG.unpersist(); hubs.unpersist(); () }
-    else undCache.unpersist()
+    undCache.unpersist()
     Result(labels,
       ConvergenceStats(iteration,
         if (config.earlyStop) changed.toDouble else Double.NaN,

@@ -1,7 +1,6 @@
 package graft.algos
 
 import graft.{ConvergenceStats, PageRankConfig}
-import graft.checkpoint.Checkpointer
 import graft.graph.LinkGraph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -50,10 +49,8 @@ import org.apache.spark.storage.StorageLevel
   *  - the convergence error is a separate tiny job over two cached states;
   *    in fixed-iteration mode (tolerance <= 0) it is skipped entirely and
   *    supersteps chain lazily into one fused Catalyst job.
-  * Eager localCheckpoint truncates plan lineage per superstep
-  * (SURVEY.md §7.4-5); every `checkpointEvery` iterations the state is also
-  * durably written + re-read via Checkpointer for crash-resume with
-  * per-partition lineage.
+  * Placement, lineage cuts (eager localCheckpoint, SURVEY.md §7.4-5),
+  * resume and the durable checkpoint cadence follow [[Supersteps]].
   */
 object PageRank {
 
@@ -98,7 +95,7 @@ object PageRank {
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 5,
       broadcastVertices: Long = 5000000L,
-      gatherSalt: Int = sys.env.getOrElse("GRAFT_SALT", "-1").toInt): Result = {
+      gatherSalt: Int = -1): Result = {
     val spark = graph.edges.sparkSession
     import spark.implicits._
 
@@ -108,12 +105,17 @@ object PageRank {
     val initScore = 1.0 / n
     val baseScore = (1.0 - d) / n
     val trackError = config.tolerance > 0.0
+    // The fingerprint carries only STATE-determining facts (damping,
+    // graph): a checkpoint at iteration k is valid for any
+    // maxIterations/tolerance (those only decide when to stop).
+    val steps = new Supersteps(spark, n, broadcastVertices, checkpointDir,
+      checkpointEvery, "page_rank",
+      s"page_rank|d=$d|n=$n|m=${graph.edgeCount}")
 
     // The gather runs on the compressed multigraph (one row per distinct
     // (src,dst) with multiplicity): PageRank is linear in multiplicity, so
     // contribution = cnt * out_score gives identical sums over an 8x
     // smaller scan (measured on the Zipf bench graph).
-    val doBroadcast = graph.nodeCount <= broadcastVertices
     // broadcast mode: row-balanced cache (hub-skew-proof, state broadcast).
     // shuffle mode: (src, salt)-hash-partitioned cache — the senders table
     // shuffles by (src, salt) and meets it with no exchange on the big
@@ -125,7 +127,7 @@ object PageRank {
     // partitioning being always-on rather than a flag). The histogram costs
     // one aggregation over the multigraph cache the gather scans anyway.
     val salt =
-      if (doBroadcast) 1
+      if (steps.broadcastMode) 1
       else if (gatherSalt >= 1) gatherSalt
       else {
         val cores = spark.sparkContext.defaultParallelism
@@ -136,14 +138,11 @@ object PageRank {
           autoSalt(maxRows, totalRows, graph.numPartitions, cores)
         }
       }
-    if (sys.env.contains("GRAFT_PR_DEBUG"))
-      System.err.println(s"[pr] broadcast=$doBroadcast salt=$salt " +
-        s"cores=${spark.sparkContext.defaultParallelism}")
     // salt == 1 keeps the single-column join key: the composite (src, salt)
     // probe measured ~+35% CPU across the whole gather scan, so salting
     // only engages for graphs whose hub partitions actually dominate.
     val (edges, hubs) =
-      if (doBroadcast) (graph.multiplicities, null)
+      if (steps.broadcastMode) (graph.multiplicities, null)
       else if (salt <= 1) (graph.multiplicitiesBySrc, null)
       else graph.multiplicitiesSalted(salt)
     // Dense (id, out_deg) over the full vertex universe — built once,
@@ -162,24 +161,11 @@ object PageRank {
       .persist(StorageLevel.MEMORY_AND_DISK)
     degrees.count()
 
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (doBroadcast) broadcast(df) else df
-
-    // Stale-checkpoint guard, computed only when checkpointing is on
-    // (edgeCount is a job). The fingerprint carries only STATE-determining
-    // facts (damping, graph): a checkpoint at iteration k is valid for any
-    // maxIterations/tolerance (those only decide when to stop), but never
-    // for a different graph or damping factor.
-    val fingerprint = checkpointDir.map(_ =>
-      s"page_rank|d=$d|n=$n|m=${graph.edgeCount}").getOrElse("")
-    val resume = checkpointDir
-      .flatMap(Checkpointer.latest(spark, _, fingerprint))
-      .filter(_._1.algorithm == "page_rank")
-    var iteration = resume.map(_._1.iteration).getOrElse(0)
-    // state: (id, score, out_deg). localCheckpoint (eager) per superstep
-    // truncates the logical plan — persist alone caches data but lineage
-    // still nests per iteration (SURVEY.md §7.4-5).
-    var state: DataFrame = resume
+    var iteration = steps.startIteration
+    // state: (id, score, out_deg). localCheckpoint (eager) truncates the
+    // logical plan — persist alone caches data but lineage still nests per
+    // iteration (SURVEY.md §7.4-5).
+    var state: DataFrame = steps.resume
       .map(_._2.select($"id", $"score", $"out_deg"))
       .getOrElse(degrees.select($"id", lit(initScore).as("score"),
         $"out_deg"))
@@ -191,33 +177,17 @@ object PageRank {
     while (!converged && iteration < config.maxIterations) {
       val senders0 = state.filter($"out_deg" > 0)
         .select($"id", ($"score" / $"out_deg").as("out_score"))
-      // broadcast mode: one serial driver-side broadcast build per
-      // superstep (right when state << executor memory). shuffle mode:
-      // senders explodes x salt and shuffles by (src, salt) in parallel,
-      // meeting the pre-partitioned cached edges with no exchange on the
-      // big side — the Amdahl-free path for large vertex sets.
-      // hub state rows replicate to their virtual src ids (vid < 0);
-      // everything else ships one row with vid = id. The join key stays a
-      // single long either way.
-      val senders =
-        if (doBroadcast || salt <= 1) senders0
-        else senders0
-          .join(broadcast(hubs.withColumnRenamed("src", "id")), Seq("id"),
-            "left")
-          .withColumn("k", explode_outer(
-            sequence(lit(0), coalesce($"nsalt", lit(1)) - 1)))
-          .select(
-            when($"nsalt".isNotNull, -($"id" * salt + $"k" + 1))
-              .otherwise($"id").as("vid"),
-            $"out_score")
-      val joinKey =
-        if (doBroadcast || salt <= 1) edges("src") === senders("id")
-        else edges("vsrc") === senders("vid")
+      // hub state rows replicate to their virtual src ids; everything else
+      // ships one row with vid = id. The join key stays a single long.
+      val (senders, joinKey) =
+        if (salt <= 1) (senders0, edges("src") === senders0("id"))
+        else {
+          val v = LinkGraph.explodeToVirtual(senders0, hubs, salt)
+            .select($"vid", $"out_score")
+          (v, edges("vsrc") === v("vid"))
+        }
       val gathered = edges
-        .join(
-          if (doBroadcast) broadcast(senders)
-          else senders.hint("shuffle_hash"),
-          joinKey)
+        .join(steps.side(senders), joinKey)
         .groupBy(edges("dst").as("id"))
         .agg(sum($"cnt" * $"out_score").as("in_sum"))
       // scatter: both sides arrive hash-partitioned by id (cached degrees,
@@ -229,6 +199,7 @@ object PageRank {
           (lit(baseScore) + lit(d) * coalesce($"in_sum", lit(0.0)))
             .as("score"),
           $"out_deg")
+      iteration += 1
 
       if (trackError) {
         // convergence mode: the error action materializes every superstep
@@ -239,30 +210,19 @@ object PageRank {
         converged = error < config.tolerance
         state = mat
       } else {
-        // fixed-iteration mode: chain supersteps LAZILY (state appears once
-        // per level -> linear plan growth) and let Catalyst fuse the whole
-        // sequence into one job; truncate lineage every few rounds to keep
-        // planning cheap. This removes all per-superstep job/materialization
-        // overhead — the difference between anti-scaling and scaling on the
-        // throughput bench. SHUFFLE MODE ONLY: in broadcast mode each
-        // nested broadcast(senders) build re-executes its lazy subtree with
-        // no cross-build reuse (~2^k per action — the Wcc/LP batch policy,
-        // BASELINE.md), so broadcast-mode supersteps materialize one per
-        // action like LP's fused mode does.
+        // fixed-iteration mode: no error job; supersteps chain lazily into
+        // fused Catalyst jobs (state appears once per level -> linear plan
+        // growth) and the lineage is cut by the shared policy.
         state =
-          if (doBroadcast || (iteration + 1) % 5 == 0)
+          if (steps.cut(iteration, config.maxIterations))
             next.localCheckpoint()
           else next
       }
-      iteration += 1
 
-      if (checkpointDir.isDefined && !converged
-          && iteration < config.maxIterations
-          && iteration % checkpointEvery == 0) {
-        state = Checkpointer.write(checkpointDir.get, "page_rank",
-          iteration, if (error.isNaN) -1.0 else error, state, fingerprint)
-          .localCheckpoint()
-      }
+      if (steps.due(iteration,
+          over = converged || iteration >= config.maxIterations))
+        state = steps.write(iteration, if (error.isNaN) -1.0 else error,
+          state).localCheckpoint()
     }
 
     Result(state.select($"id", $"score"),

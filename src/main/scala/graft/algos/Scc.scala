@@ -30,9 +30,9 @@ import org.apache.spark.sql.functions._
   *     It doubles progress wherever labels form decreasing chains; when
   *     ids run against edge direction it degrades to one hop per round, so
   *     the bound is O(diameter) rounds (the standard Pregel-SCC bound —
-  *     shallow on real link graphs). Rounds chain lazily in batches of 4
-  *     per Spark action, so the per-round cost is a quarter of a
-  *     changed-count + localCheckpoint cycle.
+  *     shallow on real link graphs). In shuffle mode rounds chain lazily
+  *     in batches of 4 per Spark action ([[Supersteps]]), so the per-round
+  *     cost is a quarter of a changed-count + localCheckpoint cycle.
   *  3. BACKWARD labels: the same propagation along reversed edges,
   *     bwd(v) = min id over {u : v reaches u} ∪ {v}.
   *  4. CLAIM: fwd(v) = bwd(v) = r  <=>  v and r are mutually reachable and
@@ -74,78 +74,64 @@ object Scc {
       .transform(StatsReset.checkpointNoStats)
     val n = graph.nodeCountFrom(raw)
     require(n > 0, "SCC on empty graph")
-    // one count over the checkpointed RDD (cheap); drives the batch policy
-    val rawEdgeCount = raw.count()
-    val debug = sys.env.get("GRAFT_SCC_DEBUG").contains("1")
-    val doBroadcast = n <= broadcastVertices
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (doBroadcast) broadcast(df) else df.hint("shuffle_hash")
+    // Checkpoint state = one total labeling DataFrame: resolved vertices
+    // carry their final scc label, still-active vertices the sentinel -1.
+    // Written once per `checkpointEvery` outer rounds (outer rounds are
+    // few and expensive — the natural durability granularity); resume
+    // splits the latest state back into resolved/active and restricts the
+    // edge set (north rule §4.8).
+    val steps = new Supersteps(spark, n, broadcastVertices, checkpointDir,
+      checkpointEvery, "scc", s"scc|n=$n|m=${raw.count()}")
 
     // Min-label propagation along `edges` (label flows src -> dst) to the
     // fixed point lbl(v) = min id over in-reachers of v, with pointer
-    // jumping, `batch` lazily-chained rounds per action (scaladoc step 2).
+    // jumping, `steps.chain` lazily-chained rounds per action (scaladoc
+    // step 2).
     // Returns (labels, reachedFixedPoint): the claim step is only sound at
     // the fixed point — claiming from capped labels can split an SCC whose
     // ids run against edge direction across different roots (so callers
     // must NOT claim when reachedFixedPoint is false).
     def propagateMin(verts: DataFrame,
         edges: DataFrame): (DataFrame, Boolean) = {
-      // Lazy chaining pays ONLY in shuffle mode (one fused job, exchanges
-      // reused); in broadcast mode each nested broadcast build re-executes
-      // its subtree with no cross-build reuse — ~2^batch per action, the
-      // same pathology WCC measured (Wcc.scala batch policy). Round 3
-      // exempted "small" (<= 4M-edge) broadcast sets from that rule; round
-      // 4 re-measured and the exemption was wrong at every scale tried
-      // (sf0.1 events: 7.8 s at batch=1 vs 19.6 s at batch=4 end-to-end).
-      val batch = sys.env.get("GRAFT_SCC_BATCH").map(_.toInt)
-        .orElse(Some(config.propagationBatch).filter(_ > 0))
-        .getOrElse(if (!doBroadcast) 4 else 1)
       // trivial lineage (projection over the checkpointed active set) —
       // no checkpoint needed before the first batch materializes
       var lbl = verts.select($"id", $"id".as("lbl"))
       var changed = Long.MaxValue
       var rounds = 0
-      var batches = 0
       while (changed > 0 && rounds < config.maxPropagationRounds) {
         // the budget counts ROUNDS (min-label hops), not batches — so the
         // mode-dependent batch size (4 in shuffle, 1 in broadcast) cannot
         // silently scale the effective hop budget 4x between modes
         // (round-4 advice: the batch default dropping 4 -> 1 shrank the
         // broadcast-mode budget from 800 to 200 hops unannounced)
-        val thisBatch = math.min(batch, config.maxPropagationRounds - rounds)
+        val thisBatch =
+          math.min(steps.chain, config.maxPropagationRounds - rounds)
         val start = lbl.select($"id", $"lbl".as("prev"))
         var cur = lbl
         for (i <- 0 until thisBatch) {
           val nbrMin = edges
-            .join(maybeBroadcast(cur), edges("src") === cur("id"))
+            .join(steps.side(cur), edges("src") === cur("id"))
             .groupBy(edges("dst").as("id"))
             .agg(min($"lbl").as("nbr_min"))
           val prop = cur
-            .join(maybeBroadcast(nbrMin), Seq("id"), "left")
+            .join(steps.side(nbrMin), Seq("id"), "left")
             .select($"id",
               least($"lbl", coalesce($"nbr_min", $"lbl")).as("lbl"))
           val a = s"a$i" // unique alias per unrolled round (nested scopes)
           cur = prop.as(a)
-            .join(maybeBroadcast(
+            .join(steps.side(
               prop.select($"id".as("jid"), $"lbl".as("jlbl"))),
               col(s"$a.lbl") === $"jid", "left")
             .select(col(s"$a.id").as("id"),
               least(col(s"$a.lbl"), coalesce($"jlbl", col(s"$a.lbl")))
                 .as("lbl"))
         }
-        val stepped = cur.join(maybeBroadcast(start), Seq("id"))
+        val stepped = cur.join(steps.side(start), Seq("id"))
           .select($"id", $"lbl", ($"lbl" =!= $"prev").as("chg"))
           .transform(StatsReset.checkpointNoStats)
         changed = stepped.filter($"chg").count()
         lbl = stepped.select($"id", $"lbl")
         rounds += thisBatch
-        batches += 1
-        if (debug) {
-          val sz = lbl.queryExecution.optimizedPlan.stats.sizeInBytes
-          println(s"[scc] propagate batch=$batches changed=$changed " +
-            s"t=${System.nanoTime() / 1000000000L % 10000} " +
-            s"statsDigits=${sz.toString.length}")
-        }
       }
       (lbl, changed == 0)
     }
@@ -168,9 +154,9 @@ object Scc {
     // propagation's gather (broadcast mode is partitioning-agnostic).
     def restrict(edges: DataFrame, verts: DataFrame): DataFrame =
       edges
-        .join(maybeBroadcast(verts.select($"id".as("dst"))),
+        .join(steps.side(verts.select($"id".as("dst"))),
           Seq("dst"), "left_semi")
-        .join(maybeBroadcast(verts.select($"id".as("src"))),
+        .join(steps.side(verts.select($"id".as("src"))),
           Seq("src"), "left_semi")
         .select($"src", $"dst")
         .transform(StatsReset.checkpointNoStats)
@@ -178,18 +164,7 @@ object Scc {
     val resolved = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var iteration = 0
 
-    // Checkpoint state = one total labeling DataFrame: resolved vertices
-    // carry their final scc label, still-active vertices the sentinel -1.
-    // Written once per `checkpointEvery` outer rounds (outer rounds are
-    // few and expensive — the natural durability granularity); resume
-    // splits the latest state back into resolved/active and restricts the
-    // edge set (north rule §4.8; same fingerprint guard as PR/WCC/LP).
-    val fingerprint = checkpointDir.map(_ =>
-      s"scc|n=$n|m=$rawEdgeCount").getOrElse("")
-    val resume = checkpointDir
-      .flatMap(graft.checkpoint.Checkpointer.latest(spark, _, fingerprint))
-      .filter(_._1.algorithm == "scc")
-    resume.foreach { case (meta, st) =>
+    steps.resume.foreach { case (meta, st) =>
       iteration = meta.iteration
       resolved += st.filter($"scc" >= 0).select($"id", $"scc")
       active = st.filter($"scc" === -1).select($"id")
@@ -212,8 +187,6 @@ object Scc {
             ($"has_out".isNotNull && $"has_in".isNotNull).as("keep"))
           .transform(StatsReset.checkpointNoStats)
         val tCount = flagged.filter(!$"keep").count()
-        if (debug) println(s"[scc] outer=$iteration trim=$tCount " +
-          s"remaining=$remaining")
         if (tCount == 0) trimming = false
         else {
           resolved += flagged.filter(!$"keep")
@@ -244,8 +217,6 @@ object Scc {
           // re-running next outer round would repeat the identical capped
           // propagation, so abort instead — the fail-safe below labels the
           // unresolved actives and reports converged=false honestly.
-          if (debug) println(s"[scc] outer=$iteration propagation CAPPED " +
-            s"(fwd=$fwdFixed bwd=$bwdFixed) — aborting without claims")
           iteration = config.maxIterations
         } else {
           val claimed = fwd
@@ -254,8 +225,6 @@ object Scc {
             .select($"id", $"lbl".as("scc"))
             .transform(StatsReset.checkpointNoStats)
           val cCount = claimed.count()
-          if (debug) println(s"[scc] outer=$iteration claimed=$cCount " +
-            s"remaining=${remaining - cCount}")
           resolved += claimed
           remaining -= cCount
           if (remaining > 0) {
@@ -267,12 +236,11 @@ object Scc {
       }
       if (iteration < config.maxIterations) iteration += 1
 
-      if (checkpointDir.isDefined && remaining > 0 && resolved.nonEmpty
-          && iteration % checkpointEvery == 0) {
+      // like WCC, a run stopped by the iteration cap stays resumable
+      if (steps.due(iteration, over = remaining == 0) && resolved.nonEmpty) {
         val state = resolved.reduce(_ union _)
           .union(active.select($"id", lit(-1L).as("scc")))
-        val reread = graft.checkpoint.Checkpointer.write(checkpointDir.get,
-          "scc", iteration, remaining.toDouble, state, fingerprint)
+        val reread = steps.write(iteration, remaining.toDouble, state)
         resolved.clear()
         resolved += reread.filter($"scc" >= 0).select($"id", $"scc")
         active = reread.filter($"scc" === -1).select($"id")

@@ -5,7 +5,6 @@ import graft.graph.LinkGraph
 import org.apache.spark.sql.graft.StatsReset
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Single-source shortest paths on directed weighted graphs.
   *
@@ -51,13 +50,6 @@ object Sssp {
     require(config.startNode >= 0 && config.startNode < n,
       s"start node ${config.startNode} out of range [0,$n)")
 
-    val doBroadcast = n <= broadcastVertices
-    // broadcast when the vertex state fits; otherwise hint shuffle-hash so
-    // the planner builds the (small) state side and NEVER sort-merges the
-    // cached edge side (an SMJ would re-sort the big table every round)
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (doBroadcast) broadcast(df) else df.hint("shuffle_hash")
-
     // State holds only REACHED vertices (sparse — tiny early on):
     // (id, dist, pending) where pending = improved but not yet relaxed.
     // With finite delta (reference DeltaSteppingConfig, sssp.rs:21-41) each
@@ -66,27 +58,23 @@ object Sssp {
     // the band of the smallest pending distance. Infinite delta makes the
     // threshold +inf — the frontier is all pending vertices (plain frontier
     // Bellman-Ford). Both schedules reach the identical min-plus fixed point.
-    // Durable checkpoint/resume (north rule §4.8, same shape as
-    // PR/WCC/LP/SCC): the sparse (id, dist, pending) state is the complete
-    // loop state — the delta band re-derives from the minimum pending
-    // distance, so only the state table needs to persist. State at round k
-    // is config-dependent through (start, delta), input-dependent through
-    // the edge set.
-    val fingerprint = checkpointDir.map(_ =>
-      s"sssp|s=${config.startNode}|delta=${config.delta}" +
-        s"|n=$n|m=${graph.edgeCount}").getOrElse("")
-    val resume = checkpointDir
-      .flatMap(graft.checkpoint.Checkpointer.latest(spark, _, fingerprint))
-      .filter(_._1.algorithm == "sssp")
-    var iteration = resume.map(_._1.iteration).getOrElse(0)
-    var state = resume.map(_._2)
+    // Durable checkpoint/resume (north rule §4.8): the sparse
+    // (id, dist, pending) state is the complete loop state — the delta band
+    // re-derives from the minimum pending distance, so only the state table
+    // needs to persist. State at round k is config-dependent through
+    // (start, delta), input-dependent through the edge set.
+    val steps = new Supersteps(spark, n, broadcastVertices, checkpointDir,
+      checkpointEvery, "sssp", s"sssp|s=${config.startNode}" +
+        s"|delta=${config.delta}|n=$n|m=${graph.edgeCount}")
+    var iteration = steps.startIteration
+    var state = steps.resume.map(_._2)
       .getOrElse(spark.range(1).select(
         lit(config.startNode).as("id"), lit(0.0).as("dist"),
         lit(true).as("pending")))
       .transform(StatsReset.checkpointNoStats)
     val deltaFinite = !config.delta.isInfinite
     var bucket =
-      if (deltaFinite && resume.isDefined) {
+      if (deltaFinite && steps.resume.isDefined) {
         // resume into the band of the smallest pending distance
         val mp = state.filter($"pending").agg(min($"dist")).first()
         if (mp.isNullAt(0)) 0L
@@ -110,12 +98,11 @@ object Sssp {
     // state's dist, min(cand) the candidate's relaxation, max(pending) the
     // state's flag (cand rows contribute false), exactly the fields the
     // full-outer select read.
-    def relaxRound(cur: DataFrame, threshold: Double, i: Int): DataFrame = {
-      val _ = i // kept for call-site stability; aliases no longer needed
+    def relaxRound(cur: DataFrame, threshold: Double): DataFrame = {
       val frontier = cur.filter($"pending" && $"dist" < threshold)
         .select($"id", $"dist")
       val cand = edges
-        .join(maybeBroadcast(frontier), edges("src") === frontier("id"))
+        .join(steps.side(frontier), edges("src") === frontier("id"))
         .groupBy(edges("dst").as("id"))
         .agg(min($"dist" + $"weight").as("cand"))
       cur.select($"id", $"dist", $"pending",
@@ -136,57 +123,22 @@ object Sssp {
 
     // Round batching (round-4 verdict #4 — SSSP was the one iterative
     // algorithm still paying two driver-action floors per round): with
-    // infinite delta, run `batch` relax rounds per convergence probe.
-    // Min-plus relaxation past frontier exhaustion is a no-op, so the
-    // batch reaches the identical fixed point; the probe only decides
-    // WHEN to stop, never what is computed. Materialization is
-    // mode-aware, exactly the WCC/LP/SCC/PR batch policy:
-    //  - SHUFFLE mode chains the rounds LAZILY into one fused job
-    //    (ReuseExchange dedupes the repeated subtrees);
-    //  - BROADCAST mode materializes EVERY round (nested broadcast builds
-    //    re-execute their lazy subtrees with no cross-build reuse — the
-    //    measured ~2^batch pathology) but still amortizes the probe
-    //    action over the batch.
-    // A FINITE delta keeps per-round probes: the band-advance decision is
-    // a driver-side branch that cannot be chained lazily.
-    val batch =
-      if (deltaFinite) 1 // banded schedule is inherently probe-per-round
-      else sys.env.get("GRAFT_SSSP_BATCH").map(_.toInt)
-        .orElse(Some(config.roundBatch).filter(_ > 0))
-        .getOrElse(4)
-
-    if (batch > 1) {
+    // infinite delta, run 4 relax rounds per convergence probe,
+    // in both modes. Min-plus relaxation past frontier exhaustion is a
+    // no-op, so the batch reaches the identical fixed point; the probe only
+    // decides WHEN to stop, never what is computed. Inside a batch the
+    // rounds materialize by the shared policy (every round in broadcast
+    // mode, once per batch in shuffle mode). A FINITE delta keeps
+    // per-round probes: the band-advance decision is a driver-side branch
+    // that cannot be chained lazily.
+    if (!deltaFinite) {
       while (!done && iteration < config.maxIterations) {
-        // clamp each batch to the next checkpoint boundary so the durable
-        // cadence stays EXACTLY checkpointEvery (a free-running batch
-        // would only hit lcm(batch, every) multiples — stretching the
-        // resume-loss window silently)
-        val rounds = {
-          val r = math.min(batch, config.maxIterations - iteration)
-          if (checkpointDir.isDefined)
-            math.min(r, checkpointEvery - (iteration % checkpointEvery))
-          else r
-        }
-        // broadcast-mode materialization cadence inside a batch: 1 = every
-        // round (the measured-safe default — nested broadcast builds
-        // re-execute their lazy subtree ~2^k per action); prop/env knob for
-        // within-session A/B of small k (graft.bench.SsspBatchAb)
-        val bcastLazy = sys.props.get("graft.sssp.bcastlazy")
-          .orElse(sys.env.get("GRAFT_SSSP_BCAST_LAZY"))
-          .map(_.toInt).getOrElse(1)
-        // a zero would throw ArithmeticException in the modulus below and
-        // a negative value would silently disable the per-round
-        // materialization that prevents the measured ~2^batch
-        // nested-broadcast re-execution pathology
-        require(bcastLazy >= 1,
-          s"SSSP bcastLazy cadence must be >= 1, got $bcastLazy")
+        val rounds = steps.batch(iteration, config.maxIterations,
+          Supersteps.ChainRounds)
         var cur = state
         for (i <- 0 until rounds) {
-          cur = relaxRound(cur, Double.PositiveInfinity, i)
-          // eager localCheckpoint truncates plan lineage (SURVEY.md
-          // §7.4-5): per `bcastLazy` rounds in broadcast mode, once per
-          // batch in shuffle mode
-          if ((doBroadcast && (i + 1) % bcastLazy == 0) || i == rounds - 1)
+          cur = relaxRound(cur, Double.PositiveInfinity)
+          if ((i + 1) % steps.chain == 0 || i == rounds - 1)
             cur = cur.transform(StatsReset.checkpointNoStats)
         }
         state = cur
@@ -195,13 +147,10 @@ object Sssp {
         // vertex still pending means another batch is needed.
         done = state.agg(count(when($"pending", 1)))
           .first().getLong(0) == 0L
-        if (checkpointDir.isDefined && !done
-            && iteration % checkpointEvery == 0
-            && iteration < config.maxIterations) {
-          state = graft.checkpoint.Checkpointer.write(checkpointDir.get,
-            "sssp", iteration, 0.0, state, fingerprint)
+        if (steps.due(iteration,
+            over = done || iteration >= config.maxIterations))
+          state = steps.write(iteration, 0.0, state)
             .transform(StatsReset.checkpointNoStats)
-        }
       }
     } else while (!done && iteration < config.maxIterations) {
       val threshold =
@@ -224,23 +173,19 @@ object Sssp {
         // eager localCheckpoint truncates the per-round plan lineage
         // (SURVEY.md §7.4-5); frontier/dist are cheap views over the cached
         // RDD.
-        state = relaxRound(state, threshold, 0)
+        state = relaxRound(state, threshold)
           .transform(StatsReset.checkpointNoStats)
         iteration += 1
-        // skip the write when the loop is about to terminate on the
-        // iteration cap — same guard as PageRank/WCC/LP (a redundant final
-        // checkpoint buys nothing; resume re-derives the band from state)
-        if (checkpointDir.isDefined && iteration % checkpointEvery == 0
-            && iteration < config.maxIterations) {
-          state = graft.checkpoint.Checkpointer.write(checkpointDir.get,
-            "sssp", iteration, 0.0, state, fingerprint)
+        // no write when the loop stops on the iteration cap (resume
+        // re-derives the band from state)
+        if (steps.due(iteration, over = iteration >= config.maxIterations))
+          state = steps.write(iteration, 0.0, state)
             .transform(StatsReset.checkpointNoStats)
-        }
       }
     }
 
     val full = graph.vertices
-      .join(maybeBroadcast(state.select($"id", $"dist")), Seq("id"), "left")
+      .join(steps.side(state.select($"id", $"dist")), Seq("id"), "left")
       .select($"id",
         coalesce($"dist", lit(Double.PositiveInfinity)).as("dist"))
     Result(full, ConvergenceStats(iteration, 0.0, done))

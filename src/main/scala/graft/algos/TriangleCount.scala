@@ -110,11 +110,9 @@ object TriangleCount {
     * graphs and well below the measured blowup scale works — the lever
     * trades ~0.5 s of fixed job overhead (small graphs) against
     * wedge-shuffle volume that grows with hub in-degree (large graphs);
-    * both sides compute identical results (spec'd). Env-overridable for
-    * A/Bs (GRAFT_TC_WEDGE_MAX).
+    * both sides compute identical results (spec'd).
     */
-  def wedgeMaxEdges: Long =
-    sys.env.getOrElse("GRAFT_TC_WEDGE_MAX", "1000000").toLong
+  val wedgeMaxEdges: Long = 1000000L
 
   /** Triangle rows (u, v, w) via the small-graph wedge join. */
   private def wedgeTriangles(oriented: DataFrame): DataFrame = {

@@ -1,7 +1,6 @@
 package graft.algos
 
 import graft.{ConvergenceStats, WccConfig}
-import graft.checkpoint.Checkpointer
 import graft.graph.LinkGraph
 import org.apache.spark.sql.graft.StatsReset
 import org.apache.spark.sql.DataFrame
@@ -120,35 +119,24 @@ object Wcc {
 
     // sparse mode has no n; its state size is bounded by the endpoint count
     // (<= undirected edge count), so gate the broadcast on that instead.
-    val doBroadcast =
-      if (sparseVertices) undCount <= broadcastVertices
-      else n <= broadcastVertices
-    // broadcast when the vertex state fits; otherwise hint shuffle-hash so
-    // the planner builds the (small) state side and NEVER sort-merges the
-    // cached edge side (an SMJ would re-sort the big table every round)
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (doBroadcast) broadcast(df) else df.hint("shuffle_hash")
-
-    // state-determining facts only: the comp labeling at iteration k does
-    // not depend on maxIterations.
-    val fingerprint = checkpointDir.map(_ =>
-      s"wcc|n=$n|m=${raw.count()}|sparse=$sparseVertices").getOrElse("")
-    val resume = checkpointDir
-      .flatMap(Checkpointer.latest(spark, _, fingerprint))
-      .filter(_._1.algorithm == "wcc")
+    // The fingerprint names state-determining facts only: the comp
+    // labeling at iteration k does not depend on maxIterations.
+    val steps = new Supersteps(spark, if (sparseVertices) undCount else n,
+      broadcastVertices, checkpointDir, checkpointEvery, "wcc",
+      s"wcc|n=$n|m=${raw.count()}|sparse=$sparseVertices")
     // a TERMINAL checkpoint (the contraction branch's composed labeling)
     // is final state: return it directly — re-entering the loop would
     // skip the confirming round when iteration >= maxIterations and
     // misreport a finished run as converged=false
-    resume.filter(_._1.converged).foreach { case (meta, state) =>
+    steps.resume.filter(_._1.converged).foreach { case (meta, state) =>
       und.unpersist()
       return Result(state.transform(StatsReset.checkpointNoStats),
         ConvergenceStats(meta.iteration, 0.0, converged = true))
     }
-    var iteration = resume.map(_._1.iteration).getOrElse(0)
+    var iteration = steps.startIteration
     // Eager localCheckpoint per round: the pointer-jump self-join would
     // otherwise DOUBLE the logical plan every round (SURVEY.md §7.4-5).
-    var comp: DataFrame = resume.map(_._2)
+    var comp: DataFrame = steps.resume.map(_._2)
       .getOrElse {
         if (sparseVertices)
           // edge endpoints only — a pair-sized state, never the id space
@@ -163,21 +151,6 @@ object Wcc {
       }
       .transform(StatsReset.checkpointNoStats)
 
-    // Rounds chain LAZILY in batches of up to 4 per Spark action — but
-    // ONLY in shuffle mode, where the whole batch fuses into one job and
-    // ReuseExchange dedupes every repeated subtree (the PageRank
-    // fixed-iteration pattern that scales 0.95 on the N->4N gate). In
-    // BROADCAST mode each nested broadcast is built by its own driver job
-    // that re-executes its lazy subtree, and those builds are NOT reused
-    // across each other — measured cost ~2^batch per action (sf0.1 events:
-    // 3.5 s/round at batch=1 vs 8.5 s/round at batch=4, and 33 min/run on
-    // a 77M-row und at 2M vertices; disabling AQE only shrinks the
-    // multiplier to ~2.4 s/round, still no better than unbatched with
-    // round-granular convergence detection). So broadcast mode stays at
-    // one materialized round per action.
-    val batch =
-      sys.env.get("GRAFT_WCC_BATCH").map(_.toInt).getOrElse(
-        if (doBroadcast) 1 else 4)
     // AUTO mode clamps the first batch to the decision round so the
     // engagement rule is evaluated exactly where the measured win was
     // (after round 2), not wherever the batch boundary happens to fall.
@@ -186,7 +159,7 @@ object Wcc {
       else config.contractAfter
     var changed = Long.MaxValue
     while (changed > 0 && iteration < config.maxIterations) {
-      var rounds = math.min(batch, config.maxIterations - iteration)
+      var rounds = steps.batch(iteration, config.maxIterations)
       if (contractAt > iteration)
         rounds = math.min(rounds, contractAt - iteration)
       // batch-start comp rides along as `prev` so the convergence check is
@@ -195,19 +168,19 @@ object Wcc {
       var cur = comp.select($"id", $"comp", $"comp".as("prev"))
       for (i <- 0 until rounds) {
         val nbrMin = und
-          .join(maybeBroadcast(cur.select($"id", $"comp")),
+          .join(steps.side(cur.select($"id", $"comp")),
             und("src") === cur("id"))
           .groupBy(und("dst").as("id"))
           .agg(min($"comp").as("nbr_min"))
         val propagated = cur
-          .join(maybeBroadcast(nbrMin), Seq("id"), "left")
+          .join(steps.side(nbrMin), Seq("id"), "left")
           .select($"id", $"prev",
             least($"comp", coalesce($"nbr_min", $"comp")).as("comp"))
         // pointer jumping: comp(v) <- comp(comp(v)); same fixed point,
         // collapses long chains logarithmically.
         val a = s"w$i" // unique alias per unrolled round (nested scopes)
         cur = propagated.as(a)
-          .join(maybeBroadcast(
+          .join(steps.side(
             propagated.select($"id".as("jid"), $"comp".as("jcomp"))),
             col(s"$a.comp") === $"jid", "left")
           .select(col(s"$a.id").as("id"), col(s"$a.prev").as("prev"),
@@ -232,9 +205,6 @@ object Wcc {
         if (config.contractAfter < 0)
           autoEngage(iteration, stateRows, changed, autoContractMinState)
         else config.contractAfter > 0 && iteration >= config.contractAfter
-      if (sys.env.contains("GRAFT_WCC_DEBUG"))
-        System.err.println(s"[wcc] iter=$iteration state=$stateRows " +
-          s"changed=$changed sparse=$sparseVertices contract=$wantContract")
       if (wantContract && changed > 0
           && iteration < config.maxIterations) {
         // Afforest-analogue work skipping by CONTRACTION (see WccConfig):
@@ -249,9 +219,9 @@ object Wcc {
         // components and the min-id contract (the component min M always
         // has comp(M)=M and so survives contraction as a class vertex).
         val contracted = canon
-          .join(maybeBroadcast(
+          .join(steps.side(
             comp.select($"id".as("src"), $"comp".as("csrc"))), Seq("src"))
-          .join(maybeBroadcast(
+          .join(steps.side(
             comp.select($"id".as("dst"), $"comp".as("cdst"))), Seq("dst"))
           .where($"csrc" =!= $"cdst")
           .select($"csrc".as("src"), $"cdst".as("dst"),
@@ -264,7 +234,7 @@ object Wcc {
           sparseVertices = true,
           autoContractMinState = autoContractMinState)
         val composed0 = comp
-          .join(maybeBroadcast(sub.components
+          .join(steps.side(sub.components
             .select($"id".as("comp"), $"comp".as("fin"))), Seq("comp"),
             "left")
           .select($"id", coalesce($"fin", $"comp").as("comp"))
@@ -282,8 +252,8 @@ object Wcc {
         // round entirely in that case)
         val composed =
           if (checkpointDir.isDefined)
-            Checkpointer.write(checkpointDir.get, "wcc", totalIters, 0.0,
-              composed0, fingerprint, converged = sub.stats.converged)
+            steps.write(totalIters, 0.0, composed0,
+              converged = sub.stats.converged)
               .transform(StatsReset.checkpointNoStats)
           else composed0
         und.unpersist()
@@ -291,11 +261,11 @@ object Wcc {
           totalIters, 0.0, sub.stats.converged))
       }
 
-      if (checkpointDir.isDefined && changed > 0
-          && iteration % checkpointEvery == 0) {
-        comp = Checkpointer.write(checkpointDir.get, "wcc",
-          iteration, changed.toDouble, comp, fingerprint).transform(StatsReset.checkpointNoStats)
-      }
+      // a run stopped by the iteration cap has not converged, so its last
+      // state stays resumable; only a converged run skips the write
+      if (steps.due(iteration, over = changed == 0))
+        comp = steps.write(iteration, changed.toDouble, comp)
+          .transform(StatsReset.checkpointNoStats)
     }
 
     und.unpersist()

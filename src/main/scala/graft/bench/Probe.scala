@@ -146,131 +146,6 @@ object StageStats {
   }
 }
 
-/** Within-session interleaved A/B of gather-salt configs: session-to-session
-  * host noise on this VM swings wall AND summed task CPU by ~15%, so
-  * cross-session single runs cannot rank configs a few percent apart.
-  * One JVM, caches built per config up front (warmup), then configs
-  * alternate A,B,A,B... so both sample the same host windows.
-  *   runMain graft.bench.SaltAb <edgesPath> <NxC|cores> <steps> <runs> \
-  *     <spec>... where spec = salt[:div] (salt 1 = unsalted)
-  */
-object SaltAb {
-  def main(args: Array[String]): Unit = {
-    val path = args(0); val cores = args(1)
-    val steps = args(2).toInt; val runs = args(3).toInt
-    val specs = args.drop(4).toSeq
-    // the gate protocol's own spec parsing — a drifting copy here would
-    // A/B under a different cluster shape than the rolls it explains
-    val (master, total) = Pair.master(cores)
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get("/dev/shm/graft-spark-local"))
-    val parts = sys.env.get("GRAFT_PARTS").map(_.toInt)
-      .getOrElse(math.max(total, 8))
-    val spark = Scaling.sessionFor(master, parts, Scaling.measureConf)
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong()
-    import org.apache.spark.scheduler._
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          cpuNs.addAndGet(t.taskMetrics.executorCpuTime): Unit
-    })
-    try {
-      val g = graft.graph.LinkGraph(spark.read.parquet(path),
-        numPartitions = parts)
-      val cfg = graft.PageRankConfig(steps, 0.0, 0.85)
-      def parse(s: String): (Int, Long) = s.split(":") match {
-        case Array(a) => (a.toInt, 2L)
-        case Array(a, d) => (a.toInt, d.toLong)
-      }
-      // GRAFT_SALTAB_ALGO=lp swaps the measured job to label propagation
-      // (fixed-iteration mode, same superstep count) — the round-4 verdict
-      // #6 engage-or-decline measurement for LP's own gather
-      val algo = sys.env.getOrElse("GRAFT_SALTAB_ALGO", "pr")
-      def once(spec: String): (Double, Double) = {
-        val (salt, div) = parse(spec)
-        sys.props("graft.salt.div") = div.toString
-        val c0 = cpuNs.get(); val t0 = System.nanoTime()
-        if (algo == "lp")
-          graft.algos.LabelPropagation.run(g,
-            graft.LabelPropagationConfig(maxIterations = steps,
-              earlyStop = false),
-            broadcastVertices = 0L, gatherSalt = salt).labels.count()
-        else
-          graft.algos.PageRank.run(g, cfg, broadcastVertices = 0L,
-            gatherSalt = salt).scores.count()
-        ((System.nanoTime() - t0) / 1e9, (cpuNs.get() - c0) / 1e9)
-      }
-      specs.foreach { s => once(s); () } // warmup: build each cache
-      val acc = scala.collection.mutable.Map[String,
-        List[(Double, Double)]]().withDefaultValue(Nil)
-      for (r <- 1 to runs; s <- specs) {
-        val m = once(s)
-        acc(s) = m :: acc(s)
-        println(f"SALTAB run=$r spec=$s wall=${m._1}%.2f cpu=${m._2}%.1f")
-      }
-      specs.foreach { s =>
-        val ms = acc(s)
-        println(f"SALTAB-SUMMARY spec=$s " +
-          f"minWall=${ms.map(_._1).min}%.2f " +
-          f"meanWall=${ms.map(_._1).sum / ms.size}%.2f " +
-          f"minCpu=${ms.map(_._2).min}%.1f " +
-          f"meanCpu=${ms.map(_._2).sum / ms.size}%.1f")
-      }
-    } finally spark.stop()
-  }
-}
-
-/** Within-session interleaved A/B of SSSP round-batch sizes (the g_sssp
-  * action-floor knob): one JVM, one shared LinkGraph cache, configs
-  * alternate A,B,C,A,B,C so every batch size samples the same host windows
-  * (cross-session runs swing ~15% on this VM — see SaltAb).
-  *   runMain graft.bench.SsspBatchAb <sfDir|edgesPath> <cores> <runs> \
-  *     <batch>...
-  */
-object SsspBatchAb {
-  def main(args: Array[String]): Unit = {
-    val path = args(0); val cores = args(1).toInt
-    val runs = args(2).toInt
-    val spark = Scaling.session(cores)
-    try {
-      val edges =
-        if (java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$path/events.parquet")))
-          graft.sources.EventEdges.edges(spark, path)
-        else spark.read.parquet(path)
-      val g = graft.graph.LinkGraph(edges)
-      // spec = batch[:bcastLazy] — bcastLazy rides the system property so
-      // one session can A/B broadcast-mode materialization cadence too
-      def parse(s: String): (Int, Int) = s.split(":") match {
-        case Array(a) => (a.toInt, 1)
-        case Array(a, l) => (a.toInt, l.toInt)
-      }
-      def once(spec: String): Double = {
-        val (batch, lzy) = parse(spec)
-        sys.props("graft.sssp.bcastlazy") = lzy.toString
-        val t0 = System.nanoTime()
-        graft.algos.Sssp.run(g,
-          graft.SsspConfig(0L, roundBatch = batch)).distances.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val specs = args.drop(3).toSeq
-      specs.foreach { b => once(b); () } // warmup: caches + JIT per shape
-      val acc = scala.collection.mutable.Map[String, List[Double]]()
-        .withDefaultValue(Nil)
-      for (r <- 1 to runs; b <- specs) {
-        val s = once(b)
-        acc(b) = s :: acc(b)
-        println(f"SSSPAB run=$r spec=$b wall=$s%.2f")
-      }
-      specs.foreach { b =>
-        val ms = acc(b)
-        println(f"SSSPAB-SUMMARY spec=$b min=${ms.min}%.2f " +
-          f"mean=${ms.sum / ms.size}%.2f")
-      }
-    } finally spark.stop()
-  }
-}
-
 object GenBench {
   def main(args: Array[String]): Unit = {
     val Array(path, convs, turns, actors) = args

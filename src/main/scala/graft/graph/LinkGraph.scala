@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * (large) edge side each iteration. Vertex-side tables are broadcast when
   * small. Skewed dst hubs in gather aggregations are absorbed by partial
   * (map-side) aggregation; join-side skew falls back to AQE skew-join plus
-  * the salting helper below (SURVEY.md §2.11 — degree-balanced partitioning
-  * is the reference's skew story, graph_ops.rs:331-440).
+  * the hub-salting helpers below (SURVEY.md §2.11 — degree-balanced
+  * partitioning is the reference's skew story, graph_ops.rs:331-440).
   */
 class LinkGraph private (
     val edges: DataFrame,
@@ -194,57 +194,21 @@ class LinkGraph private (
   }
 
   private val saltedCache =
-    new scala.collection.concurrent.TrieMap[(Int, Long),
-      (DataFrame, DataFrame)]()
+    new scala.collection.concurrent.TrieMap[Int, (DataFrame, DataFrame)]()
 
-  /** Compressed multigraph with TARGETED hub splitting for shuffle-mode
-    * gathers — the distributed statement of the reference's degree-balanced
-    * work ranges (graph_ops.rs:331-440). Srcs whose multigraph row count
-    * exceeds rows/(2*P) are rewritten to `salt` VIRTUAL src ids
-    * (vsrc = -(src*salt + hash(dst)%salt + 1), always negative so it never
-    * collides with a real id); everything else keeps vsrc = src. The cache
-    * is hash-partitioned by vsrc, so a Zipf hub spreads across `salt`
-    * partitions instead of capping a stage at one partition's size — and
-    * the gather join key stays a SINGLE long column (a composite (src,salt)
-    * key measured ~+35% CPU across the whole probe scan). The caller
-    * replicates hub state rows to the virtual ids via the returned hub map
-    * (state stays ~V rows: only hubs replicate).
-    *
+  /** `multiplicitiesBySrc` with TARGETED hub splitting for shuffle-mode
+    * gathers ([[LinkGraph.saltBySrc]]), cached per salt factor. Derived
+    * from the src-partitioned cache: the AUTO-salt path has already
+    * materialized it for srcHubStats, so the salted build is a repartition
+    * of an in-memory table instead of a second groupBy over the raw edges.
     * Returns (saltedEdges(src, vsrc, dst, cnt), hubs(src, nsalt)).
     */
-  def multiplicitiesSalted(salt: Int): (DataFrame, DataFrame) = {
-    // split srcs above perPart/div rows: at div=2 a straggler partition
-    // is still bounded at ~1.5x the mean (hub + its hash-coincident
-    // normal rows); div=4 bounds it at ~1.25x.
-    val div = LinkGraph.saltDiv()
-    saltedCache.getOrElseUpdate((salt, div), {
-      // derive from the src-partitioned cache (not `multiplicities`): the
-      // AUTO-salt path has already materialized it for srcHubStats, so the
-      // salted build is a repartition of an in-memory table instead of a
-      // second groupBy over the raw edges
-      val mult = multiplicitiesBySrc
-      val rows = mult.count()
-      val threshold = math.max(10000L, rows / (div * numPartitions))
-      val hubs = mult.groupBy($"src")
-        .agg(count(lit(1)).as("rows_m"))
-        .filter($"rows_m" > threshold)
-        .select($"src", lit(salt).as("nsalt"))
-        .persist()
-      registered(hubs)
-      val salted = mult
-        .join(broadcast(hubs), Seq("src"), "left")
-        .withColumn("vsrc",
-          when($"nsalt".isNotNull,
-            -($"src" * salt + pmod(hash($"dst"), $"nsalt") + 1))
-            .otherwise($"src"))
-        .select($"src", $"vsrc", $"dst", $"cnt")
-        .repartition(numPartitions, $"vsrc")
-        .sortWithinPartitions($"vsrc", $"dst")
-        .persist()
-      registered(salted)
-      (salted, hubs)
+  def multiplicitiesSalted(salt: Int): (DataFrame, DataFrame) =
+    saltedCache.getOrElseUpdate(salt, {
+      val (salted, hubs) =
+        LinkGraph.saltBySrc(multiplicitiesBySrc, numPartitions, salt)
+      (registered(salted), registered(hubs))
     })
-  }
 
   /** Degree-balanced view: round-robin partitions of ~equal row count,
     * sorted by (src, dst) within each for columnar-cache delta encoding.
@@ -396,37 +360,28 @@ class LinkGraph private (
 
 object LinkGraph {
 
-  /** Straggler-bound divisor for hub-salting thresholds (split srcs above
-    * rows/(div*partitions)): system property first so within-session A/B
-    * (bench.SaltAb) can vary it, env for whole runs, else 2 — ONE
-    * resolution shared by every salted gather path.
-    */
-  def saltDiv(): Long =
-    sys.props.get("graft.salt.div")
-      .orElse(sys.env.get("GRAFT_SALT_THRESH_DIV"))
-      .map(_.toLong).getOrElse(2L)
-
-  /** Targeted hub split of an arbitrary (src, dst, cnt) gather table — the
-    * shape `multiplicitiesSalted` applies to the PageRank cache,
-    * generalized so every shuffle-mode gather over a hub-skewed table can
-    * use it (round-4 verdict #6: LP scans its own undirected multigraph,
-    * not the shared cache). Srcs whose row count exceeds perPart/`div`
-    * rewrite to `salt` virtual ids (vsrc always negative, never a real id);
-    * the caller replicates its per-src state rows to the virtual ids via
-    * the returned hubs map (see PageRank senders / LP voters).
+  /** Targeted hub split of a (src, dst, cnt) gather table — the
+    * distributed statement of the reference's degree-balanced work ranges
+    * (graph_ops.rs:331-440). Srcs whose row count exceeds rows/(2*P) (at
+    * least `minHubRows`) are rewritten to `salt` VIRTUAL src ids
+    * (vsrc = -(src*salt + hash(dst)%salt + 1), always negative so it never
+    * collides with a real id); everything else keeps vsrc = src. The
+    * divisor 2 bounds a straggler partition at ~1.5x the mean (hub + its
+    * hash-coincident normal rows). The table is hash-partitioned by vsrc,
+    * so a Zipf hub spreads across `salt` partitions instead of capping a
+    * stage at one partition's size, and the gather join key stays a SINGLE
+    * long column (a composite (src,salt) key measured ~+35% CPU across the
+    * whole probe scan). The caller replicates its per-src state rows to
+    * the virtual ids via the returned hubs map ([[explodeToVirtual]]).
     * Returns (salted(src, vsrc, dst, cnt) hash-partitioned by vsrc,
     * hubs(src, nsalt)) — both persisted; caller unpersists.
     */
   def saltBySrc(table: DataFrame, numPartitions: Int, salt: Int,
-      div: Long = -1L, minHubRows: Long = 10000L): (DataFrame, DataFrame) = {
+      minHubRows: Long = 10000L): (DataFrame, DataFrame) = {
     val spark = table.sparkSession
     import spark.implicits._
     val rows = table.count()
-    // div <= 0 defers to the shared knob chain (prop/env/2), the same
-    // resolution multiplicitiesSalted uses — so bench.SaltAb's div A/B
-    // varies THIS path too, not only PageRank's
-    val d = if (div > 0) div else saltDiv()
-    val threshold = math.max(minHubRows, rows / (d * numPartitions))
+    val threshold = math.max(minHubRows, rows / (2L * numPartitions))
     val hubs = table.groupBy($"src")
       .agg(count(lit(1)).as("rows_m"))
       .filter($"rows_m" > threshold)
@@ -549,20 +504,4 @@ object LinkGraph {
       coalesce(col("weight"), lit(1.0)).cast("double").as("weight")),
       parts, nodeCount, nodeValues, cs)
   }
-
-  /** Hub-salting helper (SURVEY.md §2.11/§7.4-4): split any join key whose
-    * frequency exceeds `threshold` into `salt` sub-keys. Returns (saltedBig,
-    * explodedSmall) ready to join on (key, salt_id); aggregate partials then
-    * merge. The distributed counterpart of the reference's degree-balanced
-    * node ranges (graph_ops.rs:479-509).
-    */
-  def saltJoinKeys(
-      big: DataFrame, key: String, salt: Int): DataFrame =
-    big.withColumn("salt_id",
-      (pmod(hash(col(key), monotonically_increasing_id()), lit(salt)))
-        .cast("int"))
-
-  def explodeSalt(small: DataFrame, salt: Int): DataFrame =
-    small.withColumn("salt_id",
-      explode(sequence(lit(0), lit(salt - 1))))
 }

@@ -361,24 +361,11 @@ class GraphCatalog(io: TableIO) {
   def graphType(name: String): String =
     io.attr(name, "gtype").getOrElse("directed")
 
-  def setGraphType(name: String, gtype: String): Unit =
-    io.setAttr(name, "gtype", gtype)
-
   /** Manifest-tracked edge count — no scan (catalog.rs:134-142). */
   def edgeCount(name: String): Long = io.rows(name)
 
   /** Snapshot id of the edge table — keys snapshot-derived caches. */
   def version(name: String): Long = io.version(name)
-
-  /** Declare the graph's node universe explicitly — the graph500 m/16
-    * convention (input/graph500.rs:63-127) and the reference's NV-backed
-    * counts (csr.rs:546-574), where the node count is metadata, not
-    * max-id+1 over whatever edges happen to exist. Rides the manifest
-    * attrs, so every later `graph()` (and the daemon's GraphInfo lines)
-    * honors it.
-    */
-  def setNodeCount(name: String, n: Long): Unit =
-    io.setAttr(name, "node_count", n.toString)
 
   def explicitNodeCount(name: String): Option[Long] =
     io.attr(name, "node_count").map(_.toLong)

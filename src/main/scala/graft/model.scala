@@ -76,37 +76,23 @@ case class LabelPropagationConfig(
   * the mode-dependent batch size silently scale the effective hop budget
   * 4x between modes. The default (800) preserves the historical
   * shuffle-mode budget (200 batches x 4 rounds).
-  * `propagationBatch` -1 = auto: 4 chained rounds per action in shuffle
-  * mode (one fused job, exchanges reused), 1 in broadcast mode — nested
-  * broadcast builds re-execute their subtrees with no cross-build reuse,
-  * ~2^batch per action (the WCC batch policy; re-measured on SCC round 4:
-  * the sf0.1 events graph runs 7.8 s at batch=1 vs 19.6 s at batch=4).
   */
 case class SccConfig(
     maxIterations: Int = 100,
-    maxPropagationRounds: Int = 800,
-    propagationBatch: Int = -1)
+    maxPropagationRounds: Int = 800)
 
 /** `delta` mirrors the reference's DeltaSteppingConfig{start_node, delta}
   * (crates/algos/src/sssp.rs:21-41). Infinite delta (default) = plain
   * frontier Bellman-Ford (every settled-enough vertex relaxes each round);
   * a finite delta batches the frontier into distance bands
   * [b*delta, (b+1)*delta) — same min-plus fixed point, fewer wasted
-  * relaxations on high-diameter weighted graphs.
-  *
-  * `roundBatch` -1 = auto: with infinite delta, 4 relax rounds per
-  * convergence-probe action (lazily fused in shuffle mode, materialized
-  * per round in broadcast mode — the WCC/LP/SCC batch policy); finite
-  * delta always probes per round (the band advance is a driver-side
-  * decision). Min-plus relaxation past frontier exhaustion is a no-op, so
-  * any batch size reaches the identical fixed point; only the reported
-  * iteration count may round up to the probe boundary.
+  * relaxations on high-diameter weighted graphs. With infinite delta the
+  * reported iteration count rounds up to the 4-round probe boundary.
   */
 case class SsspConfig(
     startNode: Long,
     maxIterations: Int = 500,
-    delta: Double = Double.PositiveInfinity,
-    roundBatch: Int = -1)
+    delta: Double = Double.PositiveInfinity)
 
 /** Result bundles: scores plus convergence metrics, mirroring the reference's
   * (Vec<f32>, iterations, error) return (page_rank.rs:58-61).

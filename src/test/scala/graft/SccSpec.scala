@@ -120,17 +120,18 @@ class SccSpec extends SparkSpec {
     val n = 60L
     val edges = (0L until n).map(v => (v, (v + 1) % n))
     val res = Scc.run(LinkGraph(edgesDF(edges)),
-      SccConfig(maxIterations = 5, maxPropagationRounds = 2,
-        propagationBatch = 4))
+      SccConfig(maxIterations = 5, maxPropagationRounds = 2),
+      broadcastVertices = 0L)
     assert(!res.stats.converged,
       "capped propagation must not report convergence")
     val got = res.components.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == n) // output stays total (fail-safe self labels)
-    // and with an adequate budget the same graph resolves exactly (batch
-    // pinned to 4 so the 60 one-hop rounds stay a 15-action sequence)
-    val full = Scc.run(LinkGraph(edgesDF(edges)),
-      SccConfig(propagationBatch = 4))
+    // and with an adequate budget the same graph resolves exactly (shuffle
+    // mode chains 4 rounds per action, so the 60 one-hop rounds stay a
+    // 15-action sequence)
+    val full = Scc.run(LinkGraph(edgesDF(edges)), SccConfig(),
+      broadcastVertices = 0L)
     assert(full.stats.converged)
     assert(full.components.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
