@@ -157,7 +157,7 @@ object SparkEntry {
     "g_scc" -> ((s, dir) => Scc.run(graph(s, dir)).components),
 
     "g_lp4" -> ((s, dir) =>
-      // pinned iterations -> fused fixed-iteration mode (no per-round
+      // pinned iterations -> fixed-iteration mode (no per-round
       // changed-count jobs; identical labels, see LabelPropagation)
       LabelPropagation.run(graph(s, dir),
         LabelPropagationConfig(4, earlyStop = false)).labels),

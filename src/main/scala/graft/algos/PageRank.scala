@@ -4,7 +4,6 @@ import graft.{ConvergenceStats, PageRankConfig}
 import graft.graph.LinkGraph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** PageRank re-expressed as synchronous (Jacobi) supersteps of
   * Catalyst-planned join + aggregate, matching the recurrence of the
@@ -47,8 +46,7 @@ import org.apache.spark.storage.StorageLevel
   *    shuffle-mode superstep executes as ONE stage whose only shuffle is
   *    the partial-aggregated gather output.
   *  - the convergence error is a separate tiny job over two cached states;
-  *    in fixed-iteration mode (tolerance <= 0) it is skipped entirely and
-  *    supersteps chain lazily into one fused Catalyst job.
+  *    in fixed-iteration mode (tolerance <= 0) it is skipped entirely.
   * Placement, lineage cuts (eager localCheckpoint, SURVEY.md §7.4-5),
   * resume and the durable checkpoint cadence follow [[Supersteps]].
   */
@@ -145,20 +143,14 @@ object PageRank {
       if (steps.broadcastMode) (graph.multiplicities, null)
       else if (salt <= 1) (graph.multiplicitiesBySrc, null)
       else graph.multiplicitiesSalted(salt)
-    // Dense (id, out_deg) over the full vertex universe — built once,
-    // cached EXPLICITLY hash(id)-partitioned: the scatter join then meets
-    // the gather aggregate (also hash(id)) co-partitioned, its output stays
-    // hash(id), and the next superstep's senders meet the hash(src) edge
-    // cache with no exchange either — one stage per superstep instead of a
-    // re-exchange of the vertex table every round (spark.range's default
-    // split partitioning satisfies nothing).
-    // out_deg counts raw edges = sum of multiplicities.
-    val degrees = graph.vertices
-      .join(edges.groupBy($"src".as("id"))
-        .agg(sum($"cnt").as("out_deg")), Seq("id"), "left")
-      .na.fill(0.0, Seq("out_deg"))
-      .repartition(graph.numPartitions, $"id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // Dense (id, out_deg) over the full vertex universe, owned by the
+    // graph (LinkGraph.outDegrees): cached hash(id)-partitioned, so the
+    // scatter join meets the gather aggregate (also hash(id))
+    // co-partitioned, its output stays hash(id), and the next superstep's
+    // senders meet the hash(src) edge cache with no exchange either — one
+    // stage per superstep instead of a re-exchange of the vertex table
+    // every round.
+    val degrees = graph.outDegrees(edges)
     degrees.count()
 
     var iteration = steps.startIteration
@@ -200,24 +192,13 @@ object PageRank {
             .as("score"),
           $"out_deg")
       iteration += 1
-
+      val mat = next.localCheckpoint()
       if (trackError) {
-        // convergence mode: the error action materializes every superstep
-        // anyway, so truncate lineage eagerly each round.
-        val mat = next.localCheckpoint()
         error = mat.as("n").join(state.as("p"), Seq("id"))
           .agg(sum(abs($"n.score" - $"p.score"))).first().getDouble(0)
         converged = error < config.tolerance
-        state = mat
-      } else {
-        // fixed-iteration mode: no error job; supersteps chain lazily into
-        // fused Catalyst jobs (state appears once per level -> linear plan
-        // growth) and the lineage is cut by the shared policy.
-        state =
-          if (steps.cut(iteration, config.maxIterations))
-            next.localCheckpoint()
-          else next
       }
+      state = mat
 
       if (steps.due(iteration,
           over = converged || iteration >= config.maxIterations))

@@ -30,9 +30,9 @@ import org.apache.spark.sql.functions._
   *     It doubles progress wherever labels form decreasing chains; when
   *     ids run against edge direction it degrades to one hop per round, so
   *     the bound is O(diameter) rounds (the standard Pregel-SCC bound —
-  *     shallow on real link graphs). In shuffle mode rounds chain lazily
-  *     in batches of 4 per Spark action ([[Supersteps]]), so the per-round
-  *     cost is a quarter of a changed-count + localCheckpoint cycle.
+  *     shallow on real link graphs). Each round is the WCC hash-min +
+  *     pointer-jump round over directed edges, one changed-count +
+  *     checkpoint cycle per round ([[Supersteps]]).
   *  3. BACKWARD labels: the same propagation along reversed edges,
   *     bwd(v) = min id over {u : v reaches u} ∪ {v}.
   *  4. CLAIM: fwd(v) = bwd(v) = r  <=>  v and r are mutually reachable and
@@ -85,8 +85,7 @@ object Scc {
 
     // Min-label propagation along `edges` (label flows src -> dst) to the
     // fixed point lbl(v) = min id over in-reachers of v, with pointer
-    // jumping, `steps.chain` lazily-chained rounds per action (scaladoc
-    // step 2).
+    // jumping, one round per action (scaladoc step 2).
     // Returns (labels, reachedFixedPoint): the claim step is only sound at
     // the fixed point — claiming from capped labels can split an SCC whose
     // ids run against edge direction across different roots (so callers
@@ -94,44 +93,18 @@ object Scc {
     def propagateMin(verts: DataFrame,
         edges: DataFrame): (DataFrame, Boolean) = {
       // trivial lineage (projection over the checkpointed active set) —
-      // no checkpoint needed before the first batch materializes
+      // no checkpoint needed before the first round materializes
       var lbl = verts.select($"id", $"id".as("lbl"))
       var changed = Long.MaxValue
       var rounds = 0
       while (changed > 0 && rounds < config.maxPropagationRounds) {
-        // the budget counts ROUNDS (min-label hops), not batches — so the
-        // mode-dependent batch size (4 in shuffle, 1 in broadcast) cannot
-        // silently scale the effective hop budget 4x between modes
-        // (round-4 advice: the batch default dropping 4 -> 1 shrank the
-        // broadcast-mode budget from 800 to 200 hops unannounced)
-        val thisBatch =
-          math.min(steps.chain, config.maxPropagationRounds - rounds)
-        val start = lbl.select($"id", $"lbl".as("prev"))
-        var cur = lbl
-        for (i <- 0 until thisBatch) {
-          val nbrMin = edges
-            .join(steps.side(cur), edges("src") === cur("id"))
-            .groupBy(edges("dst").as("id"))
-            .agg(min($"lbl").as("nbr_min"))
-          val prop = cur
-            .join(steps.side(nbrMin), Seq("id"), "left")
-            .select($"id",
-              least($"lbl", coalesce($"nbr_min", $"lbl")).as("lbl"))
-          val a = s"a$i" // unique alias per unrolled round (nested scopes)
-          cur = prop.as(a)
-            .join(steps.side(
-              prop.select($"id".as("jid"), $"lbl".as("jlbl"))),
-              col(s"$a.lbl") === $"jid", "left")
-            .select(col(s"$a.id").as("id"),
-              least(col(s"$a.lbl"), coalesce($"jlbl", col(s"$a.lbl")))
-                .as("lbl"))
-        }
-        val stepped = cur.join(steps.side(start), Seq("id"))
+        val stepped = Wcc.minLabelRound(edges,
+            lbl.select($"id", $"lbl", $"lbl".as("prev")), steps.side)
           .select($"id", $"lbl", ($"lbl" =!= $"prev").as("chg"))
           .transform(StatsReset.checkpointNoStats)
         changed = stepped.filter($"chg").count()
         lbl = stepped.select($"id", $"lbl")
-        rounds += thisBatch
+        rounds += 1
       }
       (lbl, changed == 0)
     }

@@ -1,64 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-
-/** Scratch micro-probe for scaling diagnostics (not part of the API). */
-object Probe {
-  def main(args: Array[String]): Unit = {
-    val Array(path, cores) = args
-    val spark = Scaling.session(cores.toInt)
-    def time(label: String)(f: => Unit): Unit = {
-      f // warm
-      val t0 = System.nanoTime(); f
-      println(f"PROBE $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-    val raw = spark.read.parquet(path)
-    time("scan+agg (parquet)") {
-      raw.groupBy(col("dst")).agg(sum(col("weight"))).count(): Unit
-    }
-    val cached = raw.repartition(cores.toInt, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    cached.count()
-    time("agg (cached)") {
-      cached.groupBy(col("dst")).agg(sum(col("weight"))).count(): Unit
-    }
-    val deser = raw.repartition(cores.toInt, col("src"))
-      .persist(StorageLevel.MEMORY_ONLY_SER)
-    deser.count()
-    time("join+agg (cached, broadcast state)") {
-      val senders = cached.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).cast("double").as("s"))
-      cached.join(broadcast(senders), col("src") === col("id"))
-        .groupBy(col("dst")).agg(sum(col("s"))).count(): Unit
-    }
-    time("pure scan (cached)") { cached.agg(sum(col("src"))).count(): Unit }
-    spark.stop()
-  }
-}
-
-object Probe2 {
-  def main(args: Array[String]): Unit = {
-    val Array(cores) = args
-    val spark = Scaling.session(cores.toInt)
-    import org.apache.spark.sql.functions._
-    def time(label: String)(f: => Unit): Unit = {
-      f; val t0 = System.nanoTime(); f
-      println(f"PROBE $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-    time("range sum (pure codegen)") {
-      spark.range(0, 4000000000L, 1, cores.toInt)
-        .agg(sum(col("id") % 7)).count(): Unit
-    }
-    time("range groupBy 200k keys") {
-      spark.range(0, 400000000L, 1, cores.toInt)
-        .groupBy((col("id") % 200000).as("k"))
-        .agg(count(lit(1))).count(): Unit
-    }
-    spark.stop()
-  }
-}
-
 /** Per-stage diagnostics for one measured PageRank run: stage wall time,
   * summed task time, max task (straggler), shuffle bytes — the evidence
   * base for scaling-efficiency analysis. Usage:

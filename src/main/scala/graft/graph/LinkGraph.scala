@@ -3,6 +3,7 @@ package graft.graph
 import graft.Layout
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Distributed analogue of the reference's CSR graph
   * (crates/builder/src/graph/csr.rs:364-368: DirectedCsrGraph = out-CSR +
@@ -98,14 +99,15 @@ class LinkGraph private (
   }
 
   /** Unpersist every cache this graph has materialized (bySrc,
-    * multiplicities, minWeight, balanced, salted views). Call when the
-    * graph's lifetime ends; later accesses still compute correctly, just
-    * uncached.
+    * multiplicities, minWeight, balanced, salted views, out-degrees). Call
+    * when the graph's lifetime ends; later accesses still compute
+    * correctly, just uncached.
     */
   def unpersistCaches(): Unit = {
     persistedCaches.forEach(df => df.unpersist(false))
     persistedCaches.clear()
     saltedCache.clear()
+    synchronized { outDegreeCache = null }
   }
 
   /** Dense vertex universe 0..nodeCount-1 (reference includes ids never seen
@@ -191,6 +193,33 @@ class LinkGraph private (
       .agg(count(lit(1)).as("c"))
       .agg(max($"c"), sum($"c")).first()
     if (r.isNullAt(0)) (0L, 0L) else (r.getLong(0), r.getLong(1))
+  }
+
+  private var outDegreeCache: DataFrame = _
+
+  /** Dense (id, out_deg) over the vertex universe, out_deg = raw out-edge
+    * count = sum of `cnt` over `mult`, one of this graph's compressed
+    * multigraph views; cached hash(id)-partitioned (PageRank's scatter
+    * table — spark.range's split partitioning would satisfy nothing). Every
+    * view yields the same table, so the first caller's view builds it and
+    * later calls in either placement reuse it: repeated PageRank runs on
+    * one graph pin one table, released by unpersistCaches(). Cache entries
+    * are keyed by plan, so a graph over the same edges may find the table
+    * already cached by another graph; it then uses that entry and leaves
+    * its release to the graph that built it.
+    */
+  def outDegrees(mult: DataFrame): DataFrame = synchronized {
+    if (outDegreeCache == null) {
+      val table = vertices
+        .join(mult.groupBy($"src".as("id")).agg(sum($"cnt").as("out_deg")),
+          Seq("id"), "left")
+        .na.fill(0.0, Seq("out_deg"))
+        .repartition(numPartitions, $"id")
+      outDegreeCache =
+        if (table.storageLevel != StorageLevel.NONE) table
+        else registered(table.persist())
+    }
+    outDegreeCache
   }
 
   private val saltedCache =

@@ -56,10 +56,10 @@ case class WccConfig(maxIterations: Int = 200, contractAfter: Int = -1)
   * tie-break so results are exact at convergence.
   *
   * `earlyStop = false` pins the run to exactly `maxIterations` supersteps and
-  * skips the per-round changed-count job entirely: supersteps chain lazily
-  * into fused Catalyst jobs (the PageRank fixed-iteration pattern). Results
-  * are identical whenever the labeling reaches a fixed point within the
-  * budget (a fixed point is stable under further LPA rounds).
+  * skips the per-round changed-count job entirely (the PageRank
+  * fixed-iteration pattern). Results are identical whenever the labeling
+  * reaches a fixed point within the budget (a fixed point is stable under
+  * further LPA rounds).
   */
 case class LabelPropagationConfig(
     maxIterations: Int = 20,
@@ -71,11 +71,9 @@ case class LabelPropagationConfig(
   * `maxIterations` bounds outer trim+claim rounds (condensation depth);
   * `maxPropagationRounds` bounds each inner min-label fixed point in
   * ROUNDS (min-label hops — worst case O(diameter); pointer jumping
-  * collapses decreasing-id chains), independent of how rounds are grouped
-  * into actions: round-4 advice flagged that a batch-counted budget let
-  * the mode-dependent batch size silently scale the effective hop budget
-  * 4x between modes. The default (800) preserves the historical
-  * shuffle-mode budget (200 batches x 4 rounds).
+  * collapses decreasing-id chains), one round per action in both modes.
+  * The default (800) preserves the historical shuffle-mode budget (200
+  * batches x 4 rounds).
   */
 case class SccConfig(
     maxIterations: Int = 100,

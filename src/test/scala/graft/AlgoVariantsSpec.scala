@@ -174,6 +174,56 @@ class AlgoVariantsSpec extends SparkSpec {
     assert(shuffled == base)
   }
 
+  test("shuffle-hash-mode WCC == broadcast mode, plain and AUTO contraction") {
+    import graft.algos.Wcc
+    def comps(cfg: WccConfig, bv: Long) =
+      Wcc.run(g, cfg, broadcastVertices = bv).components.collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val base = comps(WccConfig(), 5000000L)
+    assert(comps(WccConfig(contractAfter = 0), 0L) == base)
+    assert(comps(WccConfig(), 0L) == base)
+  }
+
+  test("repeated PageRank calls on one graph add no cache after the " +
+      "first, both modes") {
+    // localCheckpoint blocks show up in getPersistentRDDs too, so count
+    // the session's cached-query registry instead
+    import org.apache.spark.sql.graft.CachedQueries
+    val before = CachedQueries.count(spark)
+    val graph = LinkGraph(edgesDF(
+      graft.fixtures.Fixtures.randomEdges(300, 1500, seed = 3L)))
+    // warm the graph's own caches: the gather inputs of both modes
+    graph.multiplicities.count()
+    graph.multiplicitiesBySrc.count()
+    PageRank.run(graph).scores.count()
+    val warm = CachedQueries.count(spark)
+    Seq(5000000L -> PageRankConfig(), 0L -> PageRankConfig(5, 0.0))
+      .foreach { case (bv, cfg) =>
+        (1 to 3).foreach { call =>
+          PageRank.run(graph, cfg, broadcastVertices = bv).scores.count()
+          assert(CachedQueries.count(spark) == warm,
+            s"broadcastVertices=$bv call $call")
+        }
+      }
+    graph.unpersistCaches()
+    assert(CachedQueries.count(spark) == before)
+  }
+
+  test("a second graph over the same edges leaves the degree table to " +
+      "the graph that built it") {
+    import org.apache.spark.storage.StorageLevel
+    val edges = edgesDF(graft.fixtures.Fixtures.randomEdges(200, 900, 5L))
+    val graph = LinkGraph(edges)
+    PageRank.run(graph).scores.count()
+    // cache entries are keyed by plan, so the twin's table is the same one
+    val twin = LinkGraph(edges)
+    PageRank.run(twin).scores.count()
+    twin.unpersistCaches()
+    assert(graph.outDegrees(graph.multiplicities).storageLevel !=
+      StorageLevel.NONE)
+    graph.unpersistCaches()
+  }
+
   test("distributed relabel rank == single-window row_number") {
     import org.apache.spark.sql.expressions.Window
     val expected = g.degrees.select(col("id"),
