@@ -157,8 +157,8 @@ object SparkEntry {
     "g_scc" -> ((s, dir) => Scc.run(graph(s, dir)).components),
 
     "g_lp4" -> ((s, dir) =>
-      // pinned iterations -> fixed-iteration mode (no per-round
-      // changed-count jobs; identical labels, see LabelPropagation)
+      // pinned iterations -> fixed-iteration mode (identical labels, see
+      // LabelPropagation)
       LabelPropagation.run(graph(s, dir),
         LabelPropagationConfig(4, earlyStop = false)).labels),
 

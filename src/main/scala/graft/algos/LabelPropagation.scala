@@ -107,8 +107,12 @@ object LabelPropagation {
       .getOrElse(graph.vertices.select($"id", $"id".as("label")))
       .transform(StatsReset.checkpointNoStats)
 
+    // fixed-iteration mode (earlyStop = false) runs the whole budget; a
+    // labeling that reaches its fixed point inside it is unchanged by the
+    // extra rounds, so results match earlyStop runs.
     var changed = Long.MaxValue
-    while (changed > 0 && iteration < config.maxIterations) {
+    def stop = config.earlyStop && changed == 0
+    while (!stop && iteration < config.maxIterations) {
       // mode of neighbor labels; tie -> smallest label. argmax encoded as
       // max(struct(cnt, -label)): higher count wins, then smaller label.
       val counts = und
@@ -119,30 +123,25 @@ object LabelPropagation {
         .groupBy($"id")
         .agg(max(struct($"cnt", (-$"label").as("neg_label"))).as("m"))
         .select($"id", (-$"m.neg_label").as("new_label"))
-      val next = labels
-        .join(steps.side(mode), Seq("id"), "left")
-        .select($"id", coalesce($"new_label", $"label").as("label"),
-          // carried flag: convergence check = filter over materialized
-          // state, not a second vertex-vertex join per round.
-          (coalesce($"new_label", $"label") =!= $"label").as("chg"))
-        .transform(StatsReset.checkpointNoStats)
-      // fixed-iteration mode (earlyStop = false) skips the changed-count
-      // job; a labeling that reaches its fixed point inside the budget is
-      // unchanged by the extra rounds, so results match earlyStop runs.
-      if (config.earlyStop) changed = next.filter($"chg").count()
-      labels = next.select($"id", $"label")
+      // the old label rides along as `prev`: the changed count is observed
+      // inside the round's own checkpoint, so it costs no job.
+      val (next, measured) = Supersteps.materialize(
+        labels.join(steps.side(mode), Seq("id"), "left")
+          .select($"id", coalesce($"new_label", $"label").as("label"),
+            $"label".as("prev")),
+        _.drop("prev").transform(StatsReset.checkpointNoStats),
+        count(when($"label" =!= $"prev", lit(1))))
+      changed = measured.getLong(0)
+      labels = next
       iteration += 1
 
       if (steps.due(iteration,
-          over = changed == 0 || iteration >= config.maxIterations))
+          over = stop || iteration >= config.maxIterations))
         labels = steps.write(iteration, changed.toDouble, labels)
           .transform(StatsReset.checkpointNoStats)
     }
 
     undCache.unpersist()
-    Result(labels,
-      ConvergenceStats(iteration,
-        if (config.earlyStop) changed.toDouble else Double.NaN,
-        config.earlyStop && changed == 0))
+    Result(labels, ConvergenceStats(iteration, changed.toDouble, changed == 0))
   }
 }

@@ -39,14 +39,16 @@ import org.apache.spark.sql.functions._
   *    shuffle; optional `gatherSalt` > 1 splits heavy srcs across
   *    partitions via virtual ids — the distributed counterpart of the
   *    reference's degree-balanced work ranges (graph_ops.rs:331-440).
-  *  - scatter: cached dense degree table LEFT JOIN gathered -> next state.
-  *  - the whole vertex path is hash-aligned: degrees cached hash(id), the
-  *    gather aggregate lands hash(id), the scatter join is co-partitioned,
-  *    and the next senders meet the hash(src) edge cache in place — a
-  *    shuffle-mode superstep executes as ONE stage whose only shuffle is
-  *    the partial-aggregated gather output.
-  *  - the convergence error is a separate tiny job over two cached states;
-  *    in fixed-iteration mode (tolerance <= 0) it is skipped entirely.
+  *  - scatter: rides the gather's exchange. The state rows (id, score as
+  *    `prev`, out_deg) are unioned into the contributions and grouped by
+  *    id with them, so one shuffle yields the next state, whose rows carry
+  *    the old score as `prev` into the superstep's action (not into the
+  *    materialized state). The graph's cached dense degree table only
+  *    seeds round 0 (a resume reads out_deg off its checkpoint and never
+  *    builds it).
+  *  - the error sum |score - prev| is observed inside the superstep's own
+  *    localCheckpoint, so it costs no job in either mode; it only decides
+  *    the stop when tolerance > 0.
   * Placement, lineage cuts (eager localCheckpoint, SURVEY.md §7.4-5),
   * resume and the durable checkpoint cadence follow [[Supersteps]].
   */
@@ -143,24 +145,16 @@ object PageRank {
       if (steps.broadcastMode) (graph.multiplicities, null)
       else if (salt <= 1) (graph.multiplicitiesBySrc, null)
       else graph.multiplicitiesSalted(salt)
-    // Dense (id, out_deg) over the full vertex universe, owned by the
-    // graph (LinkGraph.outDegrees): cached hash(id)-partitioned, so the
-    // scatter join meets the gather aggregate (also hash(id))
-    // co-partitioned, its output stays hash(id), and the next superstep's
-    // senders meet the hash(src) edge cache with no exchange either — one
-    // stage per superstep instead of a re-exchange of the vertex table
-    // every round.
-    val degrees = graph.outDegrees(edges)
-    degrees.count()
-
+    // State rows are (id, score, out_deg). Round 0 reads out_deg off the
+    // graph-owned dense degree table (LinkGraph.outDegrees); a resume reads
+    // it off its checkpoint and never builds the table. localCheckpoint
+    // (eager) truncates the logical plan — persist alone caches data but
+    // lineage still nests per iteration (SURVEY.md §7.4-5).
     var iteration = steps.startIteration
-    // state: (id, score, out_deg). localCheckpoint (eager) truncates the
-    // logical plan — persist alone caches data but lineage still nests per
-    // iteration (SURVEY.md §7.4-5).
     var state: DataFrame = steps.resume
       .map(_._2.select($"id", $"score", $"out_deg"))
-      .getOrElse(degrees.select($"id", lit(initScore).as("score"),
-        $"out_deg"))
+      .getOrElse(graph.outDegrees(edges).select($"id",
+        lit(initScore).as("score"), $"out_deg"))
       .localCheckpoint()
 
     var error = Double.NaN
@@ -178,32 +172,35 @@ object PageRank {
             .select($"vid", $"out_score")
           (v, edges("vsrc") === v("vid"))
         }
-      val gathered = edges
+      // gather + scatter in ONE exchange: every vertex's own state row
+      // (its score as `prev`, out_deg) meets the contributions to it in the
+      // same groupBy(id) instead of a scatter join, which would shuffle the
+      // state a second time each superstep.
+      val contributions = edges
         .join(steps.side(senders), joinKey)
-        .groupBy(edges("dst").as("id"))
-        .agg(sum($"cnt" * $"out_score").as("in_sum"))
-      // scatter: both sides arrive hash-partitioned by id (cached degrees,
-      // aggregate output) — shuffle_hash joins them in place instead of a
-      // per-superstep driver broadcast of `gathered`.
-      val next = degrees
-        .join(gathered.hint("shuffle_hash"), Seq("id"), "left")
+        .select(edges("dst").as("id"), ($"cnt" * $"out_score").as("c"),
+          lit(null).cast("double").as("prev"),
+          lit(null).cast("double").as("out_deg"))
+      val next = contributions
+        .unionByName(state.select($"id", lit(null).cast("double").as("c"),
+          $"score".as("prev"), $"out_deg"))
+        .groupBy($"id")
+        .agg(sum($"c").as("in_sum"), max($"prev").as("prev"),
+          max($"out_deg").as("out_deg"))
         .select($"id",
           (lit(baseScore) + lit(d) * coalesce($"in_sum", lit(0.0)))
             .as("score"),
-          $"out_deg")
+          $"out_deg", $"prev")
       iteration += 1
-      val mat = next.localCheckpoint()
-      if (trackError) {
-        error = mat.as("n").join(state.as("p"), Seq("id"))
-          .agg(sum(abs($"n.score" - $"p.score"))).first().getDouble(0)
-        converged = error < config.tolerance
-      }
+      val (mat, measured) = Supersteps.materialize(next,
+        _.drop("prev").localCheckpoint(), sum(abs($"score" - $"prev")))
+      error = measured.getDouble(0)
+      converged = trackError && error < config.tolerance
       state = mat
 
       if (steps.due(iteration,
           over = converged || iteration >= config.maxIterations))
-        state = steps.write(iteration, if (error.isNaN) -1.0 else error,
-          state).localCheckpoint()
+        state = steps.write(iteration, error, state).localCheckpoint()
     }
 
     Result(state.select($"id", $"score"),

@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   *     ids run against edge direction it degrades to one hop per round, so
   *     the bound is O(diameter) rounds (the standard Pregel-SCC bound —
   *     shallow on real link graphs). Each round is the WCC hash-min +
-  *     pointer-jump round over directed edges, one changed-count +
-  *     checkpoint cycle per round ([[Supersteps]]).
+  *     pointer-jump round over directed edges, one checkpoint per round
+  *     that also observes the changed count ([[Supersteps]]).
   *  3. BACKWARD labels: the same propagation along reversed edges,
   *     bwd(v) = min id over {u : v reaches u} ∪ {v}.
   *  4. CLAIM: fwd(v) = bwd(v) = r  <=>  v and r are mutually reachable and
@@ -69,9 +69,11 @@ object Scc {
     // ONE evaluation of the (possibly expensive, uncached) upstream edge
     // derivation: node count, vertex universe, and the simple directed
     // edge set below all derive from this checkpoint instead of re-running
-    // the derivation per consumer.
-    val raw = graph.edges.select($"src", $"dst")
-      .transform(StatsReset.checkpointNoStats)
+    // the derivation per consumer. Its row count (for the fingerprint) is
+    // observed in the same action.
+    val (raw, rawRows) = Supersteps.materialize(
+      graph.edges.select($"src", $"dst"), StatsReset.checkpointNoStats,
+      count(lit(1)))
     val n = graph.nodeCountFrom(raw)
     require(n > 0, "SCC on empty graph")
     // Checkpoint state = one total labeling DataFrame: resolved vertices
@@ -81,7 +83,7 @@ object Scc {
     // splits the latest state back into resolved/active and restricts the
     // edge set (north rule §4.8).
     val steps = new Supersteps(spark, n, broadcastVertices, checkpointDir,
-      checkpointEvery, "scc", s"scc|n=$n|m=${raw.count()}")
+      checkpointEvery, "scc", s"scc|n=$n|m=${rawRows.getLong(0)}")
 
     // Min-label propagation along `edges` (label flows src -> dst) to the
     // fixed point lbl(v) = min id over in-reachers of v, with pointer
@@ -98,12 +100,13 @@ object Scc {
       var changed = Long.MaxValue
       var rounds = 0
       while (changed > 0 && rounds < config.maxPropagationRounds) {
-        val stepped = Wcc.minLabelRound(edges,
-            lbl.select($"id", $"lbl", $"lbl".as("prev")), steps.side)
-          .select($"id", $"lbl", ($"lbl" =!= $"prev").as("chg"))
-          .transform(StatsReset.checkpointNoStats)
-        changed = stepped.filter($"chg").count()
-        lbl = stepped.select($"id", $"lbl")
+        val (stepped, measured) = Supersteps.materialize(
+          Wcc.minLabelRound(edges,
+            lbl.select($"id", $"lbl", $"lbl".as("prev")), steps.side),
+          _.drop("prev").transform(StatsReset.checkpointNoStats),
+          count(when($"lbl" =!= $"prev", lit(1))))
+        changed = measured.getLong(0)
+        lbl = stepped
         rounds += 1
       }
       (lbl, changed == 0)
@@ -141,25 +144,31 @@ object Scc {
       iteration = meta.iteration
       resolved += st.filter($"scc" >= 0).select($"id", $"scc")
       active = st.filter($"scc" === -1).select($"id")
-      remaining = active.count()
+      // the checkpoint's error field is the active count it was written
+      // with (see the durable write below), so resume reads it, not rows
+      remaining = meta.error.toLong
       if (remaining > 0) activeEdges = restrict(activeEdges, active)
     }
 
     while (remaining > 0 && iteration < config.maxIterations) {
-      // ---- TRIM to fixed point (one checkpoint + one count per peel:
-      // flag every active vertex with has-in AND has-out, then read both
-      // the survivors and the trimmed singletons off the materialized df)
+      // ---- TRIM to fixed point (one checkpoint per peel, which also
+      // observes the trimmed count: flag every active vertex with has-in
+      // AND has-out, then read both the survivors and the trimmed
+      // singletons off the materialized df)
       var trimming = true
       while (trimming && remaining > 0) {
-        val flagged = active
-          .join(activeEdges.select($"src".as("id"), lit(true).as("has_out"))
-            .dropDuplicates("id"), Seq("id"), "left")
-          .join(activeEdges.select($"dst".as("id"), lit(true).as("has_in"))
-            .dropDuplicates("id"), Seq("id"), "left")
-          .select($"id",
-            ($"has_out".isNotNull && $"has_in".isNotNull).as("keep"))
-          .transform(StatsReset.checkpointNoStats)
-        val tCount = flagged.filter(!$"keep").count()
+        val (flagged, measured) = Supersteps.materialize(
+          active
+            .join(activeEdges.select($"src".as("id"),
+              lit(true).as("has_out")).dropDuplicates("id"), Seq("id"),
+              "left")
+            .join(activeEdges.select($"dst".as("id"),
+              lit(true).as("has_in")).dropDuplicates("id"), Seq("id"),
+              "left")
+            .select($"id",
+              ($"has_out".isNotNull && $"has_in".isNotNull).as("keep")),
+          StatsReset.checkpointNoStats, count(when(!$"keep", lit(1))))
+        val tCount = measured.getLong(0)
         if (tCount == 0) trimming = false
         else {
           resolved += flagged.filter(!$"keep")
@@ -192,12 +201,12 @@ object Scc {
           // unresolved actives and reports converged=false honestly.
           iteration = config.maxIterations
         } else {
-          val claimed = fwd
-            .join(bwd.withColumnRenamed("lbl", "blbl"), Seq("id"))
-            .where($"lbl" === $"blbl")
-            .select($"id", $"lbl".as("scc"))
-            .transform(StatsReset.checkpointNoStats)
-          val cCount = claimed.count()
+          val (claimed, measured) = Supersteps.materialize(
+            fwd.join(bwd.withColumnRenamed("lbl", "blbl"), Seq("id"))
+              .where($"lbl" === $"blbl")
+              .select($"id", $"lbl".as("scc")),
+            StatsReset.checkpointNoStats, count(lit(1)))
+          val cCount = measured.getLong(0)
           resolved += claimed
           remaining -= cCount
           if (remaining > 0) {

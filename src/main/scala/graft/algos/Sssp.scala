@@ -3,7 +3,7 @@ package graft.algos
 import graft.{ConvergenceStats, SsspConfig}
 import graft.graph.LinkGraph
 import org.apache.spark.sql.graft.StatsReset
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Single-source shortest paths on directed weighted graphs.
@@ -27,9 +27,6 @@ import org.apache.spark.sql.functions._
 object Sssp {
 
   case class Result(distances: DataFrame, stats: ConvergenceStats)
-
-  /** Infinite-delta relax rounds per convergence-probe action. */
-  private val RelaxRoundsPerProbe = 4
 
   def run(
       graph: LinkGraph,
@@ -69,21 +66,34 @@ object Sssp {
     val steps = new Supersteps(spark, n, broadcastVertices, checkpointDir,
       checkpointEvery, "sssp", s"sssp|s=${config.startNode}" +
         s"|delta=${config.delta}|n=$n|m=${graph.edgeCount}")
+    val deltaFinite = !config.delta.isInfinite
+    // Every materialization of the state observes the whole convergence
+    // probe in its own action: rows pending inside the band below
+    // `threshold`, rows pending anywhere, and the smallest pending distance
+    // (the band-advance target).
+    def measured(df: DataFrame, threshold: Double): (DataFrame, Row) =
+      Supersteps.materialize(df, StatsReset.checkpointNoStats,
+        count(when($"pending" && $"dist" < threshold, 1)),
+        count(when($"pending", 1)),
+        min(when($"pending", $"dist")))
+    var bucket = 0L
+    var done = false
+    // a drained band jumps to the band of the nearest pending vertex (which
+    // the next round's frontier then holds); nothing pending ends the run
+    def advance(probe: Row): Unit =
+      if (probe.getLong(1) == 0L) done = true
+      else if (probe.getLong(0) == 0L)
+        bucket = math.floor(probe.getDouble(2) / config.delta).toLong
+
     var iteration = steps.startIteration
-    var state = steps.resume.map(_._2)
+    // the start (or resumed) state probes against an empty band, so a
+    // resume enters the band of its smallest pending distance
+    val (start, startProbe) = measured(steps.resume.map(_._2)
       .getOrElse(spark.range(1).select(
         lit(config.startNode).as("id"), lit(0.0).as("dist"),
-        lit(true).as("pending")))
-      .transform(StatsReset.checkpointNoStats)
-    val deltaFinite = !config.delta.isInfinite
-    var bucket =
-      if (deltaFinite && steps.resume.isDefined) {
-        // resume into the band of the smallest pending distance
-        val mp = state.filter($"pending").agg(min($"dist")).first()
-        if (mp.isNullAt(0)) 0L
-        else math.floor(mp.getDouble(0) / config.delta).toLong
-      } else 0L
-    var done = false
+        lit(true).as("pending"))), Double.NegativeInfinity)
+    var state = start
+    advance(startProbe)
 
     // One relax round as a lazy transform over `cur`: cand(w) = min over
     // in-band frontier edges (v,w) of dist(v)+weight; pending' = newly
@@ -124,61 +134,23 @@ object Sssp {
             .as("pending"))
     }
 
-    // Round batching (round-4 verdict #4 — SSSP was the one iterative
-    // algorithm still paying two driver-action floors per round): with
-    // infinite delta, run RelaxRoundsPerProbe relax rounds per convergence
-    // probe, in both modes. Min-plus relaxation past frontier exhaustion is
-    // a no-op, so the batch reaches the identical fixed point; the probe
-    // only decides WHEN to stop, never what is computed. Every round
-    // materializes ([[Supersteps]] rule 2). A FINITE delta keeps per-round
-    // probes: the band-advance decision is a driver-side branch.
-    if (!deltaFinite) {
-      while (!done && iteration < config.maxIterations) {
-        val rounds = steps.batch(iteration, config.maxIterations,
-          RelaxRoundsPerProbe)
-        for (_ <- 0 until rounds)
-          state = relaxRound(state, Double.PositiveInfinity)
-            .transform(StatsReset.checkpointNoStats)
-        iteration += rounds
-        // ONE probe action per BATCH over the materialized state: any
-        // vertex still pending means another batch is needed.
-        done = state.agg(count(when($"pending", 1)))
-          .first().getLong(0) == 0L
-        if (steps.due(iteration,
-            over = done || iteration >= config.maxIterations))
-          state = steps.write(iteration, 0.0, state)
-            .transform(StatsReset.checkpointNoStats)
-      }
-    } else while (!done && iteration < config.maxIterations) {
+    // One relax round per action: the probe rides the round's own
+    // checkpoint, so rounds past frontier exhaustion are never run and no
+    // probe job is paid. A finite delta relaxes only the current band.
+    while (!done && iteration < config.maxIterations) {
       val threshold =
         if (deltaFinite) (bucket + 1) * config.delta
         else Double.PositiveInfinity
-      // ONE probe action per round over the cached state: the in-band
-      // frontier size AND the minimum pending distance (the band-advance
-      // target) in a single aggregate — round-2 verdict #3 flagged the
-      // separate count() + min() driver round-trips.
-      val probe = state.agg(
-        count(when($"pending" && $"dist" < threshold, 1)).as("in_band"),
-        min(when($"pending", $"dist")).as("min_pending")).first()
-      if (probe.getLong(0) == 0L) {
-        // this band is drained; jump to the band of the nearest pending
-        // vertex, or stop when nothing is pending anywhere.
-        if (probe.isNullAt(1)) done = true
-        else bucket =
-          math.floor(probe.getDouble(1) / config.delta).toLong
-      } else {
-        // eager localCheckpoint truncates the per-round plan lineage
-        // (SURVEY.md §7.4-5); frontier/dist are cheap views over the cached
-        // RDD.
-        state = relaxRound(state, threshold)
+      val (next, p) = measured(relaxRound(state, threshold), threshold)
+      state = next
+      iteration += 1
+      advance(p)
+      // no write when the loop stops (resume re-derives the band from
+      // state)
+      if (steps.due(iteration,
+          over = done || iteration >= config.maxIterations))
+        state = steps.write(iteration, 0.0, state)
           .transform(StatsReset.checkpointNoStats)
-        iteration += 1
-        // no write when the loop stops on the iteration cap (resume
-        // re-derives the band from state)
-        if (steps.due(iteration, over = iteration >= config.maxIterations))
-          state = steps.write(iteration, 0.0, state)
-            .transform(StatsReset.checkpointNoStats)
-      }
     }
 
     val full = graph.vertices

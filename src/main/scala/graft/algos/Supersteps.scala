@@ -1,8 +1,8 @@
 package graft.algos
 
 import graft.checkpoint.Checkpointer
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, coalesce, lit}
 
 /** The superstep policy PageRank, WCC, SCC, LP and SSSP share, built once
   * per run. It owns four rules; each algorithm keeps only its step
@@ -20,15 +20,17 @@ import org.apache.spark.sql.functions.broadcast
   *     WCC/SCC rounds (two state joins plus the pointer-jump self-join)
   *     inline ~4^k copies of the start state (shuffle-mode WCC on a
   *     70k-edge graph, 4 cores: 84-92 s chained 4 rounds per action vs
-  *     3-4 s at one round per action).
+  *     3-4 s at one round per action). The round's convergence measure
+  *     (error, changed or pending rows) rides that same action
+  *     ([[Supersteps.materialize]]), so a probe costs no job: the round's
+  *     rows carry what the measure compares against (`prev`) into that
+  *     action, instead of a second scan of data the round already wrote.
   *  3. RESUME. The newest complete checkpoint of this algorithm whose
   *     fingerprint matches. The fingerprint names only state-determining
   *     facts, and is evaluated only when checkpointing is on (it usually
   *     costs an edge count).
   *  4. DURABLE CADENCE. A checkpoint is due at multiples of
-  *     `checkpointEvery`, never once the run is over. SSSP's rounds per
-  *     convergence probe are clamped to the next due point, so they land
-  *     on exactly those multiples instead of lcm(batch, every).
+  *     `checkpointEvery`, never once the run is over.
   */
 private[algos] final class Supersteps(
     spark: SparkSession,
@@ -57,15 +59,6 @@ private[algos] final class Supersteps(
 
   def startIteration: Int = resume.fold(0)(_._1.iteration)
 
-  /** Rounds in the batch that starts after `iteration`: up to `rounds`,
-    * never past `limit` or the next due checkpoint (rule 4).
-    */
-  def batch(iteration: Int, limit: Int, rounds: Int): Int = {
-    val r = math.min(rounds, limit - iteration)
-    if (checkpointDir.isEmpty) r
-    else math.min(r, checkpointEvery - iteration % checkpointEvery)
-  }
-
   /** Rule 4: a durable checkpoint is due after `iteration` unless `over`
     * (the run stops here and the caller holds the result).
     */
@@ -77,4 +70,25 @@ private[algos] final class Supersteps(
       converged: Boolean = false): DataFrame =
     Checkpointer.write(checkpointDir.get, algorithm, iteration, error,
       state, fp, converged)
+}
+
+private[algos] object Supersteps {
+
+  /** Rule 2's one action: `cut` (localCheckpoint or
+    * StatsReset.checkpointNoStats) materializes `df`, and the aggregate
+    * `measures` are evaluated over its rows inside that same action
+    * (Dataset.observe) instead of by a second job over the materialized
+    * frame. Returns the materialized frame and the measures in order; a
+    * measure over no rows (sum, min of an empty state) reads as 0, so
+    * callers that need "nothing there" observe a count beside it.
+    */
+  def materialize(df: DataFrame, cut: DataFrame => DataFrame,
+      measures: Column*): (DataFrame, Row) = {
+    val named = measures.zipWithIndex.map { case (m, i) =>
+      coalesce(m, lit(0)).as(s"m$i") }
+    val obs = Observation()
+    val mat = cut(df.observe(obs, named.head, named.tail: _*))
+    val got = obs.get
+    (mat, Row.fromSeq(named.indices.map(i => got(s"m$i"))))
+  }
 }

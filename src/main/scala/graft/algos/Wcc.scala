@@ -118,9 +118,11 @@ object Wcc {
 
     // ONE evaluation of the (possibly expensive, uncached) upstream edge
     // derivation: node count and the canonical set both read this
-    // checkpoint (raw keeps self-loop-only vertices, so max-id is right).
-    val raw = graph.edges.select($"src", $"dst")
-      .transform(StatsReset.checkpointNoStats)
+    // checkpoint (raw keeps self-loop-only vertices, so max-id is right);
+    // its row count (for the fingerprint) is observed in the same action.
+    val (raw, rawRows) = Supersteps.materialize(
+      graph.edges.select($"src", $"dst"), StatsReset.checkpointNoStats,
+      count(lit(1)))
     // sparse mode never materializes the dense universe, so the (possibly
     // astronomically large) max-id+1 is only computed for the fingerprint
     // and the broadcast decision when a checkpoint dir is in play.
@@ -131,24 +133,27 @@ object Wcc {
     // Checkpoint the canonical set BEFORE the union: both union branches
     // reference it, so it would otherwise compute twice during the persist
     // materialization (e.g. the LSH pair pipeline in Dedup.dupGroups).
-    val canon = raw.filter($"src" =!= $"dst")
-      .select(least($"src", $"dst").as("src"),
-        greatest($"src", $"dst").as("dst"))
-      .distinct()
-      .transform(StatsReset.checkpointNoStats)
+    // The undirected cache itself materializes inside the first round.
+    val (canon, canonRows) = Supersteps.materialize(
+      raw.filter($"src" =!= $"dst")
+        .select(least($"src", $"dst").as("src"),
+          greatest($"src", $"dst").as("dst"))
+        .distinct(),
+      StatsReset.checkpointNoStats, count(lit(1)))
     val und = canon
       .union(canon.select($"dst".as("src"), $"src".as("dst")))
       .repartition(graph.numPartitions, $"src")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val undCount = und.count()
 
     // sparse mode has no n; its state size is bounded by the endpoint count
-    // (<= undirected edge count), so gate the broadcast on that instead.
-    // The fingerprint names state-determining facts only: the comp
-    // labeling at iteration k does not depend on maxIterations.
-    val steps = new Supersteps(spark, if (sparseVertices) undCount else n,
+    // (<= undirected edge count = 2 x canonical rows), so gate the
+    // broadcast on that instead. The fingerprint names state-determining
+    // facts only: the comp labeling at iteration k does not depend on
+    // maxIterations.
+    val steps = new Supersteps(spark,
+      if (sparseVertices) 2L * canonRows.getLong(0) else n,
       broadcastVertices, checkpointDir, checkpointEvery, "wcc",
-      s"wcc|n=$n|m=${raw.count()}|sparse=$sparseVertices")
+      s"wcc|n=$n|m=${rawRows.getLong(0)}|sparse=$sparseVertices")
     // a TERMINAL checkpoint (the contraction branch's composed labeling)
     // is final state: return it directly — re-entering the loop would
     // skip the confirming round when iteration >= maxIterations and
@@ -178,22 +183,20 @@ object Wcc {
 
     var changed = Long.MaxValue
     while (changed > 0 && iteration < config.maxIterations) {
-      // the round-start comp rides along as `prev` so the convergence check
-      // is a flag-filter over the materialized state (round-1 verdict #6)
-      val stepped = minLabelRound(und,
-          comp.select($"id", $"comp".as("lbl"), $"comp".as("prev")),
-          steps.side)
-        .select($"id", $"lbl".as("comp"), ($"lbl" =!= $"prev").as("chg"))
-        .transform(StatsReset.checkpointNoStats)
-
-      // ONE action per round serves both the convergence check and the
-      // auto-contraction rule: total state rows + changed rows.
-      val counts = stepped
-        .agg(count(lit(1)), count(when($"chg", lit(1)))).first()
+      // the round-start comp rides along as `prev`; the round's own
+      // checkpoint observes both the convergence check and the
+      // auto-contraction rule's input: total state rows + changed rows.
+      val (stepped, counts) = Supersteps.materialize(
+        minLabelRound(und,
+            comp.select($"id", $"comp".as("lbl"), $"comp".as("prev")),
+            steps.side)
+          .select($"id", $"lbl".as("comp"), $"prev"),
+        _.drop("prev").transform(StatsReset.checkpointNoStats),
+        count(lit(1)), count(when($"comp" =!= $"prev", lit(1))))
       val stateRows = counts.getLong(0)
       changed = counts.getLong(1)
 
-      comp = stepped.select($"id", $"comp")
+      comp = stepped
       iteration += 1
 
       val wantContract =

@@ -98,10 +98,21 @@ class LinkGraph private (
     persistedCaches.add(df); df
   }
 
+  /** Persist `df` as one of this graph's caches. Cache entries are keyed by
+    * plan, so a graph over the same edges may find the identical plan
+    * already cached by another graph; it then uses that entry without
+    * registering it, and leaves its release to the graph that built it —
+    * otherwise this graph's unpersistCaches() would drop a cache the other
+    * graph is still reading (every later round would rebuild it).
+    */
+  private def owned(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else registered(df.persist())
+
   /** Unpersist every cache this graph has materialized (bySrc,
-    * multiplicities, minWeight, balanced, salted views, out-degrees). Call
-    * when the graph's lifetime ends; later accesses still compute
-    * correctly, just uncached.
+    * multiplicities, minWeight, balanced, salted views, out-degrees), and
+    * none that another graph built (see `owned`). Call when the graph's
+    * lifetime ends; later accesses still compute correctly, just uncached.
     */
   def unpersistCaches(): Unit = {
     persistedCaches.forEach(df => df.unpersist(false))
@@ -129,10 +140,9 @@ class LinkGraph private (
     * delta-encodes in the columnar cache (measured 1.5x faster superstep
     * scans than an unsorted cache at 112M edges).
     */
-  lazy val bySrc: DataFrame = registered(
+  lazy val bySrc: DataFrame = owned(
     edges.repartition(numPartitions, $"src")
-      .sortWithinPartitions($"src", $"dst")
-      .persist())
+      .sortWithinPartitions($"src", $"dst"))
 
   /** Compressed multigraph: one row per distinct (src, dst) with the edge
     * multiplicity. PageRank and label propagation are linear in edge
@@ -142,12 +152,11 @@ class LinkGraph private (
     * any 10^12-edge deployment would store. Row-balanced partitions (hub
     * skew, see `balanced`).
     */
-  lazy val multiplicities: DataFrame = registered(
+  lazy val multiplicities: DataFrame = owned(
     edges.groupBy($"src", $"dst")
       .agg(count(lit(1)).cast("double").as("cnt"))
       .repartition(numPartitions)
-      .sortWithinPartitions($"src", $"dst")
-      .persist())
+      .sortWithinPartitions($"src", $"dst"))
 
   /** Compressed multigraph hash-partitioned by src: the shuffle-mode gather
     * cache. InMemoryRelation preserves outputPartitioning, so a
@@ -159,12 +168,11 @@ class LinkGraph private (
     * gathers prefer `multiplicities`; this view is for vertex sets too
     * large to broadcast, where AQE skew-split + salting are the levers.
     */
-  lazy val multiplicitiesBySrc: DataFrame = registered(
+  lazy val multiplicitiesBySrc: DataFrame = owned(
     edges.groupBy($"src", $"dst")
       .agg(count(lit(1)).cast("double").as("cnt"))
       .repartition(numPartitions, $"src")
-      .sortWithinPartitions($"src", $"dst")
-      .persist())
+      .sortWithinPartitions($"src", $"dst"))
 
   /** Min-weight compressed multigraph hash-partitioned by src: the SSSP
     * relaxation cache. Min-plus only ever needs min(weight) per distinct
@@ -173,12 +181,11 @@ class LinkGraph private (
     * `multiplicitiesBySrc` for PageRank/LP, 8x smaller on the Zipf bench
     * graph). Identical fixed point.
     */
-  lazy val minWeightBySrc: DataFrame = registered(
+  lazy val minWeightBySrc: DataFrame = owned(
     edges.groupBy($"src", $"dst")
       .agg(min($"weight").as("weight"))
       .repartition(numPartitions, $"src")
-      .sortWithinPartitions($"src", $"dst")
-      .persist())
+      .sortWithinPartitions($"src", $"dst"))
 
   /** Hub histogram over the compressed multigraph: (max rows for any single
     * src, total rows). One cheap aggregation over the cached
@@ -199,25 +206,20 @@ class LinkGraph private (
 
   /** Dense (id, out_deg) over the vertex universe, out_deg = raw out-edge
     * count = sum of `cnt` over `mult`, one of this graph's compressed
-    * multigraph views; cached hash(id)-partitioned (PageRank's scatter
-    * table — spark.range's split partitioning would satisfy nothing). Every
+    * multigraph views; cached hash(id)-partitioned (it seeds PageRank's
+    * round-0 state). Every
     * view yields the same table, so the first caller's view builds it and
     * later calls in either placement reuse it: repeated PageRank runs on
-    * one graph pin one table, released by unpersistCaches(). Cache entries
-    * are keyed by plan, so a graph over the same edges may find the table
-    * already cached by another graph; it then uses that entry and leaves
-    * its release to the graph that built it.
+    * one graph pin one table, released by unpersistCaches() (unless
+    * another graph over the same edges built it, see `owned`).
     */
   def outDegrees(mult: DataFrame): DataFrame = synchronized {
     if (outDegreeCache == null) {
-      val table = vertices
+      outDegreeCache = owned(vertices
         .join(mult.groupBy($"src".as("id")).agg(sum($"cnt").as("out_deg")),
           Seq("id"), "left")
         .na.fill(0.0, Seq("out_deg"))
-        .repartition(numPartitions, $"id")
-      outDegreeCache =
-        if (table.storageLevel != StorageLevel.NONE) table
-        else registered(table.persist())
+        .repartition(numPartitions, $"id"))
     }
     outDegreeCache
   }
@@ -249,10 +251,9 @@ class LinkGraph private (
     * don't need src co-location, so they read this balanced cache; only
     * shuffle-mode joins use `bySrc`.
     */
-  lazy val balanced: DataFrame = registered(
+  lazy val balanced: DataFrame = owned(
     edges.repartition(numPartitions)
-      .sortWithinPartitions($"src", $"dst")
-      .persist())
+      .sortWithinPartitions($"src", $"dst"))
 
   /** Undirected view: every edge materialized in both directions, the
     * direct analogue of UndirectedCsrGraph (csr.rs:154-172,658-661).

@@ -1,7 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import java.nio.file.{Files, Path, Paths}
 
 /** Named-table IO + graph catalog (SURVEY.md §2.1 S5/S7, §2.14).
   *
@@ -102,6 +103,17 @@ class ParquetTableIO(root: String) extends TableIO {
   }
   private def metaPath(name: String) = dir(name).resolve("_graft_meta.json")
 
+  /** Write `df` as parquet under `dataDir`; returns its row count, observed
+    * inside the write's own job (Dataset.observe) rather than by a second
+    * scan of the files just written.
+    */
+  private def writeCounted(df: DataFrame, dataDir: Path): Long = {
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(dataDir.toString)
+    rows.get("rows").asInstanceOf[Long]
+  }
+
   private def commit(
       name: String, snapshot: Long, rows: Long, dirs: Seq[String],
       attrs: Map[String, String] = Map.empty,
@@ -138,8 +150,7 @@ class ParquetTableIO(root: String) extends TableIO {
       attrs: Map[String, String] = Map.empty): Unit = mutateLock.synchronized {
     val snap = if (exists(name)) currentSnapshot(name) + 1 else 0L
     val dataDir = dir(name).resolve(s"snap-$snap")
-    df.write.mode("overwrite").parquet(dataDir.toString)
-    val rows = df.sparkSession.read.parquet(dataDir.toString).count()
+    val rows = writeCounted(df, dataDir)
     // a replaced table is a new table: attrs AND consumed tags reset
     commit(name, snap, rows, Seq(s"snap-$snap"), attrs)
   }
@@ -149,8 +160,7 @@ class ParquetTableIO(root: String) extends TableIO {
       if (!exists(name)) { writeLocked(name, df); return }
       val snap = currentSnapshot(name) + 1
       val dataDir = dir(name).resolve(s"snap-$snap")
-      df.write.mode("overwrite").parquet(dataDir.toString)
-      val newRows = df.sparkSession.read.parquet(dataDir.toString).count()
+      val newRows = writeCounted(df, dataDir)
       commit(name, snap, currentRows(name) + newRows,
         currentDirs(name) :+ s"snap-$snap", currentAttrs(name),
         currentTags(name))
@@ -161,8 +171,7 @@ class ParquetTableIO(root: String) extends TableIO {
   // block makes the direct call awkward — keep the plain helper)
   private def writeLocked(name: String, df: DataFrame): Unit = {
     val dataDir = dir(name).resolve("snap-0")
-    df.write.mode("overwrite").parquet(dataDir.toString)
-    val rows = df.sparkSession.read.parquet(dataDir.toString).count()
+    val rows = writeCounted(df, dataDir)
     commit(name, 0L, rows, Seq("snap-0"))
   }
 
@@ -183,8 +192,7 @@ class ParquetTableIO(root: String) extends TableIO {
         d.replaceFirst("^snap-[0-9]+-", "")
       if (!exists(name)) {
         val dataDir = dir(name).resolve(s"snap-0-$tag")
-        df.write.mode("overwrite").parquet(dataDir.toString)
-        val rows = df.sparkSession.read.parquet(dataDir.toString).count()
+        val rows = writeCounted(df, dataDir)
         commit(name, 0L, rows, Seq(s"snap-0-$tag"), Map.empty, Seq(tag))
       } else {
         val committed = currentTags(name).toSet ++
@@ -194,9 +202,7 @@ class ParquetTableIO(root: String) extends TableIO {
         if (!committed.contains(tag)) {
           val snap = currentSnapshot(name) + 1
           val dataDir = dir(name).resolve(s"snap-$snap-$tag")
-          df.write.mode("overwrite").parquet(dataDir.toString)
-          val newRows =
-            df.sparkSession.read.parquet(dataDir.toString).count()
+          val newRows = writeCounted(df, dataDir)
           commit(name, snap, currentRows(name) + newRows,
             currentDirs(name) :+ s"snap-$snap-$tag", currentAttrs(name),
             (committed + tag).toSeq)
@@ -217,8 +223,7 @@ class ParquetTableIO(root: String) extends TableIO {
       val all = read(spark, name)
       val snap = currentSnapshot(name) + 1
       val dataDir = dir(name).resolve(s"snap-$snap")
-      all.write.mode("overwrite").parquet(dataDir.toString)
-      val rows = spark.read.parquet(dataDir.toString).count()
+      val rows = writeCounted(all, dataDir)
       commit(name, snap, rows, Seq(s"snap-$snap"), currentAttrs(name),
         tags.toSeq)
     }

@@ -55,9 +55,10 @@ case class WccConfig(maxIterations: Int = 200, contractAfter: Int = -1)
   * are synchronous LPA (Raghavan et al.) with deterministic smallest-label
   * tie-break so results are exact at convergence.
   *
-  * `earlyStop = false` pins the run to exactly `maxIterations` supersteps and
-  * skips the per-round changed-count job entirely (the PageRank
-  * fixed-iteration pattern). Results are identical whenever the labeling
+  * `earlyStop = false` pins the run to exactly `maxIterations` supersteps
+  * (the PageRank fixed-iteration pattern); the per-round changed count is
+  * observed inside each round's checkpoint either way, so both modes run
+  * the same jobs per round. Results are identical whenever the labeling
   * reaches a fixed point within the budget (a fixed point is stable under
   * further LPA rounds).
   */

@@ -471,7 +471,18 @@ class CatalogServer(
   }
 
   private def compute(g: String, algo: String): String = sweeping {
-    val graph = catalog.graph(spark, g)
+    // the version-keyed node count (set by CREATE, or by the first LIST or
+    // COMPUTE after a mutation) spares every call its max-id scan
+    val graph = graft.graph.LinkGraph(catalog.table(spark, g),
+      nodeCount = nodeCount(g))
+    // the sweep unpersists the RDDs; unpersistCaches also drops the
+    // graph's cached-query entries, which would otherwise pile up per call
+    // and be matched, stale, by the next COMPUTE over the same files
+    try computeOn(graph, g, algo) finally graph.unpersistCaches()
+  }
+
+  private def computeOn(graph: graft.graph.LinkGraph, g: String,
+      algo: String): String = {
     // scalar triangle count mirrors the reference's TriangleCountResult
     // reply — a metrics struct, not a stored property (server.rs:461-474);
     // the per-vertex variant lands as a property like every other

@@ -36,6 +36,33 @@ class CatalogAppendSpec extends SparkSpec {
     assert(dataDirs >= 3) // history retained (snapshots are immutable)
   }
 
+  test("manifest row counts match the data after write, append, " +
+      "tagged append, compaction and an empty write") {
+    val s = spark
+    import s.implicits._
+    val io = new ParquetTableIO(
+      Files.createTempDirectory("graft-rows").toString)
+    def rowsMatch(step: String, want: Long): Unit = {
+      assert(io.read(spark, "t").count() == want, step)
+      assert(io.rows("t") == want, step)
+    }
+    io.write("t", spark.range(0, 1000, 1, 4).toDF().filter($"id" % 3 === 0))
+    rowsMatch("write", 334L)
+    io.append("t", spark.range(0, 10, 1, 3).toDF())
+    rowsMatch("append", 344L)
+    io.appendTagged("t", spark.range(0, 5).toDF(), "b1")
+    io.appendTagged("t", spark.range(0, 5).toDF(), "b1")
+    rowsMatch("tagged append, replayed", 349L)
+    io.compact(spark, "t")
+    rowsMatch("compact", 349L)
+    io.write("t", spark.range(0, 0).toDF())
+    rowsMatch("empty write", 0L)
+    io.write("t", Seq.empty[(Long, Double)].toDF("id", "x"))
+    rowsMatch("empty local write", 0L)
+    io.append("u", spark.range(0, 7).toDF())
+    assert(io.rows("u") == 7L && io.read(spark, "u").count() == 7L)
+  }
+
   test("attrs commit atomically with write; setAttr bumps version") {
     val s = spark
     import s.implicits._

@@ -394,6 +394,37 @@ class CatalogServerSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("repeated COMPUTEs leave the cached-query registry flat") {
+    // the RDD sweep alone left each COMPUTE's graph caches registered as
+    // cached queries, so the registry grew with the first COMPUTE of
+    // every algorithm and later COMPUTEs matched those stale entries
+    import org.apache.spark.sql.graft.CachedQueries
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-serve").toString
+    val cat = new GraphCatalog(new ParquetTableIO(s"$root/cat"))
+    Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 0L, 1.0), (3L, 4L, 1.0))
+      .toDF("src", "dst", "weight").write.parquet(s"$root/e")
+    val srv = new CatalogServer(spark, cat)
+    try {
+      val sock = new Socket("127.0.0.1", srv.boundPort)
+      val in = new BufferedReader(
+        new InputStreamReader(sock.getInputStream, "UTF-8"))
+      val out = new PrintWriter(sock.getOutputStream, true)
+      out.println(s"CREATE g $root/e")
+      assertCreated(in.readLine(), nc = 5, ec = 4)
+      val baseline = CachedQueries.count(spark)
+      for (algo <- Seq("page_rank", "wcc", "label_propagation", "sssp:0");
+           _ <- 0 until 2) {
+        out.println(s"COMPUTE g $algo")
+        assert(in.readLine().startsWith("OK "), algo)
+        assert(CachedQueries.count(spark) == baseline,
+          s"cached queries grew after COMPUTE g $algo")
+      }
+      out.println("QUIT"); sock.close()
+    } finally srv.close()
+  }
+
   test("GETB streams the property as a typed Arrow IPC stream") {
     import org.apache.arrow.memory.RootAllocator
     import org.apache.arrow.vector.{BigIntVector, Float8Vector}
