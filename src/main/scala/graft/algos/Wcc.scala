@@ -92,6 +92,27 @@ object Wcc {
         least(col("p.lbl"), coalesce(col("jlbl"), col("p.lbl"))).as("lbl"))
   }
 
+  /** The undirected edge table a round scans: both directions of the
+    * canonical edges, built once per run. Shuffle mode caches it: the
+    * cache keeps the hash(src) partitioning that the state joins meet
+    * without an exchange on the edge side. Broadcast mode needs no
+    * partitioning and checkpoints it lazily instead (released like the
+    * run's other checkpoints; `unpersist` is a no-op on it). A round reads
+    * the neighbour-min aggregation twice, for the propagated labels and
+    * for the pointer-jump side, and AQE reuses that exchange over an RDD
+    * scan but not over two scans of one cached table (each becomes its
+    * own table-cache stage), so a cached table would run the round's edge
+    * shuffle twice.
+    */
+  private[algos] def undirected(canon: DataFrame, numPartitions: Int,
+      broadcastMode: Boolean): DataFrame = {
+    val und = canon
+      .union(canon.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(numPartitions, col("src"))
+    if (broadcastMode) und.localCheckpoint(eager = false)
+    else und.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
   /** @param sparseVertices when true, the component state is initialized
     *   from the CANONICAL edge endpoints only instead of the dense 0..n-1
     *   universe — vertices with no incident edge are absent from the
@@ -131,20 +152,15 @@ object Wcc {
     // Undirected simple view: duplicates are idempotent under min, drop them
     // once up front to shrink the join input; self-loops are no-ops.
     // Checkpoint the canonical set BEFORE the union: both union branches
-    // reference it, so it would otherwise compute twice during the persist
-    // materialization (e.g. the LSH pair pipeline in Dedup.dupGroups).
-    // The undirected cache itself materializes inside the first round.
+    // reference it, so it would otherwise compute twice when the
+    // undirected table materializes (e.g. the LSH pair pipeline in
+    // Dedup.dupGroups).
     val (canon, canonRows) = Supersteps.materialize(
       raw.filter($"src" =!= $"dst")
         .select(least($"src", $"dst").as("src"),
           greatest($"src", $"dst").as("dst"))
         .distinct(),
       StatsReset.checkpointNoStats, count(lit(1)))
-    val und = canon
-      .union(canon.select($"dst".as("src"), $"src".as("dst")))
-      .repartition(graph.numPartitions, $"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
     // sparse mode has no n; its state size is bounded by the endpoint count
     // (<= undirected edge count = 2 x canonical rows), so gate the
     // broadcast on that instead. The fingerprint names state-determining
@@ -159,10 +175,10 @@ object Wcc {
     // skip the confirming round when iteration >= maxIterations and
     // misreport a finished run as converged=false
     steps.resume.filter(_._1.converged).foreach { case (meta, state) =>
-      und.unpersist()
       return Result(state.transform(StatsReset.checkpointNoStats),
         ConvergenceStats(meta.iteration, 0.0, converged = true))
     }
+    val und = undirected(canon, graph.numPartitions, steps.broadcastMode)
     var iteration = steps.startIteration
     // Eager localCheckpoint per round: the pointer-jump self-join would
     // otherwise DOUBLE the logical plan every round (SURVEY.md §7.4-5).

@@ -2,10 +2,14 @@ package graft.bench
 
 import java.nio.file.{Files, Paths}
 
-/** Batch plan dumper: writes `<outDir>/<query>_<suffix>.txt` with the
-  * formatted physical plan (after one execution, so AQE's final plan with
-  * reuse markers is what prints) for each named query — the round-6
-  * before/after plan evidence (plans/r06/). One JVM for all queries.
+/** Plan inspector for driver queries: writes `<outDir>/<query>_<suffix>.txt`
+  * with the formatted physical plan of SparkEntry.queries(query) for each
+  * named query (one name inspects one query), after one execution, so
+  * AQE's final plan with its reuse markers is what prints: PushedFilters,
+  * ReadSchema, WholeStageCodegen spans, ReusedExchange/ReusedSubquery
+  * markers, join strategies — the artifact the "explain and iterate until
+  * it's the plan you'd want" loop reads, and the round-6 before/after plan
+  * evidence (plans/r06/). One JVM for all queries.
   *
   * Usage: runMain graft.bench.PlanDumpAll <outDir> <suffix> <q1,q2,...> [sfDir]
   */

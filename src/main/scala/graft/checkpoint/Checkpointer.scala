@@ -1,5 +1,7 @@
 package graft.checkpoint
 
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import graft.io.Sidecar
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, Path}
@@ -11,10 +13,13 @@ import scala.util.Try
   * csr.rs:247-314).
   *
   * Every k supersteps the algorithm driver writes the full vertex state as
-  * parquet plus a `_meta.json` sidecar carrying (algorithm, iteration, error,
-  * partition count, per-partition row counts, total rows). A checkpoint is
-  * only considered complete once `_meta.json` exists — parquet is written
-  * first, so a crash mid-write leaves the previous checkpoint authoritative.
+  * parquet under `ckpt-NNNNNN/state` plus a `_meta.json` sidecar, the
+  * [[Meta]] record (algorithm, iteration, error, partition count,
+  * per-partition row counts, total rows, fingerprint, converged) written
+  * and read by [[graft.io.Sidecar]], the engine's one sidecar codec. A
+  * checkpoint is only considered complete once `_meta.json` exists —
+  * parquet is written first and the sidecar lands by atomic move, so a
+  * crash mid-write leaves the previous checkpoint authoritative.
   * `latest` finds the newest complete checkpoint so a restarted run resumes
   * mid-iteration-sequence instead of from scratch. Writing + re-reading also
   * truncates the growing Catalyst plan/lineage of the iterative loop
@@ -27,48 +32,12 @@ object Checkpointer {
       iteration: Int,
       error: Double,
       numPartitions: Int,
+      // element type for Jackson: Seq[Long] erases to Seq[Object]
+      @JsonDeserialize(contentAs = classOf[java.lang.Long])
       partitionRows: Seq[Long],
       totalRows: Long,
       fingerprint: String = "",
       converged: Boolean = false)
-
-  private def metaToJson(m: Meta): String = {
-    val rows = m.partitionRows.mkString("[", ",", "]")
-    s"""{"algorithm":"${m.algorithm}","iteration":${m.iteration},""" +
-      s""""error":${m.error},"numPartitions":${m.numPartitions},""" +
-      s""""partitionRows":$rows,"totalRows":${m.totalRows},""" +
-      s""""fingerprint":"${m.fingerprint}",""" +
-      s""""converged":${m.converged}}"""
-  }
-
-  private def metaFromJson(s: String): Meta = {
-    def field(name: String): String = {
-      val i = s.indexOf("\"" + name + "\":") + name.length + 3
-      val rest = s.substring(i)
-      rest.takeWhile(c => c != ',' && c != '}' && c != ']')
-    }
-    val rowsStr = {
-      val i = s.indexOf("\"partitionRows\":[") + "\"partitionRows\":[".length
-      s.substring(i, s.indexOf("]", i))
-    }
-    Meta(
-      algorithm = field("algorithm").stripPrefix("\"").stripSuffix("\""),
-      iteration = field("iteration").trim.toInt,
-      error = field("error").trim.toDouble,
-      numPartitions = field("numPartitions").trim.toInt,
-      partitionRows =
-        if (rowsStr.trim.isEmpty) Seq.empty
-        else rowsStr.split(",").map(_.trim.toLong).toSeq,
-      totalRows = field("totalRows").trim.toLong,
-      fingerprint =
-        if (s.contains("\"fingerprint\":"))
-          field("fingerprint").stripPrefix("\"").stripSuffix("\"")
-        else "",
-      converged =
-        if (s.contains("\"converged\":"))
-          field("converged").trim.toBoolean
-        else false)
-  }
 
   private def dir(root: String, iteration: Int): Path =
     Paths.get(root, f"ckpt-$iteration%06d")
@@ -96,8 +65,7 @@ object Checkpointer {
       numPartitions = perPart.size, partitionRows = perPart,
       totalRows = perPart.sum, fingerprint = fingerprint,
       converged = converged)
-    Files.createDirectories(d)
-    Files.writeString(d.resolve("_meta.json"), metaToJson(meta))
+    Sidecar.write(d.resolve("_meta.json"), meta)
     reread
   }
 
@@ -124,7 +92,7 @@ object Checkpointer {
       .reverse
     ordered.view.flatMap { p =>
       Try {
-        val meta = metaFromJson(Files.readString(p.resolve("_meta.json")))
+        val meta = Sidecar.read[Meta](p.resolve("_meta.json"))
         (meta, spark.read.parquet(p.resolve("state").toString))
       }.toOption
     }.find { case (meta, _) =>

@@ -85,7 +85,7 @@ object Dedup {
     // self-join sides, over-cap joins, sizes); without materialization each
     // reference re-tokenizes and re-explodes the full corpus — measured 24
     // parquet scans / 18 explode passes in the sibling minHashLsh plan
-    // before this checkpoint (PlanDump, round 4)
+    // before this checkpoint (bench/PlanDumpAll, round 4)
     val sh = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
       docShingles(docs, k))
     if (maxShingleDf <= 0) {

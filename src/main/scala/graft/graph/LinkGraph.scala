@@ -13,14 +13,15 @@ import org.apache.spark.storage.StorageLevel
   * (csr.rs:32-45): Sorted = sortWithinPartitions, Deduplicated = distinct +
   * self-loop drop (csr.rs:897-948 removes both).
   *
-  * Scale design: `partitioned` repartitions edges by src once and persists;
-  * because InMemoryRelation preserves outputPartitioning, every subsequent
-  * per-superstep join on src reuses that exchange instead of reshuffling the
-  * (large) edge side each iteration. Vertex-side tables are broadcast when
-  * small. Skewed dst hubs in gather aggregations are absorbed by partial
-  * (map-side) aggregation; join-side skew falls back to AQE skew-join plus
-  * the hub-salting helpers below (SURVEY.md §2.11 — degree-balanced
-  * partitioning is the reference's skew story, graph_ops.rs:331-440).
+  * Scale design: `multiplicitiesBySrc`/`minWeightBySrc` repartition the
+  * compressed edges by src once and persist; because InMemoryRelation
+  * preserves outputPartitioning, every subsequent per-superstep join on src
+  * reuses that exchange instead of reshuffling the (large) edge side each
+  * iteration. Vertex-side tables are broadcast when small. Skewed dst hubs
+  * in gather aggregations are absorbed by partial (map-side) aggregation;
+  * join-side skew falls back to AQE skew-join plus the hub-salting helpers
+  * below (SURVEY.md §2.11 — degree-balanced partitioning is the
+  * reference's skew story, graph_ops.rs:331-440).
   */
 class LinkGraph private (
     val edges: DataFrame,
@@ -47,10 +48,13 @@ class LinkGraph private (
     * base scores and the dense vertex universe all depend on it.
     */
   @volatile private var cachedNodeCount: Long = explicitNodeCount
+  @volatile private var cachedEdgeCount: Long = -1L
 
   def nodeCount: Long = {
-    if (cachedNodeCount < 0)
-      cachedNodeCount = maxIdPlusOne(countSource.getOrElse(edges))
+    if (cachedNodeCount < 0) countSource match {
+      case Some(cs) => cachedNodeCount = maxIdPlusOne(cs)
+      case None => scanCounts()
+    }
     cachedNodeCount
   }
 
@@ -85,7 +89,24 @@ class LinkGraph private (
     if (row.isNullAt(0)) 0L else row.getLong(0) + 1L
   }
 
-  lazy val edgeCount: Long = edges.count()
+  def edgeCount: Long = {
+    if (cachedEdgeCount < 0) {
+      if (cachedNodeCount < 0 && countSource.isEmpty) scanCounts()
+      else cachedEdgeCount = edges.count()
+    }
+    cachedEdgeCount
+  }
+
+  /** Max-id node count and edge count in one scan of `edges`, for a graph
+    * whose node count comes from its own edges (no explicit count, no
+    * count source): a fingerprint needs both.
+    */
+  private def scanCounts(): Unit = {
+    val row = edges
+      .agg(max(greatest(col("src"), col("dst"))), count(lit(1))).first()
+    cachedNodeCount = if (row.isNullAt(0)) 0L else row.getLong(0) + 1L
+    cachedEdgeCount = row.getLong(1)
+  }
 
   // Every persisted cache this graph materializes registers here, so a
   // caller that is DONE with the graph can release executor memory
@@ -109,8 +130,8 @@ class LinkGraph private (
     if (df.storageLevel != StorageLevel.NONE) df
     else registered(df.persist())
 
-  /** Unpersist every cache this graph has materialized (bySrc,
-    * multiplicities, minWeight, balanced, salted views, out-degrees), and
+  /** Unpersist every cache this graph has materialized (multiplicities,
+    * multiplicitiesBySrc, minWeightBySrc, salted views, out-degrees), and
     * none that another graph built (see `owned`). Call when the graph's
     * lifetime ends; later accesses still compute correctly, just uncached.
     */
@@ -132,25 +153,15 @@ class LinkGraph private (
   def vertices: DataFrame =
     spark.range(0, nodeCount, 1, numPartitions).toDF("id")
 
-  /** Out-view: edges hash-partitioned by src AND sorted within partitions
-    * by (src, dst), persisted for iteration reuse — the distributed CSR
-    * build (SURVEY.md §1.3/§2.8). The sort is a one-time build cost
-    * (exactly like the reference's CSR construction sort,
-    * csr.rs:886-895) that pays back every superstep: sorted src
-    * delta-encodes in the columnar cache (measured 1.5x faster superstep
-    * scans than an unsorted cache at 112M edges).
-    */
-  lazy val bySrc: DataFrame = owned(
-    edges.repartition(numPartitions, $"src")
-      .sortWithinPartitions($"src", $"dst"))
-
   /** Compressed multigraph: one row per distinct (src, dst) with the edge
     * multiplicity. PageRank and label propagation are linear in edge
     * multiplicity (contribution = cnt * out_score, vote weight = cnt), so
     * they can run on this 8x-smaller table (measured compression on the
     * Zipf bench graph) with identical results — the weighted-adjacency form
-    * any 10^12-edge deployment would store. Row-balanced partitions (hub
-    * skew, see `balanced`).
+    * any 10^12-edge deployment would store. Row-balanced (round-robin)
+    * partitions: hub-skewed graphs make hash(src) partitions uneven, and
+    * broadcast-mode gathers need no src co-location (the reference's
+    * degree-balanced work ranges, graph_ops.rs:331-440).
     */
   lazy val multiplicities: DataFrame = owned(
     edges.groupBy($"src", $"dst")
@@ -241,20 +252,6 @@ class LinkGraph private (
       (registered(salted), registered(hubs))
     })
 
-  /** Degree-balanced view: round-robin partitions of ~equal row count,
-    * sorted by (src, dst) within each for columnar-cache delta encoding.
-    * This is the reference's degree-balanced work partitioning
-    * (graph_ops.rs:331-440,479-509) as a storage layout: hub-skewed graphs
-    * (Zipf actors) make hash(src) partitions pathologically uneven — one
-    * hub actor owning 8% of edges caps every stage at that partition's
-    * size, which measured as flat-lined scaling. Broadcast-mode gathers
-    * don't need src co-location, so they read this balanced cache; only
-    * shuffle-mode joins use `bySrc`.
-    */
-  lazy val balanced: DataFrame = owned(
-    edges.repartition(numPartitions)
-      .sortWithinPartitions($"src", $"dst"))
-
   /** Undirected view: every edge materialized in both directions, the
     * direct analogue of UndirectedCsrGraph (csr.rs:154-172,658-661).
     */
@@ -293,7 +290,8 @@ class LinkGraph private (
     * single column; parquet row-group min/max skipping applies when the
     * table is sorted by the filtered key), collected because a single
     * adjacency list is driver-sized by definition. NOT for per-vertex
-    * loops — algorithms traverse adjacency distributively via `bySrc`.
+    * loops — algorithms traverse adjacency distributively via the cached
+    * views above.
     * Neighbor arrays come back sorted (the reference's Sorted-layout
     * rendering), duplicates preserved.
     */
@@ -506,7 +504,7 @@ object LinkGraph {
         spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
     val norm = layout match {
       case Layout.AsIs => edges
-      case Layout.Sorted => edges // ordering materialized lazily in bySrc
+      case Layout.Sorted => edges // the cached views sort within partitions
       case Layout.Deduplicated =>
         // min weight per surviving edge, NOT dropDuplicates — the latter
         // keeps an arbitrary duplicate's weight (partition-order-

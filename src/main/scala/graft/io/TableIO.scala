@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 /** Named-table IO + graph catalog (SURVEY.md §2.1 S5/S7, §2.14).
   *
@@ -74,12 +74,16 @@ trait TableIO {
 }
 
 /** Parquet-directory backend. Snapshot semantics: each write/append creates
-  * data under a new `snap-<n>` dir and atomically flips the sidecar, whose
-  * `dirs` array is the manifest of data dirs making up the current
-  * snapshot — writes replace it, appends extend it. Readers always see a
-  * complete snapshot; history is retained for lineage.
+  * data under a new `snap-<n>` dir and atomically flips the table's
+  * `_graft_meta.json` sidecar, the [[ParquetTableIO.Manifest]] written and
+  * read by [[Sidecar]], the engine's one sidecar codec. Its `dirs` list
+  * names the data dirs making up the current snapshot — writes replace
+  * it, appends extend it. Readers always see a complete snapshot; history
+  * is retained for lineage. Every mutation reads the manifest once and
+  * commits its successor.
   */
 class ParquetTableIO(root: String) extends TableIO {
+  import ParquetTableIO.Manifest
 
   // One lock for every sidecar read-modify-write: two concurrent mutators
   // (e.g. a streaming append racing a daemon transform on the same
@@ -93,199 +97,83 @@ class ParquetTableIO(root: String) extends TableIO {
   private val mutateLock = new Object
 
   private def dir(name: String) = {
-    // names come off the network (the serving daemon's verbs) and are
-    // embedded raw in both the filesystem path and the sidecar JSON —
-    // reject separators/'..' (path traversal out of the catalog root)
-    // and quotes/braces (sidecar injection) in one charset check
+    // names come off the network (the serving daemon's verbs) and become
+    // a filesystem path: reject separators/'..' (path traversal out of
+    // the catalog root) in one charset check
     require(name.matches("[A-Za-z0-9_.-]+") && name.exists(_.isLetterOrDigit),
       s"bad table name: $name")
     Paths.get(root, name)
   }
   private def metaPath(name: String) = dir(name).resolve("_graft_meta.json")
 
-  /** Write `df` as parquet under `dataDir`; returns its row count, observed
-    * inside the write's own job (Dataset.observe) rather than by a second
-    * scan of the files just written.
+  private def manifest(name: String): Manifest =
+    Sidecar.read[Manifest](metaPath(name))
+
+  /** The table's manifest, or the empty one a first write grows from. */
+  private def current(name: String): Manifest =
+    if (exists(name)) manifest(name)
+    else Manifest(name, -1L, 0L, Seq.empty, Seq.empty, Map.empty)
+
+  private def commit(m: Manifest): Unit = Sidecar.write(metaPath(m.name), m)
+
+  /** `m` grown by `df` written as one more data dir `snap-<n><suffix>` of
+    * the next snapshot. The row count is observed inside the write's own
+    * job (Dataset.observe) rather than by a second scan of the files.
     */
-  private def writeCounted(df: DataFrame, dataDir: Path): Long = {
+  private def appended(m: Manifest, df: DataFrame,
+      suffix: String): Manifest = {
+    val snap = m.snapshot + 1
+    val dataDir = s"snap-$snap$suffix"
     val rows = Observation()
     df.observe(rows, count(lit(1)).as("rows"))
-      .write.mode("overwrite").parquet(dataDir.toString)
-    rows.get("rows").asInstanceOf[Long]
+      .write.mode("overwrite").parquet(dir(m.name).resolve(dataDir).toString)
+    m.copy(snapshot = snap, dirs = m.dirs :+ dataDir,
+      rows = m.rows + rows.get("rows").asInstanceOf[Long])
   }
 
-  private def commit(
-      name: String, snapshot: Long, rows: Long, dirs: Seq[String],
-      attrs: Map[String, String] = Map.empty,
-      tags: Seq[String] = Seq.empty): Unit = {
-    Files.createDirectories(dir(name))
-    val dirsJson = dirs.map(d => s""""$d"""").mkString("[", ",", "]")
-    // consumed appendTagged tags, persisted INDEPENDENTLY of the data-dir
-    // names: compaction rewrites the dirs to one untagged snap dir, and
-    // the replay-dedup contract must survive it
-    val tagsJson = tags.distinct.sorted
-      .map(t => s""""$t"""").mkString("[", ",", "]")
-    // `attrs` is the LAST sidecar field: the ad-hoc field parser
-    // (metaField) scans forward to the next ',' / '}', which is only
-    // correct while every earlier field is scalar or a flat array.
-    val attrsJson = attrs.toSeq.sorted
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
-    // Write-to-temp + ATOMIC_MOVE, never truncate-in-place (round-4
-    // advice): the serving daemon runs GET/LIST fully concurrent with
-    // COMPUTE's writeProperty, and a reader racing a plain writeString
-    // could observe an empty or half-written sidecar. Same-directory move,
-    // so the rename is atomic on every POSIX filesystem; readers see the
-    // old manifest or the new one, nothing in between.
-    val tmp = dir(name).resolve(s"._graft_meta.$snapshot.tmp")
-    Files.writeString(tmp,
-      s"""{"name":"$name","snapshot":$snapshot,"rows":$rows,""" +
-        s""""dirs":$dirsJson,"tags":$tagsJson,"attrs":$attrsJson}""")
-    Files.move(tmp, metaPath(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def data(spark: SparkSession, m: Manifest): DataFrame =
+    spark.read.parquet(m.dirs.map(d => dir(m.name).resolve(d).toString): _*)
 
   override def write(
       name: String, df: DataFrame,
       attrs: Map[String, String] = Map.empty): Unit = mutateLock.synchronized {
-    val snap = if (exists(name)) currentSnapshot(name) + 1 else 0L
-    val dataDir = dir(name).resolve(s"snap-$snap")
-    val rows = writeCounted(df, dataDir)
     // a replaced table is a new table: attrs AND consumed tags reset
-    commit(name, snap, rows, Seq(s"snap-$snap"), attrs)
+    commit(appended(
+      Manifest(name, current(name).snapshot, 0L, Seq.empty, Seq.empty, attrs),
+      df, ""))
   }
 
   override def append(name: String, df: DataFrame): Unit =
-    mutateLock.synchronized {
-      if (!exists(name)) { writeLocked(name, df); return }
-      val snap = currentSnapshot(name) + 1
-      val dataDir = dir(name).resolve(s"snap-$snap")
-      val newRows = writeCounted(df, dataDir)
-      commit(name, snap, currentRows(name) + newRows,
-        currentDirs(name) :+ s"snap-$snap", currentAttrs(name),
-        currentTags(name))
-    }
-
-  // first-write body shared by append's not-yet-created branch (monitors
-  // are reentrant, but the early `return` inside write's synchronized
-  // block makes the direct call awkward — keep the plain helper)
-  private def writeLocked(name: String, df: DataFrame): Unit = {
-    val dataDir = dir(name).resolve("snap-0")
-    val rows = writeCounted(df, dataDir)
-    commit(name, 0L, rows, Seq("snap-0"))
-  }
+    mutateLock.synchronized { commit(appended(current(name), df, "")) }
 
   override def appendTagged(
       name: String, df: DataFrame, tag: String): Unit =
     mutateLock.synchronized {
       require(tag.matches("[A-Za-z0-9_-]+"), s"bad tag: $tag")
-      // The consumed-tag set lives in the sidecar's `tags` array, so the
+      // The consumed-tag set lives in the manifest's `tags`, so the
       // replay-dedup contract SURVIVES compaction (which rewrites the data
-      // dirs to one untagged snap dir). The tag also rides the data-dir
-      // name for human lineage, and legacy pre-tags sidecars are still
-      // honored by parsing the tag back out of the dir name: EXACTLY what
-      // follows the "snap-<n>-" prefix — a bare endsWith("-$tag") would
-      // false-match tag "b" against a dir committed for tag "a-b" (tags
-      // may contain '-') and silently DROP the increment (round-3 verdict
-      // #2 — the failure mode is data loss).
-      def dirTag(d: String): String =
-        d.replaceFirst("^snap-[0-9]+-", "")
-      if (!exists(name)) {
-        val dataDir = dir(name).resolve(s"snap-0-$tag")
-        val rows = writeCounted(df, dataDir)
-        commit(name, 0L, rows, Seq(s"snap-0-$tag"), Map.empty, Seq(tag))
-      } else {
-        val committed = currentTags(name).toSet ++
-          currentDirs(name).collect {
-            case d if d != dirTag(d) => dirTag(d)
-          }
-        if (!committed.contains(tag)) {
-          val snap = currentSnapshot(name) + 1
-          val dataDir = dir(name).resolve(s"snap-$snap-$tag")
-          val newRows = writeCounted(df, dataDir)
-          commit(name, snap, currentRows(name) + newRows,
-            currentDirs(name) :+ s"snap-$snap-$tag", currentAttrs(name),
-            (committed + tag).toSeq)
-        } // else: tag already committed — replayed micro-batch, skip
-      }
+      // dirs to one untagged snap dir); the tag also rides the data-dir
+      // name for human lineage. Matching is exact: tags may contain '-'.
+      val m = current(name)
+      if (!m.tags.contains(tag)) // else: replayed micro-batch, skip
+        commit(appended(m, df, s"-$tag").copy(tags = m.tags :+ tag))
     }
 
   override def compact(spark: SparkSession, name: String): Unit =
     mutateLock.synchronized {
       require(exists(name), s"table $name not found under $root")
-      if (currentDirs(name).size <= 1) return
-      // carry the consumed-tag set forward: the tagged data dirs are about
-      // to leave the manifest, and a replayed micro-batch after compaction
-      // must still be recognized as committed
-      def dirTag(d: String): String = d.replaceFirst("^snap-[0-9]+-", "")
-      val tags = currentTags(name).toSet ++
-        currentDirs(name).collect { case d if d != dirTag(d) => dirTag(d) }
-      val all = read(spark, name)
-      val snap = currentSnapshot(name) + 1
-      val dataDir = dir(name).resolve(s"snap-$snap")
-      val rows = writeCounted(all, dataDir)
-      commit(name, snap, rows, Seq(s"snap-$snap"), currentAttrs(name),
-        tags.toSeq)
+      val m = manifest(name)
+      // tags and attrs carry forward: a replayed micro-batch after
+      // compaction must still be recognized as committed
+      if (m.dirs.size > 1) {
+        val all = data(spark, m)
+        commit(appended(m.copy(rows = 0L, dirs = Seq.empty), all, ""))
+      }
     }
-
-  private def metaField(name: String, field: String): String = {
-    val s = Files.readString(metaPath(name))
-    val i = s.indexOf("\"" + field + "\":") + field.length + 3
-    s.substring(i).takeWhile(c => c != ',' && c != '}')
-  }
-
-  private def currentSnapshot(name: String): Long =
-    metaField(name, "snapshot").trim.toLong
-
-  private def currentRows(name: String): Long =
-    metaField(name, "rows").trim.toLong
-
-  private def currentAttrs(name: String): Map[String, String] = {
-    val s = Files.readString(metaPath(name))
-    val i = s.indexOf("\"attrs\":{")
-    if (i < 0) Map.empty // pre-attrs sidecar
-    else {
-      val body = s.substring(i + 9, s.indexOf("}", i))
-      if (body.trim.isEmpty) Map.empty
-      else body.split(",").map { kv =>
-        val Array(k, v) = kv.split(":", 2)
-        k.trim.stripPrefix("\"").stripSuffix("\"") ->
-          v.trim.stripPrefix("\"").stripSuffix("\"")
-      }.toMap
-    }
-  }
-
-  private def currentDirs(name: String): Seq[String] = {
-    val s = Files.readString(metaPath(name))
-    val i = s.indexOf("\"dirs\":[")
-    if (i < 0) Seq(s"snap-${currentSnapshot(name)}") // pre-manifest sidecar
-    else {
-      val body = s.substring(i + 8, s.indexOf("]", i))
-      if (body.trim.isEmpty) Seq.empty
-      else body.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .toSeq
-    }
-  }
-
-  /** Consumed appendTagged tags (empty on pre-tags sidecars, whose tags
-    * are recovered from the data-dir names instead).
-    */
-  private def currentTags(name: String): Seq[String] = {
-    val s = Files.readString(metaPath(name))
-    val i = s.indexOf("\"tags\":[")
-    if (i < 0) Seq.empty
-    else {
-      val body = s.substring(i + 8, s.indexOf("]", i))
-      if (body.trim.isEmpty) Seq.empty
-      else body.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .toSeq
-    }
-  }
 
   override def read(spark: SparkSession, name: String): DataFrame = {
     require(exists(name), s"table $name not found under $root")
-    val paths = currentDirs(name).map(d => dir(name).resolve(d).toString)
-    spark.read.parquet(paths: _*)
+    data(spark, manifest(name))
   }
 
   // Files.list/walk return streams backed by an OPEN directory handle —
@@ -313,30 +201,43 @@ class ParquetTableIO(root: String) extends TableIO {
 
   override def exists(name: String): Boolean = Files.exists(metaPath(name))
 
-  override def version(name: String): Long = currentSnapshot(name)
+  override def version(name: String): Long = manifest(name).snapshot
 
-  override def rows(name: String): Long = currentRows(name)
+  override def rows(name: String): Long = manifest(name).rows
 
   override def attr(name: String, key: String): Option[String] =
-    currentAttrs(name).get(key)
+    manifest(name).attrs.get(key)
 
   override def setAttr(name: String, key: String, value: String): Unit =
     mutateLock.synchronized {
-    require(key.matches("[A-Za-z0-9_-]+"), s"bad attr key: $key")
-    // values live in the flat attrs object the ad-hoc parser reads up to
-    // the first '}' — keep them brace/quote/comma-free
-    require(value.matches("[A-Za-z0-9_. -]*"), s"bad attr value: $value")
-    // Commit the merged attrs under a BUMPED snapshot id (no new data dir;
-    // dirs are unchanged) — same atomic temp+move, so concurrent readers
-    // see old-attrs or new-attrs manifests, never a torn one. The bump
-    // keeps version()'s contract ("changes on every committed mutation"):
-    // an attr like node_count changes snapshot-derived facts, and a
-    // version-keyed cache (the daemon's node-count cache) must not keep
-    // serving the pre-attr value.
-    commit(name, currentSnapshot(name) + 1, currentRows(name),
-      currentDirs(name), currentAttrs(name) + (key -> value),
-      currentTags(name))
-  }
+      // keys and values come off the network (the daemon's verbs)
+      require(key.matches("[A-Za-z0-9_-]+"), s"bad attr key: $key")
+      require(value.matches("[A-Za-z0-9_. -]*"), s"bad attr value: $value")
+      // Commit the merged attrs under a BUMPED snapshot id (dirs are
+      // unchanged). The bump keeps version()'s contract ("changes on every
+      // committed mutation"): an attr like node_count changes
+      // snapshot-derived facts, and a version-keyed cache (the daemon's
+      // node-count cache) must not keep serving the pre-attr value.
+      val m = manifest(name)
+      commit(m.copy(snapshot = m.snapshot + 1,
+        attrs = m.attrs + (key -> value)))
+    }
+}
+
+object ParquetTableIO {
+
+  /** The `_graft_meta.json` sidecar of one table. `dirs` names the data
+    * dirs of snapshot `snapshot` (relative to the table dir), `rows` their
+    * total row count, `tags` the consumed appendTagged tags, kept apart
+    * from the dir names so compaction cannot lose them.
+    */
+  case class Manifest(
+      name: String,
+      snapshot: Long,
+      rows: Long,
+      dirs: Seq[String],
+      tags: Seq[String],
+      attrs: Map[String, String])
 }
 
 /** Graph catalog over TableIO: the Flight server's create/list/remove/
@@ -361,7 +262,8 @@ class GraphCatalog(io: TableIO) {
     io.write(name, edges, Map("gtype" -> "directed") ++ attrs)
 
   /** Graph orientation tag — "directed" unless a `toUndirected` transform
-    * replaced the edge table (pre-attrs tables read as directed).
+    * replaced the edge table (a table first created by an append carries
+    * no gtype and reads as directed).
     */
   def graphType(name: String): String =
     io.attr(name, "gtype").getOrElse("directed")

@@ -53,8 +53,14 @@ class CatalogAppendSpec extends SparkSpec {
     io.appendTagged("t", spark.range(0, 5).toDF(), "b1")
     io.appendTagged("t", spark.range(0, 5).toDF(), "b1")
     rowsMatch("tagged append, replayed", 349L)
+    io.setAttr("t", "node_count", "349")
+    rowsMatch("setAttr", 349L)
     io.compact(spark, "t")
     rowsMatch("compact", 349L)
+    io.appendTagged("t", spark.range(0, 5).toDF(), "b1")
+    rowsMatch("tagged append replayed after compaction", 349L)
+    assert(io.version("t") == 4L)
+    assert(io.attr("t", "node_count").contains("349"))
     io.write("t", spark.range(0, 0).toDF())
     rowsMatch("empty write", 0L)
     io.write("t", Seq.empty[(Long, Double)].toDF("id", "x"))
@@ -86,6 +92,28 @@ class CatalogAppendSpec extends SparkSpec {
     assert(io.attr("t", "node_count").contains("9"))
     assert(io.rows("t") == 1L) // data manifest untouched by the attr bump
     assert(io.read(spark, "t").count() == 1L)
+
+    // readers run unlocked against mutations: every manifest they read is
+    // whole, and versions only grow
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val readers = Seq.fill(2)(new Thread(() =>
+      try {
+        var last = -1L
+        while (!stop.get) {
+          val v = io.version("t")
+          assert(v >= last, s"version went back: $last -> $v")
+          last = v
+          assert(io.rows("t") == 1L)
+          io.read(spark, "t")
+        }
+      } catch { case t: Throwable => failures.add(t) }))
+    readers.foreach(_.start())
+    (1 to 40).foreach(i => io.setAttr("t", "n", i.toString))
+    stop.set(true)
+    readers.foreach(_.join())
+    assert(failures.isEmpty, failures.toString)
+    assert(io.version("t") == v0 + 41 && io.attr("t", "n").contains("40"))
 
     // a full write replaces the table: attrs reset to exactly what the
     // new commit carries
@@ -196,5 +224,18 @@ class CatalogAppendSpec extends SparkSpec {
     assert(cat.list() == Seq("g"))
     cat.remove("g")
     assert(cat.list().isEmpty && cat.listProperties("g").isEmpty)
+  }
+
+  test("a manifest that lacks a field fails loudly on read") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-manifest-old")
+    val io = new ParquetTableIO(root.toString)
+    io.write("t", Seq(1L).toDF("id"))
+    // a sidecar without `tags`: no fallback reads it as "no tags"
+    Files.writeString(root.resolve("t").resolve("_graft_meta.json"),
+      """{"name":"t","snapshot":0,"rows":1,"dirs":["snap-0"],"attrs":{}}""")
+    intercept[Exception](io.rows("t"))
+    intercept[Exception](io.appendTagged("t", Seq(2L).toDF("id"), "b0"))
   }
 }

@@ -5,6 +5,7 @@ import graft.checkpoint.Checkpointer
 import graft.fixtures.Fixtures
 import graft.graph.LinkGraph
 import java.nio.file.Files
+import org.apache.spark.sql.functions.spark_partition_id
 
 /** Checkpoint/resume (north rule §4.8): a run killed mid-sequence and
   * resumed from its checkpoint must produce exactly the uninterrupted
@@ -206,5 +207,31 @@ class CheckpointSpec extends SparkSpec {
     val g = LinkGraph(edgesDF(edges))
     g.vertices.write.parquet(s"$dir/ckpt-000003/state")
     assert(Checkpointer.latest(spark, dir).isEmpty)
+  }
+
+  test("checkpoint meta with delimiters in its strings and a NaN error " +
+      "round-trips exactly and resumes by fingerprint") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-ckpt-codec").toString
+    val algorithm = "pr,{\"x\"}]"
+    val fp = "fp|m=1,\"a\":[2]}"
+    val state = spark.range(0, 50, 1, 3).select($"id", ($"id" * 2).as("v"))
+    Checkpointer.write(dir, algorithm, 7, Double.NaN, state, fp,
+      converged = true)
+    // a newer checkpoint of another configuration must not be resumed
+    Checkpointer.write(dir, algorithm, 9, 0.5, state, fp + "]")
+
+    val (meta, df) = Checkpointer.latest(spark, dir, fp).get
+    val perPart = df.groupBy(spark_partition_id().as("pid")).count()
+      .orderBy("pid").collect().map(_.getLong(1)).toSeq
+    assert(meta.error.isNaN)
+    assert(meta.copy(error = 0.0) == Checkpointer.Meta(algorithm, 7, 0.0,
+      perPart.size, perPart, 50L, fp, converged = true))
+    assert(meta.partitionRows.sum == 50L)
+    assert(df.orderBy("id").as[(Long, Long)].collect().toSeq ==
+      (0L until 50L).map(i => (i, 2 * i)))
+    assert(Checkpointer.latest(spark, dir, fp + "]").get._1.iteration == 9)
+    assert(Checkpointer.latest(spark, dir, "fp").isEmpty)
   }
 }

@@ -14,10 +14,9 @@ class LinkGraphCacheSpec extends SparkSpec {
       "cached") {
     val before = CachedQueries.count(spark)
     val edges = edgesDF(Fixtures.randomEdges(200, 900, seed = 7L))
-    def views(g: LinkGraph) = Seq("bySrc" -> g.bySrc,
-      "multiplicities" -> g.multiplicities,
+    def views(g: LinkGraph) = Seq("multiplicities" -> g.multiplicities,
       "multiplicitiesBySrc" -> g.multiplicitiesBySrc,
-      "minWeightBySrc" -> g.minWeightBySrc, "balanced" -> g.balanced)
+      "minWeightBySrc" -> g.minWeightBySrc)
     val graph = LinkGraph(edges)
     views(graph).foreach(_._2.count())
     val twin = LinkGraph(edges)

@@ -38,7 +38,7 @@ class PlanSpec extends SparkSpec {
 
   test("PageRank gather join broadcasts the vertex state") {
     val g = LinkGraph(EventEdges.edges(spark, sf))
-    val edges = g.bySrc
+    val edges = g.multiplicities
     val senders = g.degrees.filter(col("out_deg") > 0)
       .select(col("id"), lit(0.5).as("out_score"))
     val gathered = edges
