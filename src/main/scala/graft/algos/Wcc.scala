@@ -5,7 +5,6 @@ import graft.graph.LinkGraph
 import org.apache.spark.sql.graft.StatsReset
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Weakly connected components as an iterative hash-min fixed point.
   *
@@ -93,25 +92,20 @@ object Wcc {
   }
 
   /** The undirected edge table a round scans: both directions of the
-    * canonical edges, built once per run. Shuffle mode caches it: the
-    * cache keeps the hash(src) partitioning that the state joins meet
-    * without an exchange on the edge side. Broadcast mode needs no
-    * partitioning and checkpoints it lazily instead (released like the
-    * run's other checkpoints; `unpersist` is a no-op on it). A round reads
-    * the neighbour-min aggregation twice, for the propagated labels and
-    * for the pointer-jump side, and AQE reuses that exchange over an RDD
-    * scan but not over two scans of one cached table (each becomes its
+    * canonical edges, built once per run and checkpointed lazily (its
+    * blocks are released like the run's per-round checkpoints). A round
+    * reads the neighbour-min aggregation twice, for the propagated labels
+    * and for the pointer-jump side, and AQE reuses that exchange over an
+    * RDD scan but not over two scans of one cached table (each becomes its
     * own table-cache stage), so a cached table would run the round's edge
     * shuffle twice.
     */
-  private[algos] def undirected(canon: DataFrame, numPartitions: Int,
-      broadcastMode: Boolean): DataFrame = {
-    val und = canon
+  private[algos] def undirected(canon: DataFrame,
+      numPartitions: Int): DataFrame =
+    canon
       .union(canon.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(numPartitions, col("src"))
-    if (broadcastMode) und.localCheckpoint(eager = false)
-    else und.persist(StorageLevel.MEMORY_AND_DISK)
-  }
+      .localCheckpoint(eager = false)
 
   /** @param sparseVertices when true, the component state is initialized
     *   from the CANONICAL edge endpoints only instead of the dense 0..n-1
@@ -178,7 +172,7 @@ object Wcc {
       return Result(state.transform(StatsReset.checkpointNoStats),
         ConvergenceStats(meta.iteration, 0.0, converged = true))
     }
-    val und = undirected(canon, graph.numPartitions, steps.broadcastMode)
+    val und = undirected(canon, graph.numPartitions)
     var iteration = steps.startIteration
     // Eager localCheckpoint per round: the pointer-jump self-join would
     // otherwise DOUBLE the logical plan every round (SURVEY.md §7.4-5).
@@ -270,7 +264,6 @@ object Wcc {
               converged = sub.stats.converged)
               .transform(StatsReset.checkpointNoStats)
           else composed0
-        und.unpersist()
         return Result(composed, ConvergenceStats(
           totalIters, 0.0, sub.stats.converged))
       }
@@ -282,7 +275,6 @@ object Wcc {
           .transform(StatsReset.checkpointNoStats)
     }
 
-    und.unpersist()
     Result(comp, ConvergenceStats(iteration, changed.toDouble, changed == 0))
   }
 }

@@ -52,8 +52,8 @@ class LinkGraph private (
 
   def nodeCount: Long = {
     if (cachedNodeCount < 0) countSource match {
-      case Some(cs) => cachedNodeCount = maxIdPlusOne(cs)
-      case None => scanCounts()
+      case Some(cs) => cachedNodeCount = scan(cs)._1
+      case None => edgeCount // its scan of `edges` memoizes both counts
     }
     cachedNodeCount
   }
@@ -80,32 +80,30 @@ class LinkGraph private (
     */
   def nodeCountFrom(materializedEdges: DataFrame): Long = {
     if (cachedNodeCount < 0)
-      cachedNodeCount = maxIdPlusOne(countSource.getOrElse(materializedEdges))
+      cachedNodeCount = scan(countSource.getOrElse(materializedEdges))._1
     cachedNodeCount
   }
 
-  private def maxIdPlusOne(df: DataFrame): Long = {
-    val row = df.agg(max(greatest(col("src"), col("dst")))).first()
-    if (row.isNullAt(0)) 0L else row.getLong(0) + 1L
-  }
-
+  /** Edge count. Its scan also yields max id + 1, which becomes the node
+    * count when that is still unknown and derives from `edges` itself (no
+    * count source): a fingerprint reads both, for one job.
+    */
   def edgeCount: Long = {
     if (cachedEdgeCount < 0) {
-      if (cachedNodeCount < 0 && countSource.isEmpty) scanCounts()
-      else cachedEdgeCount = edges.count()
+      val (n, m) = scan(edges)
+      if (cachedNodeCount < 0 && countSource.isEmpty) cachedNodeCount = n
+      cachedEdgeCount = m
     }
     cachedEdgeCount
   }
 
-  /** Max-id node count and edge count in one scan of `edges`, for a graph
-    * whose node count comes from its own edges (no explicit count, no
-    * count source): a fingerprint needs both.
+  /** (max node id + 1, row count) of an edge frame in one aggregation; a
+    * frame with no rows has 0 nodes.
     */
-  private def scanCounts(): Unit = {
-    val row = edges
-      .agg(max(greatest(col("src"), col("dst"))), count(lit(1))).first()
-    cachedNodeCount = if (row.isNullAt(0)) 0L else row.getLong(0) + 1L
-    cachedEdgeCount = row.getLong(1)
+  private def scan(df: DataFrame): (Long, Long) = {
+    val r = df.agg(max(greatest(col("src"), col("dst"))), count(lit(1)))
+      .first()
+    (if (r.isNullAt(0)) 0L else r.getLong(0) + 1L, r.getLong(1))
   }
 
   // Every persisted cache this graph materializes registers here, so a

@@ -114,37 +114,44 @@ class ParquetTableIO(root: String) extends TableIO {
     if (exists(name)) manifest(name)
     else Manifest(name, -1L, 0L, Seq.empty, Seq.empty, Map.empty)
 
-  private def commit(m: Manifest): Unit = Sidecar.write(metaPath(m.name), m)
+  // Paths come from the caller's table name, never from the manifest's
+  // stored `name`: a table folder copied under a new name is its own table.
+  private def commit(name: String, m: Manifest): Unit =
+    Sidecar.write(metaPath(name), m.copy(name = name))
 
   /** `m` grown by `df` written as one more data dir `snap-<n><suffix>` of
-    * the next snapshot. The row count is observed inside the write's own
-    * job (Dataset.observe) rather than by a second scan of the files.
+    * table `name`'s next snapshot. The row count is observed inside the
+    * write's own job (Dataset.observe) rather than by a second scan of the
+    * files.
     */
-  private def appended(m: Manifest, df: DataFrame,
+  private def appended(name: String, m: Manifest, df: DataFrame,
       suffix: String): Manifest = {
     val snap = m.snapshot + 1
     val dataDir = s"snap-$snap$suffix"
     val rows = Observation()
     df.observe(rows, count(lit(1)).as("rows"))
-      .write.mode("overwrite").parquet(dir(m.name).resolve(dataDir).toString)
+      .write.mode("overwrite").parquet(dir(name).resolve(dataDir).toString)
     m.copy(snapshot = snap, dirs = m.dirs :+ dataDir,
       rows = m.rows + rows.get("rows").asInstanceOf[Long])
   }
 
-  private def data(spark: SparkSession, m: Manifest): DataFrame =
-    spark.read.parquet(m.dirs.map(d => dir(m.name).resolve(d).toString): _*)
+  private def data(spark: SparkSession, name: String,
+      m: Manifest): DataFrame =
+    spark.read.parquet(m.dirs.map(d => dir(name).resolve(d).toString): _*)
 
   override def write(
       name: String, df: DataFrame,
       attrs: Map[String, String] = Map.empty): Unit = mutateLock.synchronized {
     // a replaced table is a new table: attrs AND consumed tags reset
-    commit(appended(
+    commit(name, appended(name,
       Manifest(name, current(name).snapshot, 0L, Seq.empty, Seq.empty, attrs),
       df, ""))
   }
 
   override def append(name: String, df: DataFrame): Unit =
-    mutateLock.synchronized { commit(appended(current(name), df, "")) }
+    mutateLock.synchronized {
+      commit(name, appended(name, current(name), df, ""))
+    }
 
   override def appendTagged(
       name: String, df: DataFrame, tag: String): Unit =
@@ -156,7 +163,8 @@ class ParquetTableIO(root: String) extends TableIO {
       // name for human lineage. Matching is exact: tags may contain '-'.
       val m = current(name)
       if (!m.tags.contains(tag)) // else: replayed micro-batch, skip
-        commit(appended(m, df, s"-$tag").copy(tags = m.tags :+ tag))
+        commit(name,
+          appended(name, m, df, s"-$tag").copy(tags = m.tags :+ tag))
     }
 
   override def compact(spark: SparkSession, name: String): Unit =
@@ -166,14 +174,15 @@ class ParquetTableIO(root: String) extends TableIO {
       // tags and attrs carry forward: a replayed micro-batch after
       // compaction must still be recognized as committed
       if (m.dirs.size > 1) {
-        val all = data(spark, m)
-        commit(appended(m.copy(rows = 0L, dirs = Seq.empty), all, ""))
+        val all = data(spark, name, m)
+        commit(name,
+          appended(name, m.copy(rows = 0L, dirs = Seq.empty), all, ""))
       }
     }
 
   override def read(spark: SparkSession, name: String): DataFrame = {
     require(exists(name), s"table $name not found under $root")
-    data(spark, manifest(name))
+    data(spark, name, manifest(name))
   }
 
   // Files.list/walk return streams backed by an OPEN directory handle —
@@ -219,7 +228,7 @@ class ParquetTableIO(root: String) extends TableIO {
       // snapshot-derived facts, and a version-keyed cache (the daemon's
       // node-count cache) must not keep serving the pre-attr value.
       val m = manifest(name)
-      commit(m.copy(snapshot = m.snapshot + 1,
+      commit(name, m.copy(snapshot = m.snapshot + 1,
         attrs = m.attrs + (key -> value)))
     }
 }

@@ -238,4 +238,32 @@ class CatalogAppendSpec extends SparkSpec {
     intercept[Exception](io.rows("t"))
     intercept[Exception](io.appendTagged("t", Seq(2L).toDF("id"), "b0"))
   }
+
+  test("a table folder copied under a new name is its own table") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-manifest-copy")
+    val io = new ParquetTableIO(root.toString)
+    io.write("a", Seq(1L, 2L).toDF("id"))
+    io.append("a", Seq(3L).toDF("id"))
+    val src = root.resolve("a")
+    val walk = Files.walk(src)
+    try walk.forEach(p =>
+      Files.copy(p, root.resolve("b").resolve(src.relativize(p).toString)))
+    finally walk.close()
+
+    io.append("b", Seq(4L).toDF("id"))
+    io.appendTagged("b", Seq(5L).toDF("id"), "t0")
+    io.setAttr("b", "k", "v")
+    io.compact(spark, "b")
+    def ids(t: String) = io.read(spark, t).as[Long].collect().sorted.toSeq
+    assert(ids("a") == Seq(1L, 2L, 3L))
+    assert(io.rows("a") == 3L && io.version("a") == 1L)
+    assert(io.attr("a", "k").isEmpty)
+    assert(ids("b") == Seq(1L, 2L, 3L, 4L, 5L) && io.rows("b") == 5L)
+
+    io.drop("a")
+    assert(ids("b") == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(io.list() == Seq("b"))
+  }
 }

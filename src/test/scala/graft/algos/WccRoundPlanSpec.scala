@@ -21,7 +21,7 @@ class WccRoundPlanSpec extends SparkSpec {
         greatest($"src", $"dst").as("dst"))
       .distinct()
       .transform(StatsReset.checkpointNoStats)
-    val und = Wcc.undirected(canon, 8, broadcastMode = true)
+    val und = Wcc.undirected(canon, 8)
     val state = spark.range(0, 500, 1, 8)
       .select($"id", $"id".as("lbl"), $"id".as("prev"))
       .transform(StatsReset.checkpointNoStats)
