@@ -2,7 +2,6 @@ package graft.algos
 
 import graft.{ConvergenceStats, LabelPropagationConfig}
 import graft.graph.LinkGraph
-import org.apache.spark.sql.graft.StatsReset
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -103,9 +102,7 @@ object LabelPropagation {
     // round 5, the 29.5M-edge follower-hub graph at local[32]).
 
     var iteration = steps.startIteration
-    var labels: DataFrame = steps.resume.map(_._2)
-      .getOrElse(graph.vertices.select($"id", $"id".as("label")))
-      .transform(StatsReset.checkpointNoStats)
+    var labels = steps.start(graph.vertices.select($"id", $"id".as("label")))
 
     // fixed-iteration mode (earlyStop = false) runs the whole budget; a
     // labeling that reaches its fixed point inside it is unchanged by the
@@ -129,16 +126,12 @@ object LabelPropagation {
         labels.join(steps.side(mode), Seq("id"), "left")
           .select($"id", coalesce($"new_label", $"label").as("label"),
             $"label".as("prev")),
-        _.drop("prev").transform(StatsReset.checkpointNoStats),
         count(when($"label" =!= $"prev", lit(1))))
       changed = measured.getLong(0)
       labels = next
       iteration += 1
-
-      if (steps.due(iteration,
-          over = stop || iteration >= config.maxIterations))
-        labels = steps.write(iteration, changed.toDouble, labels)
-          .transform(StatsReset.checkpointNoStats)
+      steps.save(iteration, changed.toDouble, labels,
+        over = stop || iteration >= config.maxIterations)
     }
 
     undCache.unpersist()

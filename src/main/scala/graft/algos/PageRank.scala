@@ -47,10 +47,10 @@ import org.apache.spark.sql.functions._
   *    seeds round 0 (a resume reads out_deg off its checkpoint and never
   *    builds it).
   *  - the error sum |score - prev| is observed inside the superstep's own
-  *    localCheckpoint, so it costs no job in either mode; it only decides
-  *    the stop when tolerance > 0.
-  * Placement, lineage cuts (eager localCheckpoint, SURVEY.md §7.4-5),
-  * resume and the durable checkpoint cadence follow [[Supersteps]].
+  *    checkpoint, so it costs no job in either mode; it only decides the
+  *    stop when tolerance > 0.
+  * Placement, the per-superstep lineage cut, resume and the durable
+  * checkpoint cadence follow [[Supersteps]].
   */
 object PageRank {
 
@@ -147,15 +147,10 @@ object PageRank {
       else graph.multiplicitiesSalted(salt)
     // State rows are (id, score, out_deg). Round 0 reads out_deg off the
     // graph-owned dense degree table (LinkGraph.outDegrees); a resume reads
-    // it off its checkpoint and never builds the table. localCheckpoint
-    // (eager) truncates the logical plan — persist alone caches data but
-    // lineage still nests per iteration (SURVEY.md §7.4-5).
+    // it off its checkpoint and never builds the table.
     var iteration = steps.startIteration
-    var state: DataFrame = steps.resume
-      .map(_._2.select($"id", $"score", $"out_deg"))
-      .getOrElse(graph.outDegrees(edges).select($"id",
-        lit(initScore).as("score"), $"out_deg"))
-      .localCheckpoint()
+    var state = steps.start(graph.outDegrees(edges).select($"id",
+      lit(initScore).as("score"), $"out_deg"))
 
     var error = Double.NaN
     var converged = false
@@ -193,14 +188,12 @@ object PageRank {
           $"out_deg", $"prev")
       iteration += 1
       val (mat, measured) = Supersteps.materialize(next,
-        _.drop("prev").localCheckpoint(), sum(abs($"score" - $"prev")))
+        sum(abs($"score" - $"prev")))
       error = measured.getDouble(0)
       converged = trackError && error < config.tolerance
       state = mat
-
-      if (steps.due(iteration,
-          over = converged || iteration >= config.maxIterations))
-        state = steps.write(iteration, error, state).localCheckpoint()
+      steps.save(iteration, error, state,
+        over = converged || iteration >= config.maxIterations)
     }
 
     Result(state.select($"id", $"score"),

@@ -2,7 +2,6 @@ package graft.algos
 
 import graft.{ConvergenceStats, SccConfig}
 import graft.graph.LinkGraph
-import org.apache.spark.sql.graft.StatsReset
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,11 +44,10 @@ import org.apache.spark.sql.functions._
   *     graphs, whose condensation is shallow once TRIM peels the DAG tail.
   *
   * Every step is a Catalyst join/aggregate over the partitioned edge
-  * Dataset; state is vertex-sized and checkpointed per round through
-  * StatsReset.checkpointNoStats — plain localCheckpoint inherits origin
-  * sizeInBytes stats, which the self-join supersteps compound
-  * geometrically until stats estimation dominates the driver (see
-  * org.apache.spark.sql.graft.StatsReset). Durable checkpoint/resume via
+  * Dataset; state is vertex-sized and cut per round by
+  * [[Supersteps.checkpoint]], which drops the origin size estimate that
+  * the self-join supersteps would otherwise compound geometrically until
+  * stats estimation dominates the driver. Durable checkpoint/resume via
   * `checkpointDir` writes the total labeling (resolved labels + -1
   * sentinel for active vertices) once per outer round.
   */
@@ -72,8 +70,7 @@ object Scc {
     // the derivation per consumer. Its row count (for the fingerprint) is
     // observed in the same action.
     val (raw, rawRows) = Supersteps.materialize(
-      graph.edges.select($"src", $"dst"), StatsReset.checkpointNoStats,
-      count(lit(1)))
+      graph.edges.select($"src", $"dst"), count(lit(1)))
     val n = graph.nodeCountFrom(raw)
     require(n > 0, "SCC on empty graph")
     // Checkpoint state = one total labeling DataFrame: resolved vertices
@@ -103,7 +100,6 @@ object Scc {
         val (stepped, measured) = Supersteps.materialize(
           Wcc.minLabelRound(edges,
             lbl.select($"id", $"lbl", $"lbl".as("prev")), steps.side),
-          _.drop("prev").transform(StatsReset.checkpointNoStats),
           count(when($"lbl" =!= $"prev", lit(1))))
         changed = measured.getLong(0)
         lbl = stepped
@@ -116,7 +112,7 @@ object Scc {
     var activeEdges = raw
       .where($"src" =!= $"dst").distinct()
       .repartition(graph.numPartitions, $"src")
-      .transform(StatsReset.checkpointNoStats)
+      .transform(Supersteps.checkpoint)
     // graph-partition-count slices (round-6): the active set seeds every
     // trim/propagation state; a 32-slice default re-inflates each of the
     // many per-round jobs to 32 tasks after adaptiveParts sized the graph
@@ -124,7 +120,7 @@ object Scc {
     var remaining = n
 
     // Restrict the edge set to the surviving vertex set; one eager
-    // localCheckpoint (single action) instead of a repartition+persist
+    // checkpoint (single action) instead of a repartition+persist
     // cycle per peel. The src-side semi-join runs LAST so in shuffle-hash
     // mode the output keeps hash(src) partitioning for the next
     // propagation's gather (broadcast mode is partitioning-agnostic).
@@ -135,7 +131,7 @@ object Scc {
         .join(steps.side(verts.select($"id".as("src"))),
           Seq("src"), "left_semi")
         .select($"src", $"dst")
-        .transform(StatsReset.checkpointNoStats)
+        .transform(Supersteps.checkpoint)
 
     val resolved = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var iteration = 0
@@ -167,7 +163,7 @@ object Scc {
               "left")
             .select($"id",
               ($"has_out".isNotNull && $"has_in".isNotNull).as("keep")),
-          StatsReset.checkpointNoStats, count(when(!$"keep", lit(1))))
+          count(when(!$"keep", lit(1))))
         val tCount = measured.getLong(0)
         if (tCount == 0) trimming = false
         else {
@@ -205,13 +201,13 @@ object Scc {
             fwd.join(bwd.withColumnRenamed("lbl", "blbl"), Seq("id"))
               .where($"lbl" === $"blbl")
               .select($"id", $"lbl".as("scc")),
-            StatsReset.checkpointNoStats, count(lit(1)))
+            count(lit(1)))
           val cCount = measured.getLong(0)
           resolved += claimed
           remaining -= cCount
           if (remaining > 0) {
             active = active.join(claimed.select($"id"), Seq("id"),
-              "left_anti").transform(StatsReset.checkpointNoStats)
+              "left_anti").transform(Supersteps.checkpoint)
             activeEdges = restrict(activeEdges, active)
           }
         }
@@ -219,14 +215,10 @@ object Scc {
       if (iteration < config.maxIterations) iteration += 1
 
       // like WCC, a run stopped by the iteration cap stays resumable
-      if (steps.due(iteration, over = remaining == 0) && resolved.nonEmpty) {
-        val state = resolved.reduce(_ union _)
-          .union(active.select($"id", lit(-1L).as("scc")))
-        val reread = steps.write(iteration, remaining.toDouble, state)
-        resolved.clear()
-        resolved += reread.filter($"scc" >= 0).select($"id", $"scc")
-        active = reread.filter($"scc" === -1).select($"id")
-      }
+      if (resolved.nonEmpty)
+        steps.save(iteration, remaining.toDouble, resolved.reduce(_ union _)
+          .union(active.select($"id", lit(-1L).as("scc"))),
+          over = remaining == 0)
     }
 
     val converged = remaining == 0

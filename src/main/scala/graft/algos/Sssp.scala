@@ -2,7 +2,6 @@ package graft.algos
 
 import graft.{ConvergenceStats, SsspConfig}
 import graft.graph.LinkGraph
-import org.apache.spark.sql.graft.StatsReset
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -72,7 +71,7 @@ object Sssp {
     // `threshold`, rows pending anywhere, and the smallest pending distance
     // (the band-advance target).
     def measured(df: DataFrame, threshold: Double): (DataFrame, Row) =
-      Supersteps.materialize(df, StatsReset.checkpointNoStats,
+      Supersteps.materialize(df,
         count(when($"pending" && $"dist" < threshold, 1)),
         count(when($"pending", 1)),
         min(when($"pending", $"dist")))
@@ -147,10 +146,8 @@ object Sssp {
       advance(p)
       // no write when the loop stops (resume re-derives the band from
       // state)
-      if (steps.due(iteration,
-          over = done || iteration >= config.maxIterations))
-        state = steps.write(iteration, 0.0, state)
-          .transform(StatsReset.checkpointNoStats)
+      steps.save(iteration, 0.0, state,
+        over = done || iteration >= config.maxIterations)
     }
 
     val full = graph.vertices

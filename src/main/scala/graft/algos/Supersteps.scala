@@ -1,6 +1,7 @@
 package graft.algos
 
 import graft.checkpoint.Checkpointer
+import org.apache.spark.sql.graft.StatsReset
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, lit}
 
@@ -14,8 +15,10 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, lit}
   *     sort-merges the cached edge side (an SMJ would re-sort the big table
   *     every round).
   *  2. MATERIALIZATION. Every round's state is materialized before the
-  *     next round reads it, in both placements: `localCheckpoint` for
-  *     PageRank, StatsReset.checkpointNoStats elsewhere. A lazily chained
+  *     next round reads it, in both placements, by one cut:
+  *     StatsReset.checkpointNoStats, which also drops the origin plan's
+  *     size estimate (a plain localCheckpoint keeps it, and the join
+  *     estimates multiply it every round). A lazily chained
   *     round re-reads its input state once per state join, so k chained
   *     WCC/SCC rounds (two state joins plus the pointer-jump self-join)
   *     inline ~4^k copies of the start state (shuffle-mode WCC on a
@@ -24,13 +27,16 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, lit}
   *     (error, changed or pending rows) rides that same action
   *     ([[Supersteps.materialize]]), so a probe costs no job: the round's
   *     rows carry what the measure compares against (`prev`) into that
-  *     action, instead of a second scan of data the round already wrote.
+  *     action, instead of a second scan of data the round already wrote;
+  *     `prev` itself is never materialized.
   *  3. RESUME. The newest complete checkpoint of this algorithm whose
-  *     fingerprint matches. The fingerprint names only state-determining
-  *     facts, and is evaluated only when checkpointing is on (it usually
-  *     costs an edge count).
+  *     fingerprint matches ([[start]]). The fingerprint names only
+  *     state-determining facts, and is evaluated only when checkpointing
+  *     is on (it usually costs an edge count).
   *  4. DURABLE CADENCE. A checkpoint is due at multiples of
-  *     `checkpointEvery`, never once the run is over.
+  *     `checkpointEvery`, never once the run is over ([[save]]). Rule 2
+  *     already cut the saved state's lineage, so the caller keeps the
+  *     frame it holds; the write is a side effect.
   */
 private[algos] final class Supersteps(
     spark: SparkSession,
@@ -59,35 +65,48 @@ private[algos] final class Supersteps(
 
   def startIteration: Int = resume.fold(0)(_._1.iteration)
 
-  /** Rule 4: a durable checkpoint is due after `iteration` unless `over`
-    * (the run stops here and the caller holds the result).
+  /** Rules 2 and 3: the resumed state, or `seed` (evaluated only without
+    * one), materialized.
     */
-  def due(iteration: Int, over: Boolean): Boolean =
-    checkpointDir.isDefined && !over && iteration % checkpointEvery == 0
+  def start(seed: => DataFrame): DataFrame =
+    Supersteps.checkpoint(resume.fold(seed)(_._2))
 
-  /** Write `state` durably; returns the re-read, lineage-free frame. */
+  /** Rule 4: write `state` durably after `iteration` unless `over` (the run
+    * stops here and the caller holds the result) or the cadence says no.
+    */
+  def save(iteration: Int, error: Double, state: DataFrame,
+      over: Boolean): Unit =
+    if (checkpointDir.isDefined && !over && iteration % checkpointEvery == 0)
+      write(iteration, error, state)
+
+  /** Write `state` durably now, whatever the cadence. */
   def write(iteration: Int, error: Double, state: DataFrame,
-      converged: Boolean = false): DataFrame =
+      converged: Boolean = false): Unit =
     Checkpointer.write(checkpointDir.get, algorithm, iteration, error,
       state, fp, converged)
 }
 
 private[algos] object Supersteps {
 
-  /** Rule 2's one action: `cut` (localCheckpoint or
-    * StatsReset.checkpointNoStats) materializes `df`, and the aggregate
-    * `measures` are evaluated over its rows inside that same action
+  /** Rule 2's lineage cut: an eager checkpoint with no carried size
+    * estimate (StatsReset).
+    */
+  def checkpoint(df: DataFrame): DataFrame = StatsReset.checkpointNoStats(df)
+
+  /** Rule 2's one action: [[checkpoint]] materializes `df` without its
+    * `prev` column (if any), and the aggregate `measures` (at least one)
+    * are evaluated over its rows, `prev` included, inside that same action
     * (Dataset.observe) instead of by a second job over the materialized
     * frame. Returns the materialized frame and the measures in order; a
     * measure over no rows (sum, min of an empty state) reads as 0, so
     * callers that need "nothing there" observe a count beside it.
     */
-  def materialize(df: DataFrame, cut: DataFrame => DataFrame,
-      measures: Column*): (DataFrame, Row) = {
+  def materialize(df: DataFrame, measures: Column*): (DataFrame, Row) = {
     val named = measures.zipWithIndex.map { case (m, i) =>
       coalesce(m, lit(0)).as(s"m$i") }
     val obs = Observation()
-    val mat = cut(df.observe(obs, named.head, named.tail: _*))
+    val mat = checkpoint(df.observe(obs, named.head, named.tail: _*)
+      .drop("prev"))
     val got = obs.get
     (mat, Row.fromSeq(named.indices.map(i => got(s"m$i"))))
   }

@@ -49,8 +49,7 @@ object TriangleCount {
     // (src < dst), dedup, no loops — checkpointed once: the degree and
     // orientation branches below reference it three times, and the
     // upstream derivation is not cached
-    val simple = org.apache.spark.sql.graft.StatsReset
-      .checkpointNoStats(graph.canonicalUndirected)
+    val simple = Supersteps.checkpoint(graph.canonicalUndirected)
     // undirected degree over the simple graph
     val deg = simple.select($"src".as("id"))
       .union(simple.select($"dst".as("id")))
@@ -150,22 +149,24 @@ object TriangleCount {
     * size rule picks (in the intersection shape only the corners are
     * materialized — output-proportional, T rows for T triangles, never
     * wedge-proportional), exploded and counted. The oriented table is
-    * localCheckpointed (not persisted) because it backs the returned
-    * plan beyond this call — see the comment at the checkpoint site.
+    * checkpointed (not persisted) because it backs the returned plan
+    * beyond this call — see the comment at the checkpoint site.
     */
   def perVertex(graph: LinkGraph, wedgeMax: Long = wedgeMaxEdges): DataFrame = {
     val spark = graph.edges.sparkSession
     import spark.implicits._
-    // checkpointNoStats, NOT persist(): the returned plan outlives this
-    // call, so an explicit persist could never be unpersisted here and a
+    // a checkpoint, NOT persist(): the returned plan outlives this call,
+    // so an explicit persist could never be unpersisted here and a
     // long-running caller (the daemon's repeated COMPUTE) would pin one
-    // cached table per call — localCheckpoint blocks are released by the
+    // cached table per call — checkpoint blocks are released by the
     // ContextCleaner when the frame is GC'd (same discipline as
-    // Dedup.exact's fingerprint table)
-    val oriented = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
-      orientedEdges(graph).repartition(graph.numPartitions, $"a"))
+    // Dedup.exact's fingerprint table). Its row count, which picks the
+    // formulation, is observed inside the checkpoint's own action.
+    val (oriented, rows) = Supersteps.materialize(
+      orientedEdges(graph).repartition(graph.numPartitions, $"a"),
+      count(lit(1)))
     val tris =
-      if (oriented.count() < wedgeMax) wedgeTriangles(oriented)
+      if (rows.getLong(0) < wedgeMax) wedgeTriangles(oriented)
       else
         edgesWithAdjacency(oriented)
           .select($"a".as("u"), $"b".as("v"),

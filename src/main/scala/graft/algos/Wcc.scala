@@ -2,7 +2,6 @@ package graft.algos
 
 import graft.{ConvergenceStats, WccConfig}
 import graft.graph.LinkGraph
-import org.apache.spark.sql.graft.StatsReset
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -136,8 +135,7 @@ object Wcc {
     // checkpoint (raw keeps self-loop-only vertices, so max-id is right);
     // its row count (for the fingerprint) is observed in the same action.
     val (raw, rawRows) = Supersteps.materialize(
-      graph.edges.select($"src", $"dst"), StatsReset.checkpointNoStats,
-      count(lit(1)))
+      graph.edges.select($"src", $"dst"), count(lit(1)))
     // sparse mode never materializes the dense universe, so the (possibly
     // astronomically large) max-id+1 is only computed for the fingerprint
     // and the broadcast decision when a checkpoint dir is in play.
@@ -154,7 +152,7 @@ object Wcc {
         .select(least($"src", $"dst").as("src"),
           greatest($"src", $"dst").as("dst"))
         .distinct(),
-      StatsReset.checkpointNoStats, count(lit(1)))
+      count(lit(1)))
     // sparse mode has no n; its state size is bounded by the endpoint count
     // (<= undirected edge count = 2 x canonical rows), so gate the
     // broadcast on that instead. The fingerprint names state-determining
@@ -169,27 +167,25 @@ object Wcc {
     // skip the confirming round when iteration >= maxIterations and
     // misreport a finished run as converged=false
     steps.resume.filter(_._1.converged).foreach { case (meta, state) =>
-      return Result(state.transform(StatsReset.checkpointNoStats),
+      return Result(Supersteps.checkpoint(state),
         ConvergenceStats(meta.iteration, 0.0, converged = true))
     }
     val und = undirected(canon, graph.numPartitions)
     var iteration = steps.startIteration
-    // Eager localCheckpoint per round: the pointer-jump self-join would
+    // One lineage cut per round: the pointer-jump self-join would
     // otherwise DOUBLE the logical plan every round (SURVEY.md §7.4-5).
-    var comp: DataFrame = steps.resume.map(_._2)
-      .getOrElse {
-        if (sparseVertices)
-          // edge endpoints only — a pair-sized state, never the id space
-          canon.select($"src".as("id"))
-            .union(canon.select($"dst".as("id")))
-            .distinct()
-            .select($"id", $"id".as("comp"))
-        // graph-partition-count slices, not the 32-slice session default:
-        // every round job runs one task per state partition (round-6)
-        else spark.range(0, n, 1, graph.numPartitions)
+    var comp = steps.start {
+      if (sparseVertices)
+        // edge endpoints only — a pair-sized state, never the id space
+        canon.select($"src".as("id"))
+          .union(canon.select($"dst".as("id")))
+          .distinct()
           .select($"id", $"id".as("comp"))
-      }
-      .transform(StatsReset.checkpointNoStats)
+      // graph-partition-count slices, not the 32-slice session default:
+      // every round job runs one task per state partition (round-6)
+      else spark.range(0, n, 1, graph.numPartitions)
+        .select($"id", $"id".as("comp"))
+    }
 
     var changed = Long.MaxValue
     while (changed > 0 && iteration < config.maxIterations) {
@@ -201,7 +197,6 @@ object Wcc {
             comp.select($"id", $"comp".as("lbl"), $"comp".as("prev")),
             steps.side)
           .select($"id", $"lbl".as("comp"), $"prev"),
-        _.drop("prev").transform(StatsReset.checkpointNoStats),
         count(lit(1)), count(when($"comp" =!= $"prev", lit(1))))
       val stateRows = counts.getLong(0)
       changed = counts.getLong(1)
@@ -241,12 +236,12 @@ object Wcc {
           // class labels are sparse in the id space — never densify
           sparseVertices = true,
           autoContractMinState = autoContractMinState)
-        val composed0 = comp
+        val composed = comp
           .join(steps.side(sub.components
             .select($"id".as("comp"), $"comp".as("fin"))), Seq("comp"),
             "left")
           .select($"id", coalesce($"fin", $"comp").as("comp"))
-          .transform(StatsReset.checkpointNoStats)
+          .transform(Supersteps.checkpoint)
         val totalIters = iteration + sub.stats.iterations
         // Round-4 verdict #7: this branch RETURNS — without a durable write
         // a crash after a long contracted run would resume from before the
@@ -258,21 +253,16 @@ object Wcc {
         // silently report converged=false whenever totalIters already
         // reached maxIterations (the loop guard skips the confirming
         // round entirely in that case)
-        val composed =
-          if (checkpointDir.isDefined)
-            steps.write(totalIters, 0.0, composed0,
-              converged = sub.stats.converged)
-              .transform(StatsReset.checkpointNoStats)
-          else composed0
+        if (checkpointDir.isDefined)
+          steps.write(totalIters, 0.0, composed,
+            converged = sub.stats.converged)
         return Result(composed, ConvergenceStats(
           totalIters, 0.0, sub.stats.converged))
       }
 
       // a run stopped by the iteration cap has not converged, so its last
       // state stays resumable; only a converged run skips the write
-      if (steps.due(iteration, over = changed == 0))
-        comp = steps.write(iteration, changed.toDouble, comp)
-          .transform(StatsReset.checkpointNoStats)
+      steps.save(iteration, changed.toDouble, comp, over = changed == 0)
     }
 
     Result(comp, ConvergenceStats(iteration, changed.toDouble, changed == 0))

@@ -21,9 +21,10 @@ import scala.util.Try
   * parquet is written first and the sidecar lands by atomic move, so a
   * crash mid-write leaves the previous checkpoint authoritative.
   * `latest` finds the newest complete checkpoint so a restarted run resumes
-  * mid-iteration-sequence instead of from scratch. Writing + re-reading also
-  * truncates the growing Catalyst plan/lineage of the iterative loop
-  * (SURVEY.md §7.4-5).
+  * mid-iteration-sequence instead of from scratch. A write leaves the
+  * caller's frame as it was: the loops cut their state's lineage every
+  * round anyway (algos.Supersteps rule 2), so the frame they hold is
+  * already shallow.
   */
 object Checkpointer {
 
@@ -42,8 +43,10 @@ object Checkpointer {
   private def dir(root: String, iteration: Int): Path =
     Paths.get(root, f"ckpt-$iteration%06d")
 
-  /** Write state + meta; returns the re-read (lineage-truncated) DataFrame.
-    * `fingerprint` identifies (config, input) — see [[latest]].
+  /** Write state + meta; returns the meta written. The per-partition row
+    * counts are read back off the written parquet, so they describe the
+    * frame [[latest]] loads. `fingerprint` identifies (config, input) —
+    * see [[latest]].
     */
   def write(
       root: String,
@@ -52,13 +55,12 @@ object Checkpointer {
       error: Double,
       state: DataFrame,
       fingerprint: String = "",
-      converged: Boolean = false): DataFrame = {
+      converged: Boolean = false): Meta = {
     val spark = state.sparkSession
     val d = dir(root, iteration)
     val dataPath = d.resolve("state").toString
     state.write.mode("overwrite").parquet(dataPath)
-    val reread = spark.read.parquet(dataPath)
-    val perPart = reread
+    val perPart = spark.read.parquet(dataPath)
       .groupBy(spark_partition_id().as("pid")).count()
       .orderBy(col("pid")).collect().map(_.getLong(1)).toSeq
     val meta = Meta(algorithm, iteration, error,
@@ -66,7 +68,7 @@ object Checkpointer {
       totalRows = perPart.sum, fingerprint = fingerprint,
       converged = converged)
     Sidecar.write(d.resolve("_meta.json"), meta)
-    reread
+    meta
   }
 
   /** Newest complete checkpoint under `root`, if any. When

@@ -85,8 +85,8 @@ case class SccConfig(
   * frontier Bellman-Ford (every settled-enough vertex relaxes each round);
   * a finite delta batches the frontier into distance bands
   * [b*delta, (b+1)*delta) — same min-plus fixed point, fewer wasted
-  * relaxations on high-diameter weighted graphs. With infinite delta the
-  * reported iteration count rounds up to the 4-round probe boundary.
+  * relaxations on high-diameter weighted graphs. In both schedules the
+  * reported iteration count is the exact number of relax rounds run.
   */
 case class SsspConfig(
     startNode: Long,

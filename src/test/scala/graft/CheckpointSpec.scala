@@ -69,8 +69,9 @@ class CheckpointSpec extends SparkSpec {
 
   test("WCC batched shuffle rounds checkpoint at every multiple of " +
       "checkpointEvery") {
-    // Shuffle mode chains 4 rounds per action; each batch must stop at the
-    // next due checkpoint, or writes land only at lcm(4, 3) = 12, 24, ...
+    // Every shuffle-mode round materializes on its own, so a durable write
+    // lands at each multiple of checkpointEvery (3, 6, ...), not only where
+    // a multi-round batch happens to end.
     val dir = Files.createTempDirectory("graft-ckpt-wcc-cadence").toString
     val chain = (0L until 600L).map(i => (i, i + 1))
     val g = LinkGraph(edgesDF(chain))

@@ -91,7 +91,7 @@ class ObservedProbesSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val (mat, m) = Supersteps.materialize(
-      Seq.empty[(Long, Double)].toDF("id", "x"), _.localCheckpoint(),
+      Seq.empty[(Long, Double)].toDF("id", "x"),
       sum($"x"), count(lit(1)), min($"x"))
     assert(mat.count() == 0L)
     assert(m.getDouble(0) == 0.0 && m.getLong(1) == 0L && m.getDouble(2) == 0.0)
@@ -101,5 +101,31 @@ class ObservedProbesSpec extends SparkSpec {
     val r = Wcc.run(loops, sparseVertices = true)
     assert(r.components.count() == 0L)
     assert(r.stats.converged && r.stats.error == 0.0)
+  }
+
+  test("PageRank's scores carry the same size estimate at 2 and 20 " +
+      "supersteps, both placements") {
+    Seq(5000000L, 0L).foreach { bv =>
+      def estimate(k: Int) = PageRank.run(graph, PageRankConfig(k, 0.0),
+        broadcastVertices = bv)
+        .scores.queryExecution.optimizedPlan.stats.sizeInBytes
+      val (two, twenty) = (estimate(2), estimate(20))
+      assert(two == twenty, s"bv=$bv")
+    }
+    graph.unpersistCaches()
+  }
+
+  test("per-vertex triangle counts read their formulation's edge count " +
+      "off the oriented table's own checkpoint") {
+    val s = spark
+    import s.implicits._
+    // warm the graph's node count so both counted blocks see it memoized
+    TriangleCount.perVertex(graph)
+    val (_, alone) = JobCounter.counted(spark) {
+      Supersteps.checkpoint(TriangleCount.orientedEdges(graph)
+        .repartition(graph.numPartitions, $"a"))
+    }
+    val (_, built) = JobCounter.counted(spark)(TriangleCount.perVertex(graph))
+    assert(alone > 0 && built == alone)
   }
 }
