@@ -5,6 +5,7 @@ import graft.graph.LinkGraph
 import graft.sources.EventEdges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Cut
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -73,8 +74,7 @@ object SparkEntry {
       // ONE evaluation of the edge derivation: the write and append
       // branches filter the same checkpointed frame instead of each
       // re-running the full window derivation (round-6; same rows)
-      val e = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
-        EventEdges.edges(s, dir))
+      val e = Cut(EventEdges.edges(s, dir))
       io.write("g", e.filter(pmod(col("src"), lit(2)) === 0))
       io.append("g", e.filter(pmod(col("src"), lit(2)) =!= 0))
       io.read(s, "g")
@@ -106,8 +106,7 @@ object SparkEntry {
     "src_dotgraph_roundtrip" -> ((s, dir) => {
       // ONE evaluation of the edge derivation: referenced by the node-table
       // derivation (twice, via the union) and the e-line writer (round-6)
-      val e = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
-        EventEdges.edges(s, dir))
+      val e = Cut(EventEdges.edges(s, dir))
       val ids = e.select(col("src").as("id"))
         .unionAll(e.select(col("dst").as("id")))
       val nodes = ids.groupBy(col("id"))

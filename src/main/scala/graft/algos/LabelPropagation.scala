@@ -4,7 +4,7 @@ import graft.{ConvergenceStats, LabelPropagationConfig}
 import graft.graph.LinkGraph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graft.Cut
 
 /** Synchronous label propagation (community detection).
   *
@@ -23,9 +23,11 @@ import org.apache.spark.storage.StorageLevel
   *
   * One superstep = join(edges, labels) + groupBy(dst, label).count +
   * per-dst argmax via max(struct(cnt, -label)) — all partial-aggregatable,
-  * no UDAF, no window (SURVEY.md §7.3). Synchronous LPA can oscillate on
-  * bipartite-ish structures; maxIterations bounds that, and the fixed-point
-  * check compares against the previous state.
+  * no UDAF, no window (SURVEY.md §7.3), over a compressed vote table cut
+  * once per run ([[Cut]]) in its placement's layout, which in shuffle
+  * mode keeps hash(src) so a round exchanges only the labels. Synchronous
+  * LPA can oscillate on bipartite-ish structures; maxIterations bounds
+  * that, and the fixed-point check compares against the previous state.
   */
 object LabelPropagation {
 
@@ -44,58 +46,42 @@ object LabelPropagation {
     // toward the mode via the multiplicity column (identical votes, 8x
     // smaller scan on duplicate-heavy graphs). Built in ONE pass over the
     // raw edges (round-6): a row-local explode fans each edge into both
-    // directions ahead of the count aggregation, replacing the old
-    // two-cache build (materialize `multiplicities`, then union + re-
-    // aggregate + re-partition it) — one edge-input scan and one exchange
-    // instead of two of each. Self-loops are KEPT in the cache rows (as
-    // (v, v) with doubled cnt) so max-id survives and the node count rides
-    // this cache instead of a second evaluation of the uncached upstream
-    // derivation; the per-round vote join filters them out (a vertex does
-    // not vote for itself), exactly as before.
-    // Broadcast mode reads row-balanced partitions (hub skew can't cap a
-    // stage); shuffle mode reads hash(src) partitions so the per-round
-    // state join needs no exchange on the big side (the PageRank cache
-    // split).
-    val undBase = graph.edges.select(explode(array(
+    // directions ahead of the count aggregation — one edge-input scan and
+    // one exchange. Self-loops are KEPT in the table (as (v, v) with
+    // doubled cnt) so max-id survives and the node count rides its cut
+    // instead of a second evaluation of the uncached upstream derivation;
+    // the per-round vote join filters them out (a vertex does not vote for
+    // itself).
+    val votes = graph.edges.select(explode(array(
         struct($"src", $"dst"),
         struct($"dst".as("src"), $"src".as("dst")))).as("e"))
       .select($"e.src".as("src"), $"e.dst".as("dst"))
       .groupBy($"src", $"dst").agg(count(lit(1)).cast("double").as("cnt"))
-    // The cache materializes ONCE, mode-independent (round-robin balanced —
-    // the broadcast-mode layout), and the node count reads off it; shuffle
-    // mode then repartitions the IN-MEMORY compressed table by src (one
-    // exchange of the small compressed rows, no re-aggregation and no
-    // second scan of the raw edges). Replaces the old shape that needed n
-    // before it could build anything and so paid a full extra evaluation
-    // of the upstream derivation just for the count.
-    val undAll = undBase.repartition(graph.numPartitions)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = graph.nodeCountFrom(undAll)
-    // release the cache before throwing: a long-running caller (the
-    // serving daemon) would otherwise pin one empty InMemoryRelation per
-    // failed call (the pre-round-6 shape required n > 0 before
-    // persisting anything)
-    if (n <= 0) {
-      undAll.unpersist()
-      throw new IllegalArgumentException("LP on empty graph")
+    // The vote table is cut once per run in its placement's layout:
+    // row-balanced for broadcast joins (hub skew cannot cap a stage),
+    // hash(src) in shuffle mode, which the cut declares, so a round
+    // exchanges only the labels. The placement reads n; a graph that has
+    // not counted its nodes yet observes n in a row-balanced cut, which
+    // shuffle mode then cuts again by src.
+    val parts = graph.numPartitions
+    var balanced: Option[DataFrame] = None
+    val n = graph.nodeCountFrom {
+      val (cut, m) = Cut.measured(votes.repartition(parts),
+        Seq(LinkGraph.nodeCountMeasure))
+      balanced = Some(cut)
+      m.getLong(0)
     }
+    require(n > 0, "LP on empty graph")
     // labels at iteration k do not depend on maxIterations or the
     // earlyStop scheduling flag
     val steps = new Supersteps(spark, n, broadcastVertices, checkpointDir,
       checkpointEvery, "label_propagation",
       s"label_propagation|n=$n|m=${graph.edgeCount}")
-    val undCache =
-      if (steps.broadcastMode) undAll
-      else {
-        val bySrc = undAll.repartition(graph.numPartitions, $"src")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        bySrc.count()
-        undAll.unpersist()
-        bySrc
-      }
-    // self-loop rows stay in the CACHE (they carry the max id); the vote
-    // scan filters them per round, same votes as the old pre-filtered build
-    val und = undCache.filter($"src" =!= $"dst")
+    val und = (
+      if (steps.broadcastMode)
+        balanced.getOrElse(Cut(votes.repartition(parts)))
+      else Cut(balanced.getOrElse(votes).repartition(parts, $"src"))
+    ).filter($"src" =!= $"dst")
     // No hub salting here, unlike PageRank: LP's voters ride a per-round
     // (vid, label) exchange whose explode + re-shuffle measured slower than
     // the hub straggler it removes at every salt factor tried (BASELINE.md
@@ -134,7 +120,6 @@ object LabelPropagation {
         over = stop || iteration >= config.maxIterations)
     }
 
-    undCache.unpersist()
     Result(labels, ConvergenceStats(iteration, changed.toDouble, changed == 0))
   }
 }

@@ -4,6 +4,7 @@ import graft.{ConvergenceStats, SccConfig}
 import graft.graph.LinkGraph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Cut
 
 /** Strongly connected components.
   *
@@ -44,12 +45,13 @@ import org.apache.spark.sql.functions._
   *     graphs, whose condensation is shallow once TRIM peels the DAG tail.
   *
   * Every step is a Catalyst join/aggregate over the partitioned edge
-  * Dataset; state is vertex-sized and cut per round by
-  * [[Supersteps.checkpoint]], which drops the origin size estimate that
-  * the self-join supersteps would otherwise compound geometrically until
-  * stats estimation dominates the driver. Durable checkpoint/resume via
-  * `checkpointDir` writes the total labeling (resolved labels + -1
-  * sentinel for active vertices) once per outer round.
+  * Dataset; state is vertex-sized and cut per round by [[Cut]], which
+  * drops the origin size estimate that the self-join supersteps would
+  * otherwise compound geometrically until stats estimation dominates the
+  * driver. The simple edge set is cut once, row-balanced, for the reason
+  * [[Wcc.undirected]] gives. Durable checkpoint/resume via `checkpointDir`
+  * writes the total labeling (resolved labels + -1 sentinel for active
+  * vertices) once per outer round.
   */
 object Scc {
 
@@ -66,12 +68,12 @@ object Scc {
 
     // ONE evaluation of the (possibly expensive, uncached) upstream edge
     // derivation: node count, vertex universe, and the simple directed
-    // edge set below all derive from this checkpoint instead of re-running
-    // the derivation per consumer. Its row count (for the fingerprint) is
-    // observed in the same action.
-    val (raw, rawRows) = Supersteps.materialize(
-      graph.edges.select($"src", $"dst"), count(lit(1)))
-    val n = graph.nodeCountFrom(raw)
+    // edge set below all derive from this cut instead of re-running the
+    // derivation per consumer. Its row count (for the fingerprint) and max
+    // id are observed in the same action.
+    val (raw, rawMeasures) = Cut.measured(graph.edges.select($"src", $"dst"),
+      Seq(count(lit(1)), LinkGraph.nodeCountMeasure))
+    val n = graph.nodeCountFrom(rawMeasures.getLong(1))
     require(n > 0, "SCC on empty graph")
     // Checkpoint state = one total labeling DataFrame: resolved vertices
     // carry their final scc label, still-active vertices the sentinel -1.
@@ -80,7 +82,7 @@ object Scc {
     // splits the latest state back into resolved/active and restricts the
     // edge set (north rule §4.8).
     val steps = new Supersteps(spark, n, broadcastVertices, checkpointDir,
-      checkpointEvery, "scc", s"scc|n=$n|m=${rawRows.getLong(0)}")
+      checkpointEvery, "scc", s"scc|n=$n|m=${rawMeasures.getLong(0)}")
 
     // Min-label propagation along `edges` (label flows src -> dst) to the
     // fixed point lbl(v) = min id over in-reachers of v, with pointer
@@ -109,21 +111,18 @@ object Scc {
     }
 
     // Connectivity ignores weights, multiplicity, and self-loops.
-    var activeEdges = raw
-      .where($"src" =!= $"dst").distinct()
-      .repartition(graph.numPartitions, $"src")
-      .transform(Supersteps.checkpoint)
+    var activeEdges = Cut(raw.where($"src" =!= $"dst").distinct()
+      .repartition(graph.numPartitions))
     // graph-partition-count slices (round-6): the active set seeds every
     // trim/propagation state; a 32-slice default re-inflates each of the
     // many per-round jobs to 32 tasks after adaptiveParts sized the graph
     var active = spark.range(0, n, 1, graph.numPartitions).toDF("id")
     var remaining = n
 
-    // Restrict the edge set to the surviving vertex set; one eager
-    // checkpoint (single action) instead of a repartition+persist
-    // cycle per peel. The src-side semi-join runs LAST so in shuffle-hash
-    // mode the output keeps hash(src) partitioning for the next
-    // propagation's gather (broadcast mode is partitioning-agnostic).
+    // Restrict the edge set to the surviving vertex set; one eager cut
+    // (single action) instead of a repartition+persist cycle per peel. It
+    // ends in a semi-join, not a repartition, so the cut declares no
+    // partitioning (broadcast mode is partitioning-agnostic).
     def restrict(edges: DataFrame, verts: DataFrame): DataFrame =
       edges
         .join(steps.side(verts.select($"id".as("dst"))),
@@ -131,7 +130,7 @@ object Scc {
         .join(steps.side(verts.select($"id".as("src"))),
           Seq("src"), "left_semi")
         .select($"src", $"dst")
-        .transform(Supersteps.checkpoint)
+        .transform(Cut(_))
 
     val resolved = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var iteration = 0
@@ -207,7 +206,7 @@ object Scc {
           remaining -= cCount
           if (remaining > 0) {
             active = active.join(claimed.select($"id"), Seq("id"),
-              "left_anti").transform(Supersteps.checkpoint)
+              "left_anti").transform(Cut(_))
             activeEdges = restrict(activeEdges, active)
           }
         }

@@ -1,9 +1,9 @@
 package graft.algos
 
 import graft.checkpoint.Checkpointer
-import org.apache.spark.sql.graft.StatsReset
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, lit}
+import org.apache.spark.sql.graft.Cut
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 
 /** The superstep policy PageRank, WCC, SCC, LP and SSSP share, built once
   * per run. It owns four rules; each algorithm keeps only its step
@@ -15,15 +15,16 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, lit}
   *     sort-merges the cached edge side (an SMJ would re-sort the big table
   *     every round).
   *  2. MATERIALIZATION. Every round's state is materialized before the
-  *     next round reads it, in both placements, by one cut:
-  *     StatsReset.checkpointNoStats, which also drops the origin plan's
-  *     size estimate (a plain localCheckpoint keeps it, and the join
-  *     estimates multiply it every round). A lazily chained
-  *     round re-reads its input state once per state join, so k chained
-  *     WCC/SCC rounds (two state joins plus the pointer-jump self-join)
-  *     inline ~4^k copies of the start state (shuffle-mode WCC on a
-  *     70k-edge graph, 4 cores: 84-92 s chained 4 rounds per action vs
-  *     3-4 s at one round per action). The round's convergence measure
+  *     next round reads it, in both placements, by the engine's one lineage
+  *     cut, [[Cut]], which also drops the origin plan's size estimate (a
+  *     plain localCheckpoint keeps it, and the join estimates multiply it
+  *     every round). No round ends in a repartition, so the cut declares
+  *     no partitioning for state. A lazily chained round re-reads its
+  *     input state once per state join, so k chained WCC/SCC rounds (two
+  *     state joins plus the pointer-jump self-join) inline ~4^k copies of
+  *     the start state (shuffle-mode WCC on a 70k-edge graph, 4 cores:
+  *     84-92 s chained 4 rounds per action vs 3-4 s at one round per
+  *     action). The round's convergence measure
   *     (error, changed or pending rows) rides that same action
   *     ([[Supersteps.materialize]]), so a probe costs no job: the round's
   *     rows carry what the measure compares against (`prev`) into that
@@ -68,8 +69,7 @@ private[algos] final class Supersteps(
   /** Rules 2 and 3: the resumed state, or `seed` (evaluated only without
     * one), materialized.
     */
-  def start(seed: => DataFrame): DataFrame =
-    Supersteps.checkpoint(resume.fold(seed)(_._2))
+  def start(seed: => DataFrame): DataFrame = Cut(resume.fold(seed)(_._2))
 
   /** Rule 4: write `state` durably after `iteration` unless `over` (the run
     * stops here and the caller holds the result) or the cadence says no.
@@ -88,26 +88,10 @@ private[algos] final class Supersteps(
 
 private[algos] object Supersteps {
 
-  /** Rule 2's lineage cut: an eager checkpoint with no carried size
-    * estimate (StatsReset).
+  /** Rule 2's one action: [[Cut.measured]] materializes `df` without its
+    * `prev` column (if any), and observes the aggregate `measures` (at
+    * least one) over its rows, `prev` included, in that same action.
     */
-  def checkpoint(df: DataFrame): DataFrame = StatsReset.checkpointNoStats(df)
-
-  /** Rule 2's one action: [[checkpoint]] materializes `df` without its
-    * `prev` column (if any), and the aggregate `measures` (at least one)
-    * are evaluated over its rows, `prev` included, inside that same action
-    * (Dataset.observe) instead of by a second job over the materialized
-    * frame. Returns the materialized frame and the measures in order; a
-    * measure over no rows (sum, min of an empty state) reads as 0, so
-    * callers that need "nothing there" observe a count beside it.
-    */
-  def materialize(df: DataFrame, measures: Column*): (DataFrame, Row) = {
-    val named = measures.zipWithIndex.map { case (m, i) =>
-      coalesce(m, lit(0)).as(s"m$i") }
-    val obs = Observation()
-    val mat = checkpoint(df.observe(obs, named.head, named.tail: _*)
-      .drop("prev"))
-    val got = obs.get
-    (mat, Row.fromSeq(named.indices.map(i => got(s"m$i"))))
-  }
+  def materialize(df: DataFrame, measures: Column*): (DataFrame, Row) =
+    Cut.measured(df, measures, "prev")
 }

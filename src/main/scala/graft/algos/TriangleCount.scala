@@ -3,7 +3,8 @@ package graft.algos
 import graft.graph.LinkGraph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graft.Cut
+import org.apache.spark.sql.internal.SQLConf
 
 /** Exact global triangle count.
   *
@@ -46,10 +47,10 @@ object TriangleCount {
   def orientedEdges(graph: LinkGraph): DataFrame = {
     val spark = graph.edges.sparkSession
     import spark.implicits._
-    // (src < dst), dedup, no loops — checkpointed once: the degree and
+    // (src < dst), dedup, no loops — cut once: the degree and
     // orientation branches below reference it three times, and the
     // upstream derivation is not cached
-    val simple = Supersteps.checkpoint(graph.canonicalUndirected)
+    val simple = Cut(graph.canonicalUndirected)
     // undirected degree over the simple graph
     val deg = simple.select($"src".as("id"))
       .union(simple.select($"dst".as("id")))
@@ -113,60 +114,66 @@ object TriangleCount {
     */
   val wedgeMaxEdges: Long = 1000000L
 
-  /** Triangle rows (u, v, w) via the small-graph wedge join. */
-  private def wedgeTriangles(oriented: DataFrame): DataFrame = {
+  /** Triangle rows (u, v, w) via the small-graph wedge join over the
+    * oriented cut of `rows` rows. A cut carries no size estimate, so the
+    * joins hint the broadcasts the session's threshold would have chosen
+    * for that size (Spark's own estimate: 8 bytes of row header plus 8
+    * per long); unhinted, AQE shuffles both sides first and broadcasts
+    * only after.
+    */
+  private def wedgeTriangles(oriented: DataFrame, rows: Long): DataFrame = {
     val spark = oriented.sparkSession
     import spark.implicits._
+    val small: DataFrame => DataFrame =
+      if (rows * 24L <= SQLConf.get.autoBroadcastJoinThreshold) broadcast(_)
+      else identity
     val e1 = oriented.select($"a".as("u"), $"b".as("v"))
     val e2 = oriented.select($"a".as("v"), $"b".as("w"))
     val e3 = oriented.select($"a".as("u"), $"b".as("w"))
-    e1.join(e2, Seq("v")).join(e3, Seq("u", "w")).select($"u", $"v", $"w")
+    e1.join(small(e2), Seq("v")).join(small(e3), Seq("u", "w"))
+      .select($"u", $"v", $"w")
+  }
+
+  /** [[orientedEdges]] hash(a)-partitioned and cut (the cut declares that
+    * layout, so the adjacency aggregation and its joins on `a` need no
+    * exchange of the edge side), with its row count, which picks the
+    * formulation, observed inside the cut's own action. A cut, NOT
+    * persist(): [[perVertex]]'s returned plan outlives the call, so a
+    * persist could never be unpersisted there and a long-running caller
+    * (the daemon's repeated COMPUTE) would pin one cached table per call;
+    * cut blocks are released by the ContextCleaner when the frame is GC'd.
+    */
+  private def orientedCut(graph: LinkGraph): (DataFrame, Long) = {
+    val (oriented, rows) = Cut.measured(
+      orientedEdges(graph).repartition(graph.numPartitions, col("a")),
+      Seq(count(lit(1))))
+    (oriented, rows.getLong(0))
   }
 
   def run(graph: LinkGraph, wedgeMax: Long = wedgeMaxEdges): Long = {
     val spark = graph.edges.sparkSession
     import spark.implicits._
-    val oriented = orientedEdges(graph)
-      .repartition(graph.numPartitions, $"a")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the count doubles as the cache materialization the counting job
-      // needs anyway; its value picks the formulation
-      if (oriented.count() < wedgeMax)
-        wedgeTriangles(oriented).count()
-      else
-        edgesWithAdjacency(oriented)
-          .select(size(array_intersect($"u_nbrs", $"v_nbrs")).as("c"))
-          .agg(coalesce(sum($"c"), lit(0L)).as("t"))
-          .first().getLong(0)
-    } finally {
-      oriented.unpersist()
-    }
+    val (oriented, rows) = orientedCut(graph)
+    if (rows < wedgeMax) wedgeTriangles(oriented, rows).count()
+    else
+      edgesWithAdjacency(oriented)
+        .select(size(array_intersect($"u_nbrs", $"v_nbrs")).as("c"))
+        .agg(coalesce(sum($"c"), lit(0L)).as("t"))
+        .first().getLong(0)
   }
 
   /** Per-vertex triangle counts (each vertex credited once per incident
     * triangle): triangle corners from whichever formulation [[run]]'s
     * size rule picks (in the intersection shape only the corners are
     * materialized — output-proportional, T rows for T triangles, never
-    * wedge-proportional), exploded and counted. The oriented table is
-    * checkpointed (not persisted) because it backs the returned plan
-    * beyond this call — see the comment at the checkpoint site.
+    * wedge-proportional), exploded and counted.
     */
   def perVertex(graph: LinkGraph, wedgeMax: Long = wedgeMaxEdges): DataFrame = {
     val spark = graph.edges.sparkSession
     import spark.implicits._
-    // a checkpoint, NOT persist(): the returned plan outlives this call,
-    // so an explicit persist could never be unpersisted here and a
-    // long-running caller (the daemon's repeated COMPUTE) would pin one
-    // cached table per call — checkpoint blocks are released by the
-    // ContextCleaner when the frame is GC'd (same discipline as
-    // Dedup.exact's fingerprint table). Its row count, which picks the
-    // formulation, is observed inside the checkpoint's own action.
-    val (oriented, rows) = Supersteps.materialize(
-      orientedEdges(graph).repartition(graph.numPartitions, $"a"),
-      count(lit(1)))
+    val (oriented, rows) = orientedCut(graph)
     val tris =
-      if (rows.getLong(0) < wedgeMax) wedgeTriangles(oriented)
+      if (rows < wedgeMax) wedgeTriangles(oriented, rows)
       else
         edgesWithAdjacency(oriented)
           .select($"a".as("u"), $"b".as("v"),

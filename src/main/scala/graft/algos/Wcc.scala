@@ -4,6 +4,7 @@ import graft.{ConvergenceStats, WccConfig}
 import graft.graph.LinkGraph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Cut
 
 /** Weakly connected components as an iterative hash-min fixed point.
   *
@@ -90,21 +91,31 @@ object Wcc {
         least(col("p.lbl"), coalesce(col("jlbl"), col("p.lbl"))).as("lbl"))
   }
 
+  /** `raw`'s canonical edges: self-loops dropped and duplicates merged
+    * (both no-ops under min), each pair once as (least, greatest).
+    */
+  private def canonical(raw: DataFrame): DataFrame =
+    raw.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst"))
+      .distinct()
+
   /** The undirected edge table a round scans: both directions of the
-    * canonical edges, built once per run and checkpointed lazily (its
-    * blocks are released like the run's per-round checkpoints). A round
-    * reads the neighbour-min aggregation twice, for the propagated labels
-    * and for the pointer-jump side, and AQE reuses that exchange over an
-    * RDD scan but not over two scans of one cached table (each becomes its
-    * own table-cache stage), so a cached table would run the round's edge
-    * shuffle twice.
+    * canonical edges `canon`, cut once per run, row-balanced in both
+    * placements. Not hash(src), which the cut would declare: a round reads
+    * the neighbour-min aggregation twice (propagated labels, pointer-jump
+    * side), and AQE reuses its exchange over an undeclared scan only (a
+    * declared scan's partitioning keeps its own attribute ids when the
+    * plan is canonicalized). Saving the shuffle-mode round's edge exchange
+    * that way cost more than it saved (53k vertices, 203k edges, shuffle
+    * mode, 4 cores: 49 jobs and 4.9 s declared vs 45 and 3.4 s not).
     */
   private[algos] def undirected(canon: DataFrame,
       numPartitions: Int): DataFrame =
-    canon
-      .union(canon.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(numPartitions, col("src"))
-      .localCheckpoint(eager = false)
+    Cut(canon.select(explode(array(struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .repartition(numPartitions))
 
   /** @param sparseVertices when true, the component state is initialized
     *   from the CANONICAL edge endpoints only instead of the dense 0..n-1
@@ -131,55 +142,45 @@ object Wcc {
     import spark.implicits._
 
     // ONE evaluation of the (possibly expensive, uncached) upstream edge
-    // derivation: node count and the canonical set both read this
-    // checkpoint (raw keeps self-loop-only vertices, so max-id is right);
-    // its row count (for the fingerprint) is observed in the same action.
-    val (raw, rawRows) = Supersteps.materialize(
-      graph.edges.select($"src", $"dst"), count(lit(1)))
-    // sparse mode never materializes the dense universe, so the (possibly
-    // astronomically large) max-id+1 is only computed for the fingerprint
-    // and the broadcast decision when a checkpoint dir is in play.
-    val n = if (sparseVertices) -1L else graph.nodeCountFrom(raw)
+    // derivation: the undirected table reads this cut, and its row count
+    // (for the fingerprint) and max id (raw keeps self-loop-only vertices)
+    // are observed in the same action. Sparse mode cuts the canonical
+    // edges instead: it ignores the max id, and its row count bounds the
+    // state.
+    val (raw, rawMeasures) = Cut.measured(
+      graph.edges.select($"src", $"dst")
+        .transform(e => if (sparseVertices) canonical(e) else e),
+      Seq(count(lit(1)), LinkGraph.nodeCountMeasure))
+    val n =
+      if (sparseVertices) -1L else graph.nodeCountFrom(rawMeasures.getLong(1))
     require(sparseVertices || n > 0, "WCC on empty graph")
-    // Undirected simple view: duplicates are idempotent under min, drop them
-    // once up front to shrink the join input; self-loops are no-ops.
-    // Checkpoint the canonical set BEFORE the union: both union branches
-    // reference it, so it would otherwise compute twice when the
-    // undirected table materializes (e.g. the LSH pair pipeline in
-    // Dedup.dupGroups).
-    val (canon, canonRows) = Supersteps.materialize(
-      raw.filter($"src" =!= $"dst")
-        .select(least($"src", $"dst").as("src"),
-          greatest($"src", $"dst").as("dst"))
-        .distinct(),
-      count(lit(1)))
+    val rawRows = rawMeasures.getLong(0)
     // sparse mode has no n; its state size is bounded by the endpoint count
-    // (<= undirected edge count = 2 x canonical rows), so gate the
-    // broadcast on that instead. The fingerprint names state-determining
-    // facts only: the comp labeling at iteration k does not depend on
-    // maxIterations.
+    // (<= 2 x canonical edge rows), so gate the broadcast on that instead.
+    // The fingerprint names state-determining facts only: the comp
+    // labeling at iteration k does not depend on maxIterations.
     val steps = new Supersteps(spark,
-      if (sparseVertices) 2L * canonRows.getLong(0) else n,
+      if (sparseVertices) 2L * rawRows else n,
       broadcastVertices, checkpointDir, checkpointEvery, "wcc",
-      s"wcc|n=$n|m=${rawRows.getLong(0)}|sparse=$sparseVertices")
+      s"wcc|n=$n|m=$rawRows|sparse=$sparseVertices")
     // a TERMINAL checkpoint (the contraction branch's composed labeling)
     // is final state: return it directly — re-entering the loop would
     // skip the confirming round when iteration >= maxIterations and
     // misreport a finished run as converged=false
     steps.resume.filter(_._1.converged).foreach { case (meta, state) =>
-      return Result(Supersteps.checkpoint(state),
+      return Result(Cut(state),
         ConvergenceStats(meta.iteration, 0.0, converged = true))
     }
-    val und = undirected(canon, graph.numPartitions)
+    val und = undirected(if (sparseVertices) raw else canonical(raw),
+      graph.numPartitions)
     var iteration = steps.startIteration
     // One lineage cut per round: the pointer-jump self-join would
     // otherwise DOUBLE the logical plan every round (SURVEY.md §7.4-5).
     var comp = steps.start {
       if (sparseVertices)
-        // edge endpoints only — a pair-sized state, never the id space
-        canon.select($"src".as("id"))
-          .union(canon.select($"dst".as("id")))
-          .distinct()
+        // edge endpoints only — a pair-sized state, never the id space;
+        // every endpoint is a src of the undirected table
+        und.select($"src".as("id")).distinct()
           .select($"id", $"id".as("comp"))
       // graph-partition-count slices, not the 32-slice session default:
       // every round job runs one task per state partition (round-6)
@@ -221,7 +222,7 @@ object Wcc {
         // follows real paths), so composing labelings preserves both
         // components and the min-id contract (the component min M always
         // has comp(M)=M and so survives contraction as a class vertex).
-        val contracted = canon
+        val contracted = und.filter($"src" < $"dst")
           .join(steps.side(
             comp.select($"id".as("src"), $"comp".as("csrc"))), Seq("src"))
           .join(steps.side(
@@ -241,7 +242,7 @@ object Wcc {
             .select($"id".as("comp"), $"comp".as("fin"))), Seq("comp"),
             "left")
           .select($"id", coalesce($"fin", $"comp").as("comp"))
-          .transform(Supersteps.checkpoint)
+          .transform(Cut(_))
         val totalIters = iteration + sub.stats.iterations
         // Round-4 verdict #7: this branch RETURNS — without a durable write
         // a crash after a long contracted run would resume from before the

@@ -5,6 +5,7 @@ import graft.text.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Cut
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.Encoders
 
@@ -37,7 +38,7 @@ object Dedup {
   def exact(docs: DataFrame): DataFrame = {
     // (doc_id, fp) is referenced twice (group + join-back); checkpoint the
     // 40-byte-per-doc table once instead of md5-ing the corpus twice.
-    // checkpointNoStats (localCheckpoint) rather than persist(): its blocks
+    // a Cut (localCheckpoint) rather than persist(): its blocks
     // are released by the ContextCleaner when the frame is GC'd, so a
     // long-running caller (the serving daemon) cannot accumulate pinned
     // caches from library internals. NOT widened (unlike docShingles /
@@ -46,7 +47,7 @@ object Dedup {
     // round-robin exchange — round-6 A/B measured 0.66 s unwidened vs
     // 0.87 s widened at sf0.1 (same call as the embeddings decline in
     // Similarity.withNorm).
-    val fp = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
+    val fp = Cut(
       docs.select(col("doc_id"),
         TextAnalysis.fingerprint(col("text")).as("fp")))
     val groups = fp.groupBy(col("fp")).agg(
@@ -86,8 +87,7 @@ object Dedup {
     // reference re-tokenizes and re-explodes the full corpus — measured 24
     // parquet scans / 18 explode passes in the sibling minHashLsh plan
     // before this checkpoint (bench/PlanDumpAll, round 4)
-    val sh = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
-      docShingles(docs, k))
+    val sh = Cut(docShingles(docs, k))
     if (maxShingleDf <= 0) {
       // no cap: the capped self-join below IS the full exact computation
       val candidates = sh.as("a")
@@ -256,12 +256,10 @@ object Dedup {
       bands: Int, k: Int): (DataFrame, DataFrame, DataFrame) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    val sh = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
-      docShingles(docs, k))
+    val sh = Cut(docShingles(docs, k))
     val mhNames = (0 until numHashes).map(i => s"mh_$i")
     // ONE signature materialization (doc_id + the 16 mh columns)
-    val sig = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
-      minHashSignaturesFrom(sh, numHashes))
+    val sig = Cut(minHashSignaturesFrom(sh, numHashes))
     // class representative rep = min doc_id per signature class, via a
     // partial-aggregated groupBy: map-side combine collapses a B-copy
     // boilerplate class to one row per map partition BEFORE the exchange.
@@ -278,7 +276,7 @@ object Dedup {
       .agg(min(col("doc_id")).as("rep"))
     // member doc -> class rep: checkpointed once (narrow V x 2) for the
     // two expansion references below
-    val members = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
+    val members = Cut(
       sig.join(classes, mhNames).select(col("doc_id"), col("rep")))
     val banded = classes.select(col("rep"),
       posexplode(array((0 until bands).map(b =>
@@ -366,22 +364,23 @@ object Dedup {
     // otherwise evaluate the whole LSH pipeline per plan reference.
     // minHashPairs, not minHashLsh: the est_jaccard columns were computed
     // through two signature joins and immediately dropped here (round-6).
-    val pairs = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
+    val (pairs, pairRows) = Cut.measured(
       minHashPairs(docs, threshold, numHashes, bands, k)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"),
-          lit(1.0).as("weight")))
+          lit(1.0).as("weight")),
+      Seq(count(lit(1))))
     // sparseVertices: the closure fixed point iterates ONLY docs incident
     // to an LSH pair (near-dup pairs are sparse at any scale); the ~entire
     // corpus of singletons never enters a superstep and is unioned back as
     // group_id = doc_id below via the left-join coalesce (round-2 verdict
     // #2: the dense form iterated billions of untouched rows at 10^9 docs).
     // The pair graph's partition count derives from the MEASURED pair count
-    // (the checkpointed frame has no plan stats, so the byte-estimate
+    // (the cut has no plan stats, so the byte-estimate
     // clamp cannot see how tiny it is): a near-dup pair set orders of
     // magnitude smaller than the corpus should not run 32-task closure
-    // rounds (round-6; the count is one cheap job over cached partitions).
+    // rounds (round-6; the count is observed inside the pairs' own cut).
     val pairParts = graft.graph.LinkGraph.adaptivePartsForRows(
-      pairs.count(), docs.sparkSession.conf
+      pairRows.getLong(0), docs.sparkSession.conf
         .get("spark.sql.shuffle.partitions", "32").toInt)
     val comp = graft.algos.Wcc
       .run(graft.graph.LinkGraph(pairs, numPartitions = pairParts),
@@ -445,8 +444,7 @@ object Dedup {
   def simHashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     // both self-join sides reference the signature aggregation — without
     // the checkpoint each side re-tokenizes and re-hashes the corpus
-    val sig = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
-      simHash(docs))
+    val sig = Cut(simHash(docs))
     val banded = sig.select(col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(b =>
         shiftrightunsigned(col("simhash"), b * 15)
@@ -479,12 +477,12 @@ object Dedup {
     import graft.sim.Similarity
     import graft.sim.Similarity.{cosine, withNorm, quantize, lshBucket}
     val d = if (dims > 0) dims else Similarity.embedDims(embeddings)
-    // checkpointNoStats, NOT persist(): referenced by the banding plus both
+    // a Cut, NOT persist(): referenced by the banding plus both
     // verification sides, and a bare persist from a library internal is
     // never unpersisted — in a long-running process (the serving daemon)
     // those CacheManager entries accumulate; localCheckpoint blocks are
     // GC-reclaimed with the frame
-    val e = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
+    val e = Cut(
       withNorm(embeddings).withColumn("q", quantize(col("emb_d"))))
     val banded = e.select(col("vec_id"),
       posexplode(array((0 until numTables).map(t =>

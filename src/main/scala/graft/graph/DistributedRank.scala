@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Cut
 
 /** Distributed dense 0-based rank by a total order — the scale-safe
   * replacement for `row_number() OVER (ORDER BY ...)` (which shuffles every
@@ -25,7 +26,7 @@ object DistributedRank {
       df: DataFrame, order: Seq[Column], numPartitions: Int,
       rankCol: String): DataFrame = {
     val spark = df.sparkSession
-    val ranked = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(df
+    val ranked = Cut(df
       .repartitionByRange(numPartitions, order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("__pid", spark_partition_id())

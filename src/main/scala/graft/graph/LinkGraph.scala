@@ -52,35 +52,35 @@ class LinkGraph private (
 
   def nodeCount: Long = {
     if (cachedNodeCount < 0) countSource match {
-      case Some(cs) => cachedNodeCount = scan(cs)._1
+      case Some(cs) => cachedNodeCount = LinkGraph.scan(cs)._1
       case None => edgeCount // its scan of `edges` memoizes both counts
     }
     cachedNodeCount
   }
 
-  /** Node count computed against a pre-materialized view of `edges` (the
-    * same max-id+1 rule; an explicit override still wins) — lets an
-    * algorithm that has already checkpointed the edge set avoid a SECOND
-    * full evaluation of an expensive uncached upstream derivation just for
-    * the count. The result is memoized, so later `vertices`/`nodeCount`
-    * reads reuse it.
+  /** Node count from a max id + 1 the caller already has in hand, by name:
+    * an algorithm observes [[LinkGraph.nodeCountMeasure]] in the cut it
+    * runs over the edges anyway, so the count costs no job of its own. It
+    * is evaluated only when the count is still unknown, and memoized, so
+    * later `vertices`/`nodeCount` reads reuse it; an explicit override
+    * still wins.
     *
-    * CONTRACT (round-2 advice): the view MUST preserve the maximum node id
-    * of `edges` — a filtered/self-loop-free/deduplicated frame that could
-    * drop the max-id row would silently poison nodeCount and `vertices`
-    * for every later consumer. Pass only projections/repartitions/
-    * checkpoints of the full edge set.
+    * CONTRACT (round-2 advice): the frame it was measured over MUST keep
+    * the maximum node id of `edges`. A filtered/self-loop-free/deduplicated
+    * frame that could drop the max-id row would silently poison nodeCount
+    * and `vertices` for every later consumer. Measure only projections/
+    * repartitions/compressions of the full edge set.
     *
     * When a `countSource` is present (a Deduplicated build whose raw input
-    * kept self-loop-only max-id vertices), it wins over the materialized
-    * view: `edges` itself already dropped those vertices, so ANY view of it
-    * violates the max-id contract — the shortcut would re-introduce the
+    * kept self-loop-only max-id vertices), it wins over the caller's
+    * measure: `edges` itself already dropped those vertices, so ANY view of
+    * it violates the max-id contract — the shortcut would re-introduce the
     * shrunken-universe bug on the WCC/SCC/LP entry points and memoize it
     * for every later nodeCount/vertices read (round-5 review).
     */
-  def nodeCountFrom(materializedEdges: DataFrame): Long = {
+  def nodeCountFrom(maxIdPlusOne: => Long): Long = {
     if (cachedNodeCount < 0)
-      cachedNodeCount = scan(countSource.getOrElse(materializedEdges))._1
+      cachedNodeCount = countSource.fold(maxIdPlusOne)(LinkGraph.scan(_)._1)
     cachedNodeCount
   }
 
@@ -90,20 +90,11 @@ class LinkGraph private (
     */
   def edgeCount: Long = {
     if (cachedEdgeCount < 0) {
-      val (n, m) = scan(edges)
+      val (n, m) = LinkGraph.scan(edges)
       if (cachedNodeCount < 0 && countSource.isEmpty) cachedNodeCount = n
       cachedEdgeCount = m
     }
     cachedEdgeCount
-  }
-
-  /** (max node id + 1, row count) of an edge frame in one aggregation; a
-    * frame with no rows has 0 nodes.
-    */
-  private def scan(df: DataFrame): (Long, Long) = {
-    val r = df.agg(max(greatest(col("src"), col("dst"))), count(lit(1)))
-      .first()
-    (if (r.isNullAt(0)) 0L else r.getLong(0) + 1L, r.getLong(1))
   }
 
   // Every persisted cache this graph materializes registers here, so a
@@ -385,6 +376,21 @@ class LinkGraph private (
 }
 
 object LinkGraph {
+
+  /** Max node id + 1 of a (src, dst) frame, 0 for no rows: the reference's
+    * edge-list node count (crates/builder/src/input/edgelist.rs:84-90), as
+    * one aggregate a caller can observe inside a cut (`nodeCountFrom`).
+    */
+  def nodeCountMeasure: Column =
+    coalesce(max(greatest(col("src"), col("dst"))) + 1L, lit(0L))
+
+  /** (max node id + 1, row count) of an edge frame in one aggregation; a
+    * frame with no rows has 0 nodes.
+    */
+  def scan(df: DataFrame): (Long, Long) = {
+    val r = df.agg(nodeCountMeasure, count(lit(1))).first()
+    (r.getLong(0), r.getLong(1))
+  }
 
   /** Targeted hub split of a (src, dst, cnt) gather table — the
     * distributed statement of the reference's degree-balanced work ranges

@@ -4,6 +4,7 @@ import graft.functions.PortableHash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Cut
 
 /** Dataset-curation operators for training-data pipelines: deterministic
   * train/val/test splitting and per-language quality-based top-k selection
@@ -152,10 +153,10 @@ object Curation {
     // document) executed twice per run. Widened first so a single-split
     // input doesn't serialize the tokenize pass into one task (guide §2.5);
     // the checkpoint is 2 compact columns per doc.
-    val scored = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
+    val scored = Cut(
       graft.util.Parallelism.widen(docs).select(col("doc_id"),
         TextAnalysis.langId(col("text")).as("lang")))
-    val counts = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
+    val counts = Cut(
       scored.groupBy(col("lang")).agg(count(lit(1)).as("n")))
     val shares = counts.crossJoin(counts.agg(sum(col("n")).as("total")))
     scored.join(broadcast(shares), Seq("lang"))
@@ -231,7 +232,7 @@ object Curation {
       TextAnalysis.tokenCount(col("text")).as("n_tokens"))
     // one materialization feeds both the offset collect and the result
     // (the DistributedRank contract); blocks GC-reclaim with the frame
-    val parted = org.apache.spark.sql.graft.StatsReset.checkpointNoStats(
+    val parted = Cut(
       sized.repartitionByRange(p, col("doc_id"))
         .sortWithinPartitions(col("doc_id"))
         .withColumn("__pid", spark_partition_id()))

@@ -1,15 +1,22 @@
 package graft
 
+import graft.algos.{LabelPropagation, Wcc}
+import graft.fixtures.Fixtures
 import graft.graph.LinkGraph
 import graft.sources.EventEdges
 import graft.text.TextAnalysis
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExecutedPlans
 
 /** Physical-plan shape assertions: the plans we rely on for 100TB scale
   * must not silently regress — column pruning reaching the parquet scan,
   * broadcast gather joins, whole-stage codegen over the text expressions.
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -176,5 +183,72 @@ class PlanSpec extends SparkSpec {
     // forbidden shape is any single-partition exchange downstream
     assert(!plan.toLowerCase.contains("singlepartition"),
       s"single-partition exchange in relabelMap plan:\n${plan.take(3000)}")
+  }
+
+  /** Shuffles of a cut edge table: exchanges whose chain of single-child
+    * operators ends at an RDD scan with a `dst` column (a round's state
+    * scans have none).
+    */
+  private def edgeExchanges(plan: SparkPlan): Seq[SparkPlan] = {
+    def overEdgeScan(p: SparkPlan): Boolean = p match {
+      case scan: RDDScanExec => scan.output.exists(_.name == "dst")
+      case _: Exchange | _: QueryStageExec => false
+      case _ if p.children.size == 1 => overEdgeScan(p.children.head)
+      case _ => false
+    }
+    collect(plan) { case e: ShuffleExchangeLike if overEdgeScan(e.child) => e }
+  }
+
+  /** The final plans of the shuffle-mode rounds `run` executes (those that
+    * shuffle-hash join the state to the edges), with AQE coalescing on and
+    * off and with the graph's partition count equal to the session's and
+    * not, each with a description of its setting.
+    */
+  private def shuffleRounds(
+      run: LinkGraph => Unit): Seq[(String, SparkPlan)] = {
+    val edges = edgesDF(Fixtures.randomEdges(300, 1500, seed = 5L))
+    for {
+      coalesce <- Seq("true", "false")
+      parts <- Seq(0, 6)
+      round <- withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.coalescePartitions.enabled" -> coalesce) {
+        val graph = LinkGraph(edges, numPartitions = parts)
+        val what = s"coalesce=$coalesce parts=${graph.numPartitions} " +
+          s"shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")}"
+        val (_, plans) = ExecutedPlans.during(spark)(run(graph))
+        val rounds = plans.filter(p =>
+          collect(p) { case j: ShuffledHashJoinExec => j }.nonEmpty)
+        assert(rounds.nonEmpty, what)
+        rounds.map(what -> _)
+      }
+    } yield round
+  }
+
+  /** WCC's edge table is row-balanced, so a shuffle-mode round exchanges
+    * it by src, but only once: the pointer-jump side reuses the
+    * neighbour-min exchange (a declared hash(src) cut would save the edge
+    * exchange and lose that reuse, which measured slower).
+    */
+  test("shuffle-mode WCC rounds scan the edge table once") {
+    shuffleRounds { g =>
+      Wcc.run(g, graft.WccConfig(contractAfter = 0), broadcastVertices = 0L)
+        .components.count()
+    }.foreach { case (what, p) =>
+      val scans = collect(p) {
+        case s: RDDScanExec if s.output.exists(_.name == "dst") => s }
+      assert(scans.size == 1, s"$what\n$p")
+    }
+  }
+
+  /** LP's vote table is cut by hash(src), which the cut declares, so a
+    * shuffle-mode round exchanges only the labels.
+    */
+  test("shuffle-mode LP rounds do not re-exchange the vote table") {
+    shuffleRounds { g =>
+      LabelPropagation.run(g, graft.LabelPropagationConfig(3),
+        broadcastVertices = 0L).labels.count()
+    }.foreach { case (what, p) =>
+      assert(edgeExchanges(p).isEmpty, s"$what\n$p")
+    }
   }
 }

@@ -18,6 +18,17 @@ trait SparkSpec extends AnyFunSuite {
     rows.toDF("src", "dst", "weight")
   }
 
+  /** Runs `body` with the session confs `kv` set, then restores them. */
+  def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   def allClose(got: Map[Long, Double], expected: Seq[Double],
       tol: Double = 1e-6): Unit = {
     assert(got.size == expected.size,

@@ -4,7 +4,7 @@ import graft.{LabelPropagationConfig, PageRankConfig, SparkSpec, WccConfig}
 import graft.fixtures.Fixtures
 import graft.graph.LinkGraph
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.JobCounter
+import org.apache.spark.sql.graft.{Cut, JobCounter}
 
 /** Convergence probes ride the action that materializes each round
   * (Supersteps rule 2): a probe costs no job, and the observed measure is
@@ -122,10 +122,31 @@ class ObservedProbesSpec extends SparkSpec {
     // warm the graph's node count so both counted blocks see it memoized
     TriangleCount.perVertex(graph)
     val (_, alone) = JobCounter.counted(spark) {
-      Supersteps.checkpoint(TriangleCount.orientedEdges(graph)
+      Cut(TriangleCount.orientedEdges(graph)
         .repartition(graph.numPartitions, $"a"))
     }
     val (_, built) = JobCounter.counted(spark)(TriangleCount.perVertex(graph))
     assert(alone > 0 && built == alone)
+  }
+
+  test("with the node count unknown, LP (both placements), WCC and SCC " +
+      "run no more jobs than when the count was a scan of its own") {
+    val edges = edgesDF(Fixtures.randomEdges(300, 1500, seed = 11L))
+    def jobs(run: LinkGraph => Long) =
+      JobCounter.counted(spark)(run(LinkGraph(edges)))._2
+    // the same runs at 0d5fce9, where the node count scanned a cut or cache
+    // the run had already built, in a job of its own
+    val before = Map("lp broadcast" -> 23, "lp shuffle" -> 24, "wcc" -> 29,
+      "scc" -> 85)
+    val now = Map(
+      "lp broadcast" -> jobs(g => LabelPropagation.run(g,
+        LabelPropagationConfig(3)).labels.count()),
+      "lp shuffle" -> jobs(g => LabelPropagation.run(g,
+        LabelPropagationConfig(3), broadcastVertices = 0L).labels.count()),
+      "wcc" -> jobs(g => Wcc.run(g).components.count()),
+      "scc" -> jobs(g => Scc.run(g).components.count()))
+    before.foreach { case (run, jobs) =>
+      assert(now(run) <= jobs, s"$run: ${now(run)} jobs, $jobs before")
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.algos
 import graft.SparkSpec
 import graft.fixtures.Fixtures
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.StatsReset
+import org.apache.spark.sql.graft.Cut
 
 /** One broadcast-mode hash-min + pointer-jump round runs its edge shuffle
   * once: the neighbour-min aggregation feeds both the propagated labels
@@ -20,11 +20,11 @@ class WccRoundPlanSpec extends SparkSpec {
       .select(least($"src", $"dst").as("src"),
         greatest($"src", $"dst").as("dst"))
       .distinct()
-      .transform(StatsReset.checkpointNoStats)
+      .transform(Cut(_))
     val und = Wcc.undirected(canon, 8)
     val state = spark.range(0, 500, 1, 8)
       .select($"id", $"id".as("lbl"), $"id".as("prev"))
-      .transform(StatsReset.checkpointNoStats)
+      .transform(Cut(_))
     val round = Wcc.minLabelRound(und, state, broadcast(_))
     round.collect()
     val finalPlan = round.queryExecution.executedPlan.toString
