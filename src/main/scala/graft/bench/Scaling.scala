@@ -105,16 +105,11 @@ object Scaling {
   }
 
   /** One measured point: PageRank for `supersteps` fixed iterations on the
-    * materialized edge table at local[cores]. One identical warmup run
+    * materialized edge table under any master. One identical warmup run
     * (graph build + full iteration sequence) precedes the measured run —
     * the reference CLI's warmup/measure protocol (app.rs:124-153).
-    */
-  def measure(path: String, cores: Int, supersteps: Int,
-      broadcastState: Boolean = true): Point =
-    measureMaster(path, s"local[$cores]", cores, supersteps, broadcastState)
-
-  /** Measure under any master; `totalCores` is the cluster-wide core count
-    * (drives partition counts and the reported Point.cores).
+    * `totalCores` is the cluster-wide core count (drives partition counts
+    * and the reported Point.cores).
     */
   def measureMaster(path: String, master: String, totalCores: Int,
       supersteps: Int, broadcastState: Boolean = true): Point = {
@@ -181,18 +176,6 @@ object Scaling {
         (System.nanoTime() - t0) / 1e9
       }
     } finally spark.stop()
-  }
-
-  /** Full N vs 4N protocol; returns (point N, point 4N, efficiency). */
-  def nVs4n(
-      path: String, n: Int = 8, supersteps: Int = 5,
-      broadcastState: Boolean = true)
-      : (Point, Point, Double) = {
-    val pN = measure(path, n, supersteps, broadcastState)
-    val p4N = measure(path, n * 4, supersteps, broadcastState)
-    val eff = p4N.edgesPerSecPerSuperstep /
-      (4.0 * pN.edgesPerSecPerSuperstep)
-    (pN, p4N, eff)
   }
 }
 

@@ -27,8 +27,7 @@ import org.apache.spark.sql.Encoders
   *   contributions — one groupBy per doc, then 15-bit band self-join for
   *   Hamming candidates.
   * - embedding cosine: multi-table hyperplane-LSH blocking + exact cosine
-  *   verification of candidates (sub-quadratic); the all-pairs exact form
-  *   survives as embeddingDuplicatesExact behind a size guard.
+  *   verification of candidates (sub-quadratic).
   */
 object Dedup {
 
@@ -502,22 +501,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         round(cosine(col("ea"), col("eb"), col("na"), col("nb")), 4)
           .as("cosine"))
-      .filter(col("cosine") >= threshold)
-  }
-
-  /** Exact brute-force variant of [[embeddingDuplicates]]: all-pairs
-    * inequality join — O(n^2) scan, only sane under a small-corpus size
-    * guard (recall-critical offline audits at <= ~10^5 vectors). The LSH
-    * variant above is the scale path.
-    */
-  def embeddingDuplicatesExact(
-      embeddings: DataFrame, threshold: Double): DataFrame = {
-    import graft.sim.Similarity.{cosine, withNorm}
-    val e = withNorm(embeddings)
-    e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
-        round(cosine(col("a.emb_d"), col("b.emb_d"),
-          col("a.norm"), col("b.norm")), 4).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 }

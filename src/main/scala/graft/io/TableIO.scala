@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import java.nio.file.{Files, Paths}
 
@@ -23,7 +23,8 @@ trait TableIO {
     */
   def write(
       name: String, df: DataFrame,
-      attrs: Map[String, String] = Map.empty): Unit
+      attrs: Map[String, String] = Map.empty,
+      runningMax: Option[TableIO.RunningMax] = None): Unit
 
   /** Append rows as a new snapshot WITHOUT rewriting existing data — the
     * distributed analogue of the reference's incremental
@@ -33,7 +34,8 @@ trait TableIO {
     * Iceberg append commits a new manifest. Readers of the new snapshot see
     * old + new rows; readers mid-flight keep their snapshot.
     */
-  def append(name: String, df: DataFrame): Unit
+  def append(name: String, df: DataFrame,
+      runningMax: Option[TableIO.RunningMax] = None): Unit
 
   /** Idempotent [[append]]: the tag names the increment (e.g. a streaming
     * micro-batch id), and an increment whose tag is already in the current
@@ -42,20 +44,29 @@ trait TableIO {
     * append would commit it twice (round-2 advice on
     * StreamingIngest.sinkToCatalog).
     */
-  def appendTagged(name: String, df: DataFrame, tag: String): Unit
+  def appendTagged(name: String, df: DataFrame, tag: String,
+      runningMax: Option[TableIO.RunningMax] = None): Unit
 
   /** Rewrite the current snapshot's (possibly many) data dirs into one —
     * Iceberg's compaction/rewrite action. A no-op on single-dir snapshots.
     */
   def compact(spark: SparkSession, name: String): Unit
 
-  def read(spark: SparkSession, name: String): DataFrame
+  def read(spark: SparkSession, name: String): DataFrame =
+    snapshot(spark, name)._1
+
+  /** The current snapshot's rows and attributes, from one manifest read:
+    * a reader never pairs one snapshot's rows with another's attributes.
+    */
+  def snapshot(spark: SparkSession, name: String)
+      : (DataFrame, Map[String, String])
+
   def list(): Seq[String]
   def drop(name: String): Unit
   def exists(name: String): Boolean
 
-  /** Current snapshot id — changes on every committed mutation, so it keys
-    * caches of snapshot-derived facts (e.g. the daemon's node-count cache).
+  /** Current snapshot id — changes on every committed mutation, attribute
+    * updates included.
     */
   def version(name: String): Long
 
@@ -71,6 +82,20 @@ trait TableIO {
     */
   def attr(name: String, key: String): Option[String]
   def setAttr(name: String, key: String, value: String): Unit
+}
+
+object TableIO {
+
+  /** A table attribute kept as the running maximum of `measure`, a long
+    * aggregate over the rows written (e.g. a graph's node count, max id +
+    * 1). A write or append given one observes the measure inside its own
+    * action, so it costs no job, and commits `key` = max(value before,
+    * observed) in the same manifest as the rows. The value before is the
+    * write's declared attribute, or 0 for a table with no rows; a table
+    * that already holds rows but no value keeps none, since those rows
+    * were never measured.
+    */
+  final case class RunningMax(key: String, measure: Column)
 }
 
 /** Parquet-directory backend. Snapshot semantics: each write/append creates
@@ -120,19 +145,27 @@ class ParquetTableIO(root: String) extends TableIO {
     Sidecar.write(metaPath(name), m.copy(name = name))
 
   /** `m` grown by `df` written as one more data dir `snap-<n><suffix>` of
-    * table `name`'s next snapshot. The row count is observed inside the
-    * write's own job (Dataset.observe) rather than by a second scan of the
-    * files.
+    * table `name`'s next snapshot. The row count, and the running max's
+    * measure when one is given, are observed inside the write's own job
+    * (Dataset.observe) rather than by a second scan of the files.
     */
   private def appended(name: String, m: Manifest, df: DataFrame,
-      suffix: String): Manifest = {
+      suffix: String, runningMax: Option[TableIO.RunningMax]): Manifest = {
     val snap = m.snapshot + 1
     val dataDir = s"snap-$snap$suffix"
-    val rows = Observation()
-    df.observe(rows, count(lit(1)).as("rows"))
+    val seen = Observation()
+    df.observe(seen, count(lit(1)).as("rows"),
+      runningMax.toSeq.map(_.measure.cast("long").as("max")): _*)
       .write.mode("overwrite").parquet(dir(name).resolve(dataDir).toString)
+    val got = seen.get
+    val attrs = runningMax.fold(m.attrs) { r =>
+      val before = m.attrs.get(r.key).map(_.toLong)
+        .orElse(if (m.rows == 0) Some(0L) else None)
+      before.fold(m.attrs)(b => m.attrs +
+        (r.key -> math.max(b, got("max").asInstanceOf[Long]).toString))
+    }
     m.copy(snapshot = snap, dirs = m.dirs :+ dataDir,
-      rows = m.rows + rows.get("rows").asInstanceOf[Long])
+      rows = m.rows + got("rows").asInstanceOf[Long], attrs = attrs)
   }
 
   private def data(spark: SparkSession, name: String,
@@ -141,20 +174,24 @@ class ParquetTableIO(root: String) extends TableIO {
 
   override def write(
       name: String, df: DataFrame,
-      attrs: Map[String, String] = Map.empty): Unit = mutateLock.synchronized {
-    // a replaced table is a new table: attrs AND consumed tags reset
-    commit(name, appended(name,
-      Manifest(name, current(name).snapshot, 0L, Seq.empty, Seq.empty, attrs),
-      df, ""))
-  }
-
-  override def append(name: String, df: DataFrame): Unit =
+      attrs: Map[String, String] = Map.empty,
+      runningMax: Option[TableIO.RunningMax] = None): Unit =
     mutateLock.synchronized {
-      commit(name, appended(name, current(name), df, ""))
+      // a replaced table is a new table: attrs AND consumed tags reset
+      commit(name, appended(name,
+        Manifest(name, current(name).snapshot, 0L, Seq.empty, Seq.empty,
+          attrs),
+        df, "", runningMax))
     }
 
-  override def appendTagged(
-      name: String, df: DataFrame, tag: String): Unit =
+  override def append(name: String, df: DataFrame,
+      runningMax: Option[TableIO.RunningMax] = None): Unit =
+    mutateLock.synchronized {
+      commit(name, appended(name, current(name), df, "", runningMax))
+    }
+
+  override def appendTagged(name: String, df: DataFrame, tag: String,
+      runningMax: Option[TableIO.RunningMax] = None): Unit =
     mutateLock.synchronized {
       require(tag.matches("[A-Za-z0-9_-]+"), s"bad tag: $tag")
       // The consumed-tag set lives in the manifest's `tags`, so the
@@ -164,7 +201,8 @@ class ParquetTableIO(root: String) extends TableIO {
       val m = current(name)
       if (!m.tags.contains(tag)) // else: replayed micro-batch, skip
         commit(name,
-          appended(name, m, df, s"-$tag").copy(tags = m.tags :+ tag))
+          appended(name, m, df, s"-$tag", runningMax)
+            .copy(tags = m.tags :+ tag))
     }
 
   override def compact(spark: SparkSession, name: String): Unit =
@@ -176,13 +214,15 @@ class ParquetTableIO(root: String) extends TableIO {
       if (m.dirs.size > 1) {
         val all = data(spark, name, m)
         commit(name,
-          appended(name, m.copy(rows = 0L, dirs = Seq.empty), all, ""))
+          appended(name, m.copy(rows = 0L, dirs = Seq.empty), all, "", None))
       }
     }
 
-  override def read(spark: SparkSession, name: String): DataFrame = {
+  override def snapshot(spark: SparkSession, name: String)
+      : (DataFrame, Map[String, String]) = {
     require(exists(name), s"table $name not found under $root")
-    data(spark, name, manifest(name))
+    val m = manifest(name)
+    (data(spark, name, m), m.attrs)
   }
 
   // Files.list/walk return streams backed by an OPEN directory handle —
@@ -223,10 +263,7 @@ class ParquetTableIO(root: String) extends TableIO {
       require(key.matches("[A-Za-z0-9_-]+"), s"bad attr key: $key")
       require(value.matches("[A-Za-z0-9_. -]*"), s"bad attr value: $value")
       // Commit the merged attrs under a BUMPED snapshot id (dirs are
-      // unchanged). The bump keeps version()'s contract ("changes on every
-      // committed mutation"): an attr like node_count changes
-      // snapshot-derived facts, and a version-keyed cache (the daemon's
-      // node-count cache) must not keep serving the pre-attr value.
+      // unchanged): version() changes on every committed mutation.
       val m = manifest(name)
       commit(name, m.copy(snapshot = m.snapshot + 1,
         attrs = m.attrs + (key -> value)))
@@ -255,20 +292,35 @@ object ParquetTableIO {
   * (the reference's do_get result streaming, server.rs:70-107 /
   * catalog.rs:270-288: a computed property is retrievable BY NAME after the
   * algorithm ran, not just dumped to a directory).
+  *
+  * Every edge table the catalog writes records its node count, the
+  * `node_count` attribute, in the same manifest commit as its rows: the
+  * reference serves a graph's node count from its catalog for free
+  * (catalog.rs:125-132), and so does the manifest. The count is max id + 1
+  * observed inside the write itself ([[TableIO.RunningMax]]), raised to
+  * any count the create declares, and grown by each append. A table with
+  * rows but no recorded count (written before counts were recorded, or
+  * directly through TableIO) derives it lazily from its edges, and
+  * appends leave it unrecorded.
   */
 class GraphCatalog(io: TableIO) {
+  private val nodeCounted = Some(TableIO.RunningMax("node_count",
+    graft.graph.LinkGraph.nodeCountMeasure))
+
   /** Create/replace a named graph. Orientation rides on the table (the
     * reference's GraphType tag, catalog.rs:125-142); CREATE loads directed
     * unless `attrs` says otherwise (actions.rs:99-103 Orientation
     * default). All attrs — gtype, a declared node_count — commit in the
     * SAME manifest as the edge snapshot, so a concurrent reader (the
     * daemon's LIST runs unlocked against COMPUTE/transforms) never sees a
-    * fresh snapshot with the attrs still missing.
+    * fresh snapshot with the attrs still missing. A declared node count
+    * (graph500's m/16, a transform's carried universe) is recorded as
+    * given unless the edges' max id + 1 exceeds it.
     */
   def create(
       name: String, edges: DataFrame,
       attrs: Map[String, String] = Map.empty): Unit =
-    io.write(name, edges, Map("gtype" -> "directed") ++ attrs)
+    io.write(name, edges, Map("gtype" -> "directed") ++ attrs, nodeCounted)
 
   /** Graph orientation tag — "directed" unless a `toUndirected` transform
     * replaced the edge table (a table first created by an append carries
@@ -280,56 +332,44 @@ class GraphCatalog(io: TableIO) {
   /** Manifest-tracked edge count — no scan (catalog.rs:134-142). */
   def edgeCount(name: String): Long = io.rows(name)
 
-  /** Snapshot id of the edge table — keys snapshot-derived caches. */
-  def version(name: String): Long = io.version(name)
+  /** Node count: the manifest's, else max id + 1 over the edges. */
+  def nodeCount(spark: SparkSession, name: String): Long =
+    io.attr(name, "node_count").fold(graph(spark, name).nodeCount)(_.toLong)
 
-  def explicitNodeCount(name: String): Option[Long] =
-    io.attr(name, "node_count").map(_.toLong)
-
-  /** Append an edge increment (e.g. a StreamingIngest batch) to a named
-    * graph; algorithms on the next `graph()` call see the union.
+  /** Append an edge increment to a named graph; algorithms on the next
+    * `graph()` call see the union. The recorded node count grows to cover
+    * the increment in the same commit — the reference's mutable add_edge
+    * growing its adjacency — so no reader sees the new edges under the
+    * old universe, where their new vertices would be silently missing
+    * from the dense vertex set (degrees, PageRank's n, SSSP init).
     */
-  def appendEdges(name: String, edges: DataFrame): Unit = {
-    io.append(name, edges)
-    growUniverse(name, edges)
-  }
+  def appendEdges(name: String, edges: DataFrame): Unit =
+    io.append(name, edges, nodeCounted)
 
-  /** Idempotent append keyed by an increment tag (streaming micro-batch
-    * replay safety — see TableIO.appendTagged).
+  /** Idempotent append keyed by an increment tag (replay safety — see
+    * TableIO.appendTagged); a replayed tag commits nothing.
     */
-  def appendEdgesTagged(name: String, edges: DataFrame, tag: String): Unit = {
-    io.appendTagged(name, edges, tag)
-    growUniverse(name, edges)
-  }
-
-  /** A declared node universe (graph500's m/16) must never be SMALLER than
-    * the edges actually in the table: an appended edge whose id falls past
-    * the declared count would otherwise be silently dropped from the dense
-    * vertex universe (degrees, PageRank's n, SSSP init) — grow the declared
-    * count to cover it, the same semantics as the reference's mutable
-    * add_edge growing its adjacency. Only runs when an explicit count
-    * exists (one cheap column-pruned max over the increment).
-    */
-  private def growUniverse(name: String, edges: DataFrame): Unit =
-    explicitNodeCount(name).foreach { nc =>
-      import org.apache.spark.sql.functions.{col, greatest, max}
-      val row =
-        edges.agg(max(greatest(col("src"), col("dst")).cast("long"))).first()
-      if (!row.isNullAt(0) && row.getLong(0) + 1 > nc)
-        io.setAttr(name, "node_count", (row.getLong(0) + 1).toString)
-    }
+  def appendEdgesTagged(name: String, edges: DataFrame, tag: String): Unit =
+    io.appendTagged(name, edges, tag, nodeCounted)
 
   def compact(spark: SparkSession, name: String): Unit =
     io.compact(spark, name)
 
-  def graph(spark: SparkSession, name: String): graft.graph.LinkGraph =
-    graft.graph.LinkGraph(io.read(spark, name),
-      nodeCount =
-        io.attr(name, "node_count").map(_.toLong).getOrElse(-1L))
+  def graph(spark: SparkSession, name: String): graft.graph.LinkGraph = {
+    val (edges, attrs) = io.snapshot(spark, name)
+    graft.graph.LinkGraph(edges,
+      nodeCount = attrs.get("node_count").fold(-1L)(_.toLong))
+  }
 
   /** Raw named-table read (non-edge schemas, e.g. streaming staging). */
   def table(spark: SparkSession, name: String): DataFrame =
     io.read(spark, name)
+
+  /** Raw idempotent append, the twin of [[table]]: rows of any schema
+    * (e.g. streaming staging rows keyed by actor name), no node count.
+    */
+  def appendTable(name: String, df: DataFrame, tag: String): Unit =
+    io.appendTagged(name, df, tag)
 
   private def propTable(graph: String, prop: String) = s"$graph.prop.$prop"
 

@@ -18,7 +18,9 @@ import java.util.concurrent.atomic.AtomicBoolean
   *  - `LIST`                      — one GraphInfo line per graph:
   *                                  `name\tgtype\tnode_count\tedge_count`
   *                                  (list_graphs / ListActionResult,
-  *                                  server.rs:325-331, actions.rs:190-204)
+  *                                  server.rs:325-331, actions.rs:190-204),
+  *                                  both counts read from the table
+  *                                  manifest: no Spark job
   *  - `PROPS <graph>`             — computed property names for a graph
   *  - `CREATE <graph> <path> [k=v ...]` — register an edge table; replies
   *                                  the reference's CreateActionResult
@@ -33,7 +35,10 @@ import java.util.concurrent.atomic.AtomicBoolean
   *                                  `layout=sorted|unsorted|deduplicated`,
   *                                  `orientation=directed|undirected`.
   *                                  graph500 registers its m/16 explicit
-  *                                  node count with the catalog
+  *                                  node count with the catalog; any other
+  *                                  count is the max id + 1 the write
+  *                                  observed (GraphCatalog), so the reply
+  *                                  runs no scan
   *  - `REMOVE <graph>`            — drop the graph and its computed
   *                                  properties (remove_graph,
   *                                  server.rs:333-339)
@@ -86,6 +91,11 @@ import java.util.concurrent.atomic.AtomicBoolean
   *                                  volume; TSV `GET` stays the default
   *                                  control-plane form
   *  - `QUIT`                      — close this connection
+  *
+  * The daemon holds no graph state of its own: node and edge counts,
+  * orientation and consumed tags all live in each table's manifest, so a
+  * second catalog instance on the same root (a streaming appender) is seen
+  * by the next LIST or COMPUTE.
   *
   * Scale notes: the daemon is a CONTROL plane — every command is one
   * catalog/Spark call; row streaming pulls one partition at a time
@@ -145,8 +155,9 @@ class CatalogServer(
             // REMOVE'd between list() and its info read just drops out of
             // the listing, like the reference's read-locked snapshot
             catalog.list().foreach { g =>
-              try out.println(Seq(g, catalog.graphType(g), nodeCount(g),
-                catalog.edgeCount(g)).mkString("\t"))
+              try out.println(Seq(g, catalog.graphType(g),
+                catalog.nodeCount(spark, g), catalog.edgeCount(g))
+                .mkString("\t"))
               catch { case _: Exception => () }
             }
             out.println(".")
@@ -171,12 +182,6 @@ class CatalogServer(
               mutate.synchronized {
                 require(catalog.list().contains(g), s"graph $g not found")
                 catalog.remove(g)
-                ncCache.remove(g)
-                // a re-CREATE under this name restarts snapshot ids at 0;
-                // the epoch bump keeps any in-flight count computed
-                // against the removed graph from being cached as the new
-                // graph's (scaladoc on epochs)
-                epochs.merge(g, 1L, (a, b) => a + b)
               }
               "OK removed"
             }
@@ -278,38 +283,6 @@ class CatalogServer(
     */
   private val mutate = new Object
 
-  /** Node counts for LIST/CREATE replies (the reference serves them from
-    * the in-memory CSR for free, catalog.rs:125-132; ours is a max-id agg
-    * over the edge parquet). Keyed by graph name, valued (snapshot
-    * version, count): any committed mutation bumps the version and the
-    * next read recomputes — one live entry per graph, so a long-uptime
-    * daemon's cache is bounded by the catalog size.
-    */
-  private val ncCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long)]()
-
-  /** Per-name REMOVE epoch: a dropped table's snapshot ids restart at 0,
-    * so (version, count) alone is ABA-unsafe — a LIST thread that stalls
-    * between computing a count and caching it, across a REMOVE + re-CREATE
-    * of the same name, would insert the OLD graph's count under the NEW
-    * graph's version 0. The epoch (bumped by REMOVE) makes the stale put
-    * unservable.
-    */
-  private val epochs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def nodeCount(g: String): Long = {
-    val e = epochs.getOrDefault(g, 0L).longValue()
-    val v = catalog.version(g)
-    val cached = ncCache.get(g)
-    if (cached != null && cached._1 == e && cached._2 == v) cached._3
-    else {
-      val nc = catalog.graph(spark, g).nodeCount
-      ncCache.put(g, (e, v, nc))
-      nc
-    }
-  }
-
   /** Trailing `key=value` command options (the line-protocol rendering of
     * the reference's JSON action configs, actions.rs:110-120).
     */
@@ -386,7 +359,8 @@ class CatalogServer(
     // base.nodeCount already derives from the raw ids under a Deduplicated
     // layout (LinkGraph.apply threads the pre-dedup input as the lazy
     // count source), so reading it here pins the full universe without
-    // building a second graph over `raw`.
+    // building a second graph over `raw`. Any other count is the max id +
+    // 1 the catalog write observes over `stored` itself.
     val declaredNc =
       if (explicitNc >= 0) explicitNc
       else if (layout == graft.Layout.Deduplicated) base.nodeCount
@@ -396,7 +370,8 @@ class CatalogServer(
        else Map.empty[String, String]) ++
         (if (declaredNc >= 0) Map("node_count" -> declaredNc.toString)
          else Map.empty[String, String]))
-    (nodeCount(g), catalog.edgeCount(g))
+    // both counts come from the manifest the write just committed
+    (catalog.nodeCount(spark, g), catalog.edgeCount(g))
   }
 
   /** do_action compute dispatch: run, store as a property, return its name
@@ -447,11 +422,11 @@ class CatalogServer(
     if (kind == "to_undirected" && prevType == "undirected")
       throw new IllegalArgumentException(
         s"graph '$g' is already undirected")
-    // Both transforms preserve the node universe: carry the declared count
+    // Both transforms preserve the node universe: carry the recorded count
     // forward, or pin the derived one BEFORE a Deduplicated merge can
     // prune a self-loop-only max-id vertex (to_relabeled's permutation is
     // over the full dense universe, so the count is unchanged there too).
-    val prevNc = catalog.explicitNodeCount(g).getOrElse(graph.nodeCount)
+    val prevNc = graph.nodeCount
     val t0 = System.nanoTime()
     val transformed = kind match {
       // the reference's to_undirected takes an optional CsrLayout applied
@@ -463,7 +438,7 @@ class CatalogServer(
     }
     // orientation + node count commit ATOMICALLY with the snapshot swap —
     // LIST runs unlocked, and a gap between the table commit and the attrs
-    // would let it cache a wrong node count under the new version
+    // would let it report the new edges under the old attrs
     catalog.create(g, transformed, Map(
       "gtype" -> (if (kind == "to_undirected") "undirected" else prevType),
       "node_count" -> prevNc.toString))
@@ -471,10 +446,8 @@ class CatalogServer(
   }
 
   private def compute(g: String, algo: String): String = sweeping {
-    // the version-keyed node count (set by CREATE, or by the first LIST or
-    // COMPUTE after a mutation) spares every call its max-id scan
-    val graph = graft.graph.LinkGraph(catalog.table(spark, g),
-      nodeCount = nodeCount(g))
+    // the manifest's node count spares every call its max-id scan
+    val graph = catalog.graph(spark, g)
     // the sweep unpersists the RDDs; unpersistCaches also drops the
     // graph's cached-query entries, which would otherwise pile up per call
     // and be matched, stale, by the next COMPUTE over the same files

@@ -93,7 +93,7 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty)
-          catalog.appendEdgesTagged(stagingTable, batch, s"b$batchId")
+          catalog.appendTable(stagingTable, batch, s"b$batchId")
       }
       .start()
 

@@ -3,6 +3,7 @@ package graft
 import graft.algos.Wcc
 import graft.io.{GraphCatalog, ParquetTableIO}
 import java.nio.file.Files
+import org.apache.spark.sql.graft.JobCounter
 
 /** Incremental edge append + compaction + computed-property catalog
   * citizenship (reference: EdgeMutation::add_edge, adj_list.rs:371-404;
@@ -183,6 +184,80 @@ class CatalogAppendSpec extends SparkSpec {
       Seq((9L, 0L, 1.0)).toDF("src", "dst", "weight"), "t0")
     assert(cat.graph(spark, "g").nodeCount == 10)
     assert(cat.graph(spark, "g").degrees.count() == 10)
+  }
+
+  test("one append commits its rows and the grown node count in one " +
+      "snapshot, with and without a declared count") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-cat-nc").toString
+    val io = new ParquetTableIO(root)
+    val cat = new GraphCatalog(io)
+    def edges(es: (Long, Long)*) =
+      es.map { case (u, v) => (u, v, 1.0) }.toDF("src", "dst", "weight")
+
+    // no declared count: the create records the observed max id + 1
+    cat.create("g", edges((0L, 1L)))
+    assert(io.attr("g", "node_count").contains("2"))
+    val v0 = io.version("g")
+    cat.appendEdges("g", edges((5L, 2L)))
+    assert(io.version("g") == v0 + 1)
+    assert(io.attr("g", "node_count").contains("6"))
+    assert(cat.graph(spark, "g").degrees.count() == 6)
+
+    // a declared count wins while it covers the edges, and an append
+    // past it grows it in the append's own commit
+    cat.create("d", edges((0L, 1L)), Map("node_count" -> "4"))
+    assert(io.attr("d", "node_count").contains("4"))
+    val d0 = io.version("d")
+    cat.appendEdges("d", edges((2L, 3L)))
+    assert(io.version("d") == d0 + 1)
+    assert(io.attr("d", "node_count").contains("4"))
+    cat.appendEdges("d", edges((9L, 0L)))
+    assert(io.version("d") == d0 + 2)
+    assert(io.attr("d", "node_count").contains("10"))
+
+    // tagged: the same one commit; a replayed tag commits nothing
+    cat.appendEdgesTagged("d", edges((11L, 0L)), "t0")
+    assert(io.version("d") == d0 + 3)
+    assert(io.attr("d", "node_count").contains("12"))
+    cat.appendEdgesTagged("d", edges((20L, 0L)), "t0")
+    assert(io.version("d") == d0 + 3)
+    assert(io.attr("d", "node_count").contains("12"))
+
+    // the count costs no job: the append runs what a raw append runs
+    val (_, raw) = JobCounter.counted(spark)(io.append("r", edges((1L, 2L))))
+    val (_, grown) =
+      JobCounter.counted(spark)(cat.appendEdges("d", edges((30L, 0L))))
+    assert(grown == raw, s"appendEdges ran $grown jobs, a raw append $raw")
+    assert(io.attr("d", "node_count").contains("31"))
+  }
+
+  test("a raw staging append records no node count; appends to a table " +
+      "without one leave it unrecorded") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-cat-stage").toString
+    val io = new ParquetTableIO(root)
+    val cat = new GraphCatalog(io)
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    // the streaming staging shape: actor names, not ids
+    cat.appendTable("stage",
+      Seq(("user", "assistant", 1.0, ts)).toDF(
+        "src_actor", "dst_actor", "weight", "ts"), "b0")
+    cat.appendTable("stage",
+      Seq(("assistant", "tool", 2.0, ts)).toDF(
+        "src_actor", "dst_actor", "weight", "ts"), "b1")
+    assert(io.rows("stage") == 2L)
+    assert(io.attr("stage", "node_count").isEmpty)
+
+    // an edge table written straight through TableIO has no count; an
+    // append leaves it unrecorded and readers derive max id + 1
+    io.write("raw", Seq((0L, 3L, 1.0)).toDF("src", "dst", "weight"))
+    cat.appendEdges("raw", Seq((1L, 2L, 1.0)).toDF("src", "dst", "weight"))
+    assert(io.attr("raw", "node_count").isEmpty)
+    assert(cat.graph(spark, "raw").nodeCount == 4L)
+    assert(cat.nodeCount(spark, "raw") == 4L)
   }
 
   test("tag matching is exact, not suffix-based (tags may contain '-')") {

@@ -5,6 +5,7 @@ import graft.server.CatalogServer
 import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.net.Socket
 import java.nio.file.Files
+import org.apache.spark.sql.graft.JobCounter
 
 /** Live serving daemon: create -> compute -> read-property over the wire
   * (the reference's Flight do_put/do_action/do_get loop,
@@ -421,6 +422,106 @@ class CatalogServerSpec extends SparkSpec {
         assert(CachedQueries.count(spark) == baseline,
           s"cached queries grew after COMPUTE g $algo")
       }
+      out.println("QUIT"); sock.close()
+    } finally srv.close()
+  }
+
+  test("a parquet CREATE runs no more jobs than writing the table") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-serve-jobs").toString
+    val cat = new GraphCatalog(new ParquetTableIO(s"$root/cat"))
+    (0 until 400).map(i => (i.toLong, ((i * 7) % 300).toLong, 1.0))
+      .toDF("src", "dst", "weight").write.parquet(s"$root/edges")
+    val (_, written) = JobCounter.counted(spark)(
+      spark.read.parquet(s"$root/edges").write.parquet(s"$root/copy"))
+
+    val srv = new CatalogServer(spark, cat)
+    try {
+      val sock = new Socket("127.0.0.1", srv.boundPort)
+      val in = new BufferedReader(
+        new InputStreamReader(sock.getInputStream, "UTF-8"))
+      val out = new PrintWriter(sock.getOutputStream, true)
+      val (reply, created) = JobCounter.counted(spark) {
+        out.println(s"CREATE g $root/edges")
+        in.readLine()
+      }
+      assertCreated(reply, nc = 400, ec = 400)
+      assert(created <= written,
+        s"CREATE ran $created jobs, writing the table $written")
+      out.println("QUIT"); sock.close()
+    } finally srv.close()
+  }
+
+  test("LIST reads an append made through another catalog instance " +
+      "from the manifest, with no job") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-serve-list").toString
+    val cat = new GraphCatalog(new ParquetTableIO(s"$root/cat"))
+    Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (3L, 4L, 1.0))
+      .toDF("src", "dst", "weight").write.parquet(s"$root/edges")
+    val srv = new CatalogServer(spark, cat)
+    try {
+      val sock = new Socket("127.0.0.1", srv.boundPort)
+      val in = new BufferedReader(
+        new InputStreamReader(sock.getInputStream, "UTF-8"))
+      val out = new PrintWriter(sock.getOutputStream, true)
+      out.println(s"CREATE g $root/edges")
+      assertCreated(in.readLine(), nc = 5, ec = 3)
+      out.println("LIST")
+      assert(in.readLine() == "OK")
+      assert(readBlock(in) == Seq("g\tdirected\t5\t3"))
+
+      // a second writer on the same root (e.g. a streaming appender)
+      new GraphCatalog(new ParquetTableIO(s"$root/cat"))
+        .appendEdges("g", Seq((9L, 0L, 1.0)).toDF("src", "dst", "weight"))
+      val (listed, jobs) = JobCounter.counted(spark) {
+        out.println("LIST")
+        assert(in.readLine() == "OK")
+        readBlock(in)
+      }
+      assert(listed == Seq("g\tdirected\t10\t4"))
+      assert(jobs == 0, s"LIST ran $jobs jobs")
+      out.println("QUIT"); sock.close()
+    } finally srv.close()
+  }
+
+  test("a table with no recorded node count LISTs and COMPUTEs with " +
+      "max id + 1") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-serve-raw").toString
+    val io = new ParquetTableIO(s"$root/cat")
+    // written straight through TableIO: rows, no node_count attribute
+    io.write("raw", Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (6L, 5L, 1.0))
+      .toDF("src", "dst", "weight"))
+    val srv = new CatalogServer(spark, new GraphCatalog(io))
+    try {
+      val sock = new Socket("127.0.0.1", srv.boundPort)
+      val in = new BufferedReader(
+        new InputStreamReader(sock.getInputStream, "UTF-8"))
+      val out = new PrintWriter(sock.getOutputStream, true)
+      out.println("LIST")
+      assert(in.readLine() == "OK")
+      assert(readBlock(in) == Seq("raw\tdirected\t7\t3"))
+      out.println("COMPUTE raw degrees")
+      assertComputed(in.readLine(), "degrees", stats = false)
+      out.println("GET raw degrees")
+      assert(in.readLine() == "OK")
+      assert(readBlock(in).map(_.split("\t")(0).toLong).toSet ==
+        (0L until 7L).toSet)
+      out.println("COMPUTE raw wcc")
+      assertComputed(in.readLine(), "wcc")
+      out.println("GET raw wcc")
+      assert(in.readLine() == "OK")
+      val comps = readBlock(in).map { l =>
+        val Array(id, c) = l.split("\t"); id.toLong -> c.toLong
+      }.toMap
+      assert(comps == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 4L,
+        5L -> 5L, 6L -> 5L))
+      // serving records nothing: the table still has no count
+      assert(io.attr("raw", "node_count").isEmpty)
       out.println("QUIT"); sock.close()
     } finally srv.close()
   }
